@@ -3,8 +3,12 @@
 Mirrors the reference's FederationEngine lifecycle
 (crates/runtime/src/federation.rs:326-490) re-expressed on Spark:
 
-    gate (read-only) -> cache probe -> spark.sql (Catalyst optimize)
-    -> defensive limit -> cost gate -> timed execution -> cache put
+    gate (read-only) -> policy rewrite -> text-key probe
+    -> spark.sql (Catalyst optimize) -> defensive limit -> cost gate
+    -> plan-key cache probe -> timed execution -> cache put
+
+``prepare`` runs everything up to the plan (or resolves a confirmed
+text key, skipping Catalyst); ``execute`` runs a prepared statement.
 
 and the Python connection surface (python/strake/__init__.pyi:28-68:
 sql/describe/trace/explain_tree/list_sources).
@@ -12,8 +16,12 @@ sql/describe/trace/explain_tree/list_sources).
 
 from __future__ import annotations
 
+import functools
 import logging
+import threading
 import time
+from dataclasses import dataclass, field
+from datetime import datetime
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,9 +36,58 @@ from strake_spark.governance.limits import (
     run_with_timeout,
 )
 from strake_spark.session import build_session
-from strake_spark.sources.registry import register_source
+from strake_spark.sources.registry import bump_catalog_epoch, catalog_epoch, register_source
 
 log = logging.getLogger("strake_spark.engine")
+
+
+@functools.lru_cache(maxsize=1024)
+def _base_tables(query: str) -> tuple[tuple[str, str], ...] | None:
+    """(qualifier, name) of every base table a statement reads, CTE
+    names excluded; None when DuckDB cannot parse it. Memoized: the
+    answer depends on the text alone, and a parse costs milliseconds."""
+    from strake_spark.plans.federation import _cte_names, _serialize, _walk_base_tables
+
+    ast = _serialize(query)
+    if ast is None:
+        return None
+    refs: list[dict] = []
+    _walk_base_tables(ast, refs)
+    ctes = _cte_names(ast)
+    return tuple(
+        (".".join(filter(None, (n.get("catalog_name"), n.get("schema_name")))),
+         n["table_name"])
+        for n in refs
+        if n["table_name"].lower() not in ctes
+    )
+
+
+@dataclass
+class PreparedStatement:
+    """One statement past the gate and the policy rewrite. Planned, it
+    holds the governed DataFrame with its pushdown plan and federation
+    trace; resolved through a confirmed text key (a *text hit*), ``df``
+    is None and ``plan_key`` names the cached result instead."""
+
+    query: str  # as the caller wrote it
+    user: str | None
+    params: dict[str, Any] | None
+    governed_sql: str  # after the policy rewrite
+    sources: tuple[str, ...]
+    epoch: int  # catalog epoch it was prepared under
+    text_key: str | None = None  # None: not eligible for the text path
+    df: DataFrame | None = None
+    pushdown: Any = None
+    federation: list[tuple[str, str, str]] = field(default_factory=list)
+    plan_key: str | None = None
+    schema: Any = None  # pyarrow.Schema of the result, when known
+
+    def arrow_schema(self):
+        if self.schema is None:
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            self.schema = to_arrow_schema(self.df.schema)
+        return self.schema
 
 
 class StrakeEngine:
@@ -49,8 +106,14 @@ class StrakeEngine:
         self.spark = spark or build_session()
         self._views: dict[str, list[str]] = {}
         self._view_source: dict[str, str] = {}
-        import threading
         from collections import Counter, deque
+
+        from strake_spark.plans.federation import _serialize
+
+        # open the planner's shared DuckDB connection on this thread:
+        # opened first on a Flight/REST handler thread, DuckDB crashes
+        # the process after a few statements
+        _serialize("SELECT 1")
 
         # bounded: a long-lived server must not grow its log forever;
         # 10k entries keeps impact()/query_log() useful while capping
@@ -60,9 +123,10 @@ class StrakeEngine:
         # is threaded.
         self._query_log: deque = deque(maxlen=10_000)
         self._log_lock = threading.Lock()
-        self._last_pushdown = None  # PushdownPlan of the most recent sql()
-        # (rung, status, reason) ladder decisions of the most recent sql()
-        self._last_federation_trace: list[tuple[str, str, str]] = []
+        # per-thread: the PushdownPlan and (rung, status, reason) ladder
+        # decisions of this thread's most recent sql(); prepare() copies
+        # them into the statement it returns
+        self._plan_local = threading.local()
         # per-query non-fatal warnings (reference warnings.rs:19-40 —
         # task-local there, thread-local here: the REST/Flight handler
         # reads last_warnings() on the same thread right after execute)
@@ -113,6 +177,14 @@ class StrakeEngine:
         )
         self.tracer = Tracer(max_spans=tcfg.max_spans, exporter=exporter)
 
+    @property
+    def _last_pushdown(self):
+        return getattr(self._plan_local, "pushdown", None)
+
+    @property
+    def _last_federation_trace(self) -> list[tuple[str, str, str]]:
+        return getattr(self._plan_local, "federation", [])
+
     # ------------------------------------------------------------- sources
     def register(self, source_cfg) -> list[str]:
         from strake_spark.reliability import CircuitBreaker
@@ -138,11 +210,10 @@ class StrakeEngine:
     def _touched_sources(self, query: str) -> tuple[str, ...]:
         """Sources whose views a statement references (AST-derived;
         empty when unparseable — global admission still applies)."""
-        out = {
-            self._view_source.get(v) or self._view_source.get(v.lower())
-            for v in self._referenced_views(query)
-        }
-        return tuple(sorted(s for s in out if s))
+        return self._sources_of(_base_tables(query))
+
+    def _sources_of(self, tables) -> tuple[str, ...]:
+        return tuple(sorted({self._view_source[v] for v in self._views_in(tables)}))
 
     def list_sources(self) -> dict[str, list[str]]:
         return dict(self._views)
@@ -192,6 +263,7 @@ class StrakeEngine:
 
         u = pandas_udf(fn, return_type) if vectorized else udf(fn, return_type)
         self.spark.udf.register(name, u)
+        bump_catalog_epoch()
         return name
 
     # ------------------------------------------------------------- queries
@@ -220,10 +292,11 @@ class StrakeEngine:
         ensure_select(query)
         if self._policies is not None:
             query = self._policies.rewrite(query, user)
+        local = self._plan_local
         try:
             if params:
-                self._last_pushdown = None
-                self._last_federation_trace = [
+                local.pushdown = None
+                local.federation = [
                     ("whole_statement", "rejected",
                      "parameterized query (remote engines never see unbound text)")
                 ]
@@ -233,8 +306,8 @@ class StrakeEngine:
 
                 decisions: list[tuple[str, str, str]] = []
                 df, pushed = plan_sql(self.spark, query, trace=decisions)
-                self._last_pushdown = pushed
-                self._last_federation_trace = decisions
+                local.pushdown = pushed
+                local.federation = decisions
         except Exception as e:
             # classify Spark analysis/parse failures onto the stable
             # code contract at the PLANNING boundary (convert.py,
@@ -253,15 +326,85 @@ class StrakeEngine:
         self._metrics["queries_planned"] += 1
         return df
 
+    def prepare(
+        self,
+        query: str,
+        user: str | None = None,
+        params: dict[str, Any] | None = None,
+    ) -> PreparedStatement:
+        """Gate + policy rewrite, then either resolve a confirmed text
+        key (no Catalyst; needs the result cache) or plan through
+        ``sql``. Nothing runs; ``execute`` takes the result."""
+        prep = self._statement(query, user, params)
+        if prep.text_key is not None:
+            hit = self._cache.resolve_text(prep.text_key)
+            if hit is not None:
+                prep.plan_key, prep.schema = hit
+                return prep
+        return self._plan(prep)
+
+    def _statement(self, query: str, user: str | None, params) -> PreparedStatement:
+        """Gate + policy rewrite, not yet planned. Only statements whose
+        base tables are all views this engine registered get a text key:
+        for those the key (post-policy SQL, params, user, catalog epoch,
+        query limits, session-zone date) names everything the plan
+        depends on, up to data freshness, which the TTL governs as it
+        does for plan keys."""
+        ensure_select(query)
+        governed = self._policies.rewrite(query, user) if self._policies is not None else query
+        tables = _base_tables(query)
+        prep = PreparedStatement(
+            query, user, params, governed, self._sources_of(tables), catalog_epoch()
+        )
+        if self._cache is not None and tables is not None and all(
+            not qual and (name in self._view_source or name.lower() in self._view_source)
+            for qual, name in tables
+        ):
+            today = self._session_date()
+            if today is not None:
+                from strake_spark.cache import text_key
+
+                prep.text_key = text_key(
+                    governed, params, user, prep.epoch, self.config.query_limits, today
+                )
+        return prep
+
+    def _plan(self, prep: PreparedStatement) -> PreparedStatement:
+        """Plan ``prep`` through ``sql``. The policy rewrite is already
+        in ``governed_sql``, so ``sql`` runs without a user."""
+        prep.df = self.sql(prep.governed_sql, params=prep.params)
+        prep.pushdown = self._last_pushdown
+        prep.federation = self._last_federation_trace
+        prep.plan_key = prep.schema = None
+        return prep
+
+    def _session_date(self) -> str | None:
+        """Session time zone + today's date in it; None when Python has no
+        zone of that name (fixed offsets such as "+08:00")."""
+        from zoneinfo import ZoneInfo
+
+        name = self.spark.conf.get("spark.sql.session.timeZone")
+        try:
+            zone = ZoneInfo(name)
+        except (KeyError, ValueError, OSError):  # ZoneInfoNotFoundError is a KeyError
+            return None
+        return f"{name}|{datetime.now(zone).date().isoformat()}"
+
     def execute(
         self,
         query: str,
         user: str | None = None,
         params: dict[str, Any] | None = None,
         traceparent: str | None = None,
+        prepared: PreparedStatement | None = None,
     ):
         """Full governed execution -> pyarrow.Table (zero-copy boundary,
         like reference docs/python-api.md:110-122).
+
+        ``prepared`` (from ``prepare`` with the same query, user and
+        params) skips planning; a statement prepared for other text, for
+        another principal, or before a source or function was registered
+        is ignored and the query is prepared afresh.
 
         Admission (global budget + per-source caps) and per-source
         circuit breakers wrap the whole query, the reference's
@@ -278,7 +421,11 @@ class StrakeEngine:
             traceparent=traceparent,
         ) as root:
             self._warnings_local.value = []
-            table, cached = self._execute_traced(query, user, params, root)
+            if prepared is not None and (
+                prepared.query, prepared.user, prepared.params, prepared.epoch
+            ) != (query, user, params, catalog_epoch()):
+                prepared = None
+            table, cached = self._execute_traced(query, user, params, prepared, root)
             root.set_attribute("strake.cache_hit", cached)
             root.set_attribute("strake.rows", table.num_rows)
             warnings = self._query_warnings(query, cached)
@@ -324,29 +471,22 @@ class StrakeEngine:
     def _referenced_views(self, query: str) -> tuple[str, ...]:
         """Registered view names a statement references (AST-derived;
         empty when unparseable — same posture as _touched_sources)."""
-        from strake_spark.plans.federation import _cte_names, _serialize, _walk_base_tables
+        return self._views_in(_base_tables(query))
 
-        ast = _serialize(query)
-        if ast is None:
-            return ()
-        refs: list[dict] = []
-        _walk_base_tables(ast, refs)
-        ctes = _cte_names(ast)
+    def _views_in(self, tables) -> tuple[str, ...]:
         out: set[str] = set()
-        for node in refs:
-            name = node["table_name"]
-            if name.lower() in ctes:
-                continue
+        for _, name in tables or ():
             if name in self._view_source:
                 out.add(name)
             elif name.lower() in self._view_source:
                 out.add(name.lower())
         return tuple(sorted(out))
 
-    def _execute_traced(self, query, user, params, root):
+    def _execute_traced(self, query, user, params, prep, root):
         limits = self.config.query_limits
+        cache = self._cache
         started = time.time()
-        sources = self._touched_sources(query)
+        sources = prep.sources if prep is not None else self._touched_sources(query)
         root.set_attribute("strake.sources", ",".join(sources))
         breakers = [self._breakers[s] for s in sources if s in self._breakers]
         with self._governor.admit(sources, user=user):
@@ -354,21 +494,34 @@ class StrakeEngine:
                 b.acquire()
             try:
                 with self.tracer.span("query.plan") as plan_span:
-                    df = self.sql(query, user=user, params=params)
-                    pushed = self._last_pushdown
+                    if prep is None:
+                        prep = self.prepare(query, user=user, params=params)
+                    hit = key = None
+                    if prep.df is None:
+                        if cache is not None:
+                            hit = cache.get(None, user, key=prep.plan_key)
+                        if hit is None:  # expired or evicted since: plan after all
+                            self._plan(prep)
+                    text_hit = hit is not None
+                    plan_span.set_attribute("strake.text_hit", text_hit)
+                    pushed = prep.pushdown
                     plan_span.set_attribute("strake.pushdown", pushed is not None)
                     if pushed is not None:
                         plan_span.set_attribute(
                             "strake.pushdown.summary",
                             str(getattr(pushed, "rewritten_sql", ""))[:500],
                         )
-                hit = self._cache.get(df, user) if self._cache is not None else None
+                if not text_hit and cache is not None:
+                    from strake_spark.cache import plan_fingerprint
+
+                    key = plan_fingerprint(prep.df, user)
+                    hit = cache.get(prep.df, user, key=key)
                 if hit is not None:
                     table = hit
                 else:
                     with self.tracer.span("query.run"):
                         table = run_with_timeout(
-                            df, lambda d: d.toArrow(), limits.query_timeout_seconds
+                            prep.df, lambda d: d.toArrow(), limits.query_timeout_seconds
                         )
             except QueryRejected:
                 for b in breakers:
@@ -390,17 +543,19 @@ class StrakeEngine:
                 raise
             for b in breakers:
                 b.record(True)
-        if hit is not None:
-            self._log_query(query, user, started, cached=True)
-            return hit, True
-        if limits.max_output_rows and table.num_rows > limits.max_output_rows:
-            raise QueryRejected(
-                f"result has {table.num_rows} rows > max_output_rows {limits.max_output_rows}"
-            )
-        if self._cache is not None:
-            self._cache.put(df, user, table)
-        self._log_query(query, user, started, cached=False)
-        return table, False
+        if hit is None:
+            if limits.max_output_rows and table.num_rows > limits.max_output_rows:
+                raise QueryRejected(
+                    f"result has {table.num_rows} rows > max_output_rows {limits.max_output_rows}"
+                )
+            if cache is not None:
+                cache.put(prep.df, user, table, key=key)
+        if key is not None and prep.text_key is not None:
+            cache.remember_text(prep.text_key, key, table.schema.remove_metadata())
+        if text_hit:
+            self._metrics["cache_text_hits"] += 1
+        self._log_query(query, user, started, cached=hit is not None, pushed=pushed)
+        return table, hit is not None
 
     # ---------------------------------------------------------- inspection
     def explain_tree(self, query: str) -> str:
@@ -470,9 +625,9 @@ class StrakeEngine:
 
     def trace(self, query: str) -> dict[str, Any]:
         """Plan + stats report (reference crates/runtime/src/query/trace.rs:7-72)."""
-        df = self.sql(query)
+        prep = self._plan(self._statement(query, None, None))
+        df, pushed = prep.df, prep.pushdown
         rows, size = plan_stats(df)
-        pushed = self._last_pushdown
         return {
             "query": query,
             "estimated_rows": rows,
@@ -480,7 +635,7 @@ class StrakeEngine:
             "pushed_remote_sql": pushed.rewritten_sql if pushed else None,
             "federation_decision": [
                 {"rung": r, "status": s, "reason": why}
-                for r, s, why in getattr(self, "_last_federation_trace", [])
+                for r, s, why in prep.federation
             ],
             "analyzed": df._jdf.queryExecution().analyzed().toString(),
             "optimized": df._jdf.queryExecution().optimizedPlan().toString(),
@@ -701,7 +856,7 @@ class StrakeEngine:
         # counters exist from zero (a scrape that first sees a counter
         # at N cannot compute the rate over the gap)
         for k in ("queries_planned", "queries_executed", "cache_hits",
-                  "pushdown_queries"):
+                  "cache_text_hits", "pushdown_queries"):
             out.setdefault(k, 0)
         out["sources_registered"] = len(self._views)
         out["spans_recorded"] = len(self.tracer.finished_spans())
@@ -728,11 +883,13 @@ class StrakeEngine:
     def __exit__(self, *exc) -> None:
         self.close()
 
-    def _log_query(self, query: str, user: str | None, started: float, cached: bool) -> None:
+    def _log_query(
+        self, query: str, user: str | None, started: float, cached: bool, pushed=None
+    ) -> None:
         self._metrics["queries_executed"] += 1
         if cached:
             self._metrics["cache_hits"] += 1
-        if self._last_pushdown is not None:
+        if pushed is not None:
             self._metrics["pushdown_queries"] += 1
         with self._log_lock:
             self._query_log.append(

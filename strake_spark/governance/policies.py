@@ -29,6 +29,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
+from strake_spark.sources.registry import catalog_epoch
+
 from strake_spark.errors import QueryRejected
 
 
@@ -188,7 +190,8 @@ class PolicyEnforcer:
     def __init__(self, spark: SparkSession, policy: PolicyConfig) -> None:
         self.spark = spark
         self.policy = policy
-        self._registered: dict[tuple[str, ...], dict[str, str]] = {}
+        # roles -> (catalog epoch, table -> secured view)
+        self._registered: dict[tuple[str, ...], tuple[int, dict[str, str]]] = {}
 
     def rewrite(self, sql: str, user: str | None) -> str:
         if not self.policy.enabled or user is None:
@@ -199,9 +202,12 @@ class PolicyEnforcer:
             # default would break anonymous internal use; the reference
             # is read-only + permissive outside enterprise, we follow)
             return sql
-        if roles not in self._registered:
-            self._registered[roles] = register_secured_views(
-                self.spark, self.policy, roles
-            )
-        mapping = {t.lower(): v for t, v in self._registered[roles].items()}
+        # a secured view captures its base view's plan when created, so
+        # it is rebuilt after any (re-)registration (the epoch moves)
+        epoch = catalog_epoch()
+        entry = self._registered.get(roles)
+        if entry is None or entry[0] != epoch:
+            entry = (epoch, register_secured_views(self.spark, self.policy, roles))
+            self._registered[roles] = entry
+        mapping = {t.lower(): v for t, v in entry[1].items()}
         return rename_tables(sql, mapping)

@@ -383,13 +383,14 @@ class _Handler(BaseHTTPRequestHandler):
     # ------------------------------------------------------------ handlers
     # counters grow monotonically; everything else is a point-in-time gauge
     _COUNTER_METRICS = frozenset(
-        {"queries_planned", "queries_executed", "cache_hits",
+        {"queries_planned", "queries_executed", "cache_hits", "cache_text_hits",
          "pushdown_queries", "span_export_errors"}
     )
     _METRIC_HELP = {
         "queries_planned": "Queries that passed the gate and were planned",
         "queries_executed": "Queries executed to completion",
         "cache_hits": "Queries served from the result cache",
+        "cache_text_hits": "Cache hits resolved by statement text, without planning",
         "pushdown_queries": "Queries with a remote pushdown plan",
         "sources_registered": "Registered source connectors",
         "spans_recorded": "Trace spans in the in-process ring buffer",

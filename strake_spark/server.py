@@ -8,10 +8,16 @@ batches), with API-key auth (auth.rs:24-66) and catalog introspection
 
 This façade keeps the same wire shape on the generic Flight RPCs
 (pyarrow has no Flight SQL server helper):
-- descriptor command = SQL text; get_flight_info validates + plans it
-  and returns schema + a ticket
-- do_get(ticket=SQL) executes through the GOVERNED engine path (gate,
-  limits, cost, timeout, cache, policies via the header-passed user)
+- descriptor command = SQL text (or JSON ``{"sql", "user", "params"}``);
+  get_flight_info prepares it (gate, policy, plan or text-key hit) under
+  the request's principal, parks the prepared statement under a random
+  nonce, and returns schema + a JSON ticket ``{"sql", "user", "params",
+  "nonce"}``
+- do_get(ticket) executes through the GOVERNED engine path (gate,
+  limits, cost, timeout, cache, policies via the header-passed user),
+  running the parked statement when the nonce is live and was parked for
+  the same SQL, params and principal; otherwise (no nonce, expired,
+  another principal, a raw-SQL ticket) it plans afresh — stateless
 - do_get(ticket=b"catalog:tables") lists registered views (the
   introspection surface)
 - do_action({list_sources, describe, explain_tree, ping}) proxies the
@@ -30,12 +36,49 @@ from __future__ import annotations
 
 import json
 import logging
+import secrets
+import threading
 import time
+from collections import OrderedDict
 
 from strake_spark.license import LicenseState as _LicenseState
 from strake_spark.scrubber import scrub as _scrub
 
 _audit_log = logging.getLogger("strake_spark.audit")
+
+# prepared statements parked between get_flight_info and do_get
+PARKED_MAX = 1024
+PARKED_TTL_S = 60.0
+
+
+class _Parked:
+    """Prepared statements keyed by a random nonce, for the do_get that
+    follows a get_flight_info. Bounded (oldest dropped first) and
+    expiring; an entry is taken at most once. It holds the plan (or the
+    plan key of a text hit), never result data."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._entries: OrderedDict[str, tuple[float, object]] = OrderedDict()
+
+    def park(self, prepared) -> str:
+        nonce = secrets.token_urlsafe(16)
+        now = time.monotonic()
+        with self._lock:
+            # insertion order is expiry order: drop the expired from the front
+            while self._entries and next(iter(self._entries.values()))[0] < now:
+                self._entries.popitem(last=False)
+            self._entries[nonce] = (now + PARKED_TTL_S, prepared)
+            while len(self._entries) > PARKED_MAX:
+                self._entries.popitem(last=False)
+        return nonce
+
+    def take(self, nonce):
+        with self._lock:
+            entry = self._entries.pop(nonce, None)
+        if entry is None or entry[0] < time.monotonic():
+            return None
+        return entry[1]
 
 
 def make_server(
@@ -149,6 +192,19 @@ def make_server(
                 raise fl.FlightUnauthenticatedError("invalid token")
             return _AuthContext({})
 
+    def _principal(context, claimed: str | None) -> str | None:
+        """The governance principal: a validated OIDC `sub` ALWAYS
+        overrides the client-supplied `user` — otherwise any
+        authenticated token holder could claim another user's
+        RLS/masking profile in the ticket JSON (rest_api._query applies
+        the same rule)."""
+        try:
+            mw = context.get_middleware("auth")
+        except Exception:
+            mw = None
+        claims = getattr(mw, "claims", None) or {}
+        return claims.get("sub") or claimed
+
     def _scope_check(context, verb: str) -> None:
         """Enforce the API key's verb scopes (no-op for static-token
         and OIDC principals, which are not scope-limited)."""
@@ -174,6 +230,18 @@ def make_server(
                 location, middleware=middleware, tls_certificates=tls_pairs or None
             )
             self.engine = engine
+            self._parked = _Parked()
+
+        def _prepare_ticket(self, context, sql, claimed, params):
+            """Prepare ``sql`` under the request's principal and park it.
+            Returns the schema do_get will stream and the JSON ticket."""
+            user = _principal(context, claimed)
+            prep = _governed(lambda: self.engine.prepare(sql, user=user, params=params))
+            ticket = json.dumps({
+                "sql": sql, "user": claimed, "params": params,
+                "nonce": self._parked.park(prep),
+            }).encode()
+            return prep.arrow_schema(), ticket
 
         # -------------------------------------------------- introspection
         def _tables_batch(self) -> pa.Table:
@@ -190,21 +258,14 @@ def make_server(
         # endpoint serves both client generations.
         CATALOG = "strake_spark"
 
-        def _fsql_info(self, descriptor, cmd) -> "fl.FlightInfo":
+        def _fsql_info(self, context, descriptor, cmd) -> "fl.FlightInfo":
             import strake_spark.flightsql as fsql
-            from pyspark.sql.pandas.types import to_arrow_schema
 
-            if isinstance(cmd, fsql.StatementQuery):
-                df = _governed(lambda: self.engine.sql(cmd.query))
-                schema = to_arrow_schema(df.schema)
-                ticket = fsql.pack_command(
-                    fsql.TicketStatement(statement_handle=cmd.query.encode())
-                )
-            elif isinstance(cmd, fsql.PreparedStatementQuery):
-                sql = cmd.prepared_statement_handle.decode()
-                df = _governed(lambda: self.engine.sql(sql))
-                schema = to_arrow_schema(df.schema)
-                ticket = fsql.pack_command(cmd)
+            if isinstance(cmd, (fsql.StatementQuery, fsql.PreparedStatementQuery)):
+                sql = (cmd.query if isinstance(cmd, fsql.StatementQuery)
+                       else cmd.prepared_statement_handle.decode())
+                schema, handle = self._prepare_ticket(context, sql, None, None)
+                ticket = fsql.pack_command(fsql.TicketStatement(statement_handle=handle))
             elif isinstance(cmd, fsql.GetCatalogs):
                 schema, ticket = fsql.catalogs_schema(), fsql.pack_command(cmd)
             elif isinstance(cmd, fsql.GetDbSchemas):
@@ -322,21 +383,16 @@ def make_server(
                         cmd, (fsql.StatementQuery, fsql.PreparedStatementQuery)
                     ) else "describe",
                 )
-                return self._fsql_info(descriptor, cmd)
+                return self._fsql_info(context, descriptor, cmd)
             _scope_check(context, "sql")
             sql = descriptor.command.decode()
-            params = None
+            user = params = None
             if sql.startswith("{"):
                 req = json.loads(sql)
-                sql, params = req["sql"], req.get("params")
-            df = _governed(lambda: self.engine.sql(sql, params=params))  # gate + plan; no execution yet
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            schema = to_arrow_schema(df.schema)
-            # ticket = the ORIGINAL command (JSON kept intact so do_get
-            # re-binds the same parameters)
-            endpoint = fl.FlightEndpoint(descriptor.command, [])
-            return fl.FlightInfo(schema, descriptor, [endpoint], -1, -1)
+                sql, user, params = req["sql"], req.get("user"), req.get("params")
+            # gate + plan (or a text hit); no execution yet
+            schema, ticket = self._prepare_ticket(context, sql, user, params)
+            return fl.FlightInfo(schema, descriptor, [fl.FlightEndpoint(ticket, [])], -1, -1)
 
         # ------------------------------------------------------ execution
         def do_get(self, context, ticket):
@@ -363,26 +419,18 @@ def make_server(
             else:
                 _scope_check(context, "execute")
                 payload = t.decode()
-            user = None
-            params = None
+            user = params = nonce = None
             if payload.startswith("{"):
                 # Prepared-statement shape (reference flight_sql.rs:533-600):
                 # named :params bind in Spark's parser, never by string
                 # interpolation, so values cannot inject syntax.
                 req = json.loads(payload)
                 payload, user = req["sql"], req.get("user")
-                params = req.get("params")
-            # The governance principal: a validated OIDC `sub` ALWAYS
-            # overrides the ticket's client-supplied `user` — otherwise
-            # any authenticated token holder could claim another user's
-            # RLS/masking profile in the ticket JSON (rest_api._query
-            # applies the same rule).
-            try:
-                mw = context.get_middleware("auth")
-            except Exception:
-                mw = None
-            claims = getattr(mw, "claims", None) or {}
-            user = claims.get("sub") or user
+                params, nonce = req.get("params"), req.get("nonce")
+            user = _principal(context, user)
+            # the statement get_flight_info prepared; execute() re-plans
+            # when it was prepared for other SQL, params or principal
+            prepared = self._parked.take(nonce) if isinstance(nonce, str) else None
             # License check before execution (flight_sql.rs:129-144):
             # INVALID -> permission denied; DEGRADED -> warn + proceed
             if license_cache is not None:
@@ -403,7 +451,9 @@ def make_server(
             start = time.perf_counter()
             try:
                 table = _governed(
-                    lambda: self.engine.execute(payload, user=user, params=params)
+                    lambda: self.engine.execute(
+                        payload, user=user, params=params, prepared=prepared
+                    )
                 )
             except Exception as e:
                 _audit_log.info(
@@ -471,7 +521,8 @@ def make_server(
                         "CreatePreparedStatement body must be an Any-wrapped "
                         "ActionCreatePreparedStatementRequest"
                     )
-                df = _governed(lambda: self.engine.sql(req.query))
+                user = _principal(context, None)
+                df = _governed(lambda: self.engine.sql(req.query, user=user))
                 result = fsql.CreatePreparedStatementResult(
                     prepared_statement_handle=req.query.encode(),
                     dataset_schema=to_arrow_schema(df.schema)

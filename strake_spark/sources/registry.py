@@ -12,6 +12,7 @@ federation.rs:176 + sources/sql/mod.rs:73-80).
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -82,6 +83,24 @@ def source_type(*names: str):
     return deco
 
 
+# Process-wide catalog epoch: bumped whenever a source or function is
+# (re-)registered. Engines sharing one SparkSession see each other's
+# registrations, so the epoch is global, not per engine; the result
+# cache's text keys include it.
+_epoch_lock = threading.Lock()
+_catalog_epoch = 0
+
+
+def catalog_epoch() -> int:
+    return _catalog_epoch
+
+
+def bump_catalog_epoch() -> None:
+    global _catalog_epoch
+    with _epoch_lock:
+        _catalog_epoch += 1
+
+
 def register_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
     try:
         fn = SOURCE_TYPES[cfg.type]
@@ -89,7 +108,12 @@ def register_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
         raise SourceError(
             f"unknown source type {cfg.type!r} (known: {sorted(SOURCE_TYPES)})"
         ) from None
-    return fn(spark, cfg)
+    try:
+        return fn(spark, cfg)
+    finally:
+        # after the views are replaced: a key computed from now on can
+        # never meet a plan made over the old views
+        bump_catalog_epoch()
 
 
 # Populate the registry.

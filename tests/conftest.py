@@ -33,7 +33,9 @@ SF_DIR_MID = "/root/testdata/sf0.01"
 # fuzz (wire parsers, decoders) is CHEAP and keeps its full budget in
 # the default run — only campaigns that launch Spark jobs per example
 # are scaled.
-FULL_SUITE = os.environ.get("SPARK_GRAFT_FULL_SUITE", "") not in ("", "0")
+FULL_SUITE = os.environ.get("SPARK_GRAFT_FULL_SUITE", "").strip().lower() in (
+    "1", "true", "yes"
+)
 
 
 def fuzz_examples(n: int, quick: int | None = None) -> int:

@@ -152,6 +152,35 @@ class TestEnforcement:
         assert n == 10
         assert eng._last_pushdown is None
 
+    def test_secured_views_follow_a_reregistered_source(self, spark, tmp_path):
+        """A secured view captures its base view's plan when created: after
+        the source is registered again over other data, the governed
+        principal must read the new data, as everyone else does."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        for sub, ks in (("a", [1, 2, 3]), ("b", [10, 20, 30, 40])):
+            (tmp_path / sub).mkdir()
+            pq.write_table(pa.table({"k": ks}), tmp_path / sub / "t.parquet")
+        eng = ss.connect(
+            {
+                "sources": [{"name": "rr", "type": "parquet", "url": str(tmp_path / "a"),
+                             "tables": [{"name": "t"}]}],
+                "policies": {
+                    "roles": {"r": {"tables": {"rr_t": {"rls_filter": "k > 1"}}}},
+                    "users": {"u": ["r"]},
+                },
+            },
+            spark=spark,
+        )
+        q = "SELECT sum(k) AS s FROM rr_t"
+        assert eng.execute(q, user="u").to_pylist() == [{"s": 5}]
+        src = eng.config.sources[0]
+        src.url = str(tmp_path / "b")
+        eng.register(src)
+        assert eng.execute(q).to_pylist() == [{"s": 100}]
+        assert eng.execute(q, user="u").to_pylist() == [{"s": 100}]
+
     def test_parse_shape(self):
         p = parse_policies(
             {

@@ -75,6 +75,8 @@ class TestHealthPlane:
         code, body = _req(server.port, "/metrics")
         assert code == 200
         assert b"strake_sources_registered 1" in body
+        assert b"strake_cache_text_hits 0" in body  # exposed from zero
+        assert b"# TYPE strake_cache_text_hits counter" in body
         # every sample value must be numeric (one bad sample fails the
         # whole scrape): breaker states are labeled 1-valued gauges
         assert b'strake_breaker_state{source="t",state="closed"} 1' in body.lower()
