@@ -221,6 +221,20 @@ def _end_block(label, run_block, loads, retries):
     return total
 
 
+def _settle_before_probes() -> None:
+    """The scale probes are single medians the driver turns into
+    core-count ratios, so one contended window skews a ratio (r20: a
+    0.45 scale_minhash). Read the 1-min load first and, above the
+    threshold, back off once before they run."""
+    load = _load()
+    print(f"# scale_probes: pre-probe load {load}", file=sys.stderr)
+    if load > _LOAD_THRESHOLD:
+        print(f"# scale_probes: load {load} > {_LOAD_THRESHOLD}; "
+              f"backing off {_LOAD_BACKOFF}s", file=sys.stderr)
+        time.sleep(_LOAD_BACKOFF)
+        print(f"# scale_probes: settled load {_load()}", file=sys.stderr)
+
+
 def _run(spec, spark, sf_dir: str, iters: int, chaos: ChaosInjector | None = None):
     # Entry isolation (r20, mirroring tools/opt_measure.py's d0c7884 fix
     # into the bench itself — VERDICT r19 task 3): operator persists
@@ -411,6 +425,7 @@ def main() -> None:
     # stays the sum of the original 7 TPC-H queries, computed before
     # these keys join the dict.
     scale_probes: dict[str, float] = {}
+    _settle_before_probes()
     for short, name in (("scale_minhash", "dedup_minhash_lsh_candidates"),
                         ("scale_ngram", "dedup_ngram_jaccard")):
         spec = inventory.REGISTRY.get(name)

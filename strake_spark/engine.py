@@ -5,10 +5,14 @@ Mirrors the reference's FederationEngine lifecycle
 
     gate (read-only) -> policy rewrite -> text-key probe
     -> spark.sql (Catalyst optimize) -> defensive limit -> cost gate
-    -> plan-key cache probe -> timed execution -> cache put
+    -> plan-key cache probe -> admission + breakers -> timed execution
+    -> cache put
 
 ``prepare`` runs everything up to the plan (or resolves a confirmed
 text key, skipping Catalyst); ``execute`` runs a prepared statement.
+A cache hit reads no source, so it is served before admission and the
+circuit breakers; only statements that plan against or run on their
+sources enter that envelope.
 
 and the Python connection surface (python/strake/__init__.pyi:28-68:
 sql/describe/trace/explain_tree/list_sources).
@@ -16,6 +20,7 @@ sql/describe/trace/explain_tree/list_sources).
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import logging
 import threading
@@ -336,20 +341,16 @@ class StrakeEngine:
         key (no Catalyst; needs the result cache) or plan through
         ``sql``. Nothing runs; ``execute`` takes the result."""
         prep = self._statement(query, user, params)
-        if prep.text_key is not None:
-            hit = self._cache.resolve_text(prep.text_key)
-            if hit is not None:
-                prep.plan_key, prep.schema = hit
-                return prep
-        return self._plan(prep)
+        return prep if prep.plan_key is not None else self._plan(prep)
 
     def _statement(self, query: str, user: str | None, params) -> PreparedStatement:
-        """Gate + policy rewrite, not yet planned. Only statements whose
-        base tables are all views this engine registered get a text key:
-        for those the key (post-policy SQL, params, user, catalog epoch,
-        query limits, session-zone date) names everything the plan
-        depends on, up to data freshness, which the TTL governs as it
-        does for plan keys."""
+        """Gate + policy rewrite + text-key probe, not yet planned; a
+        confirmed text key sets ``plan_key`` and ``schema``. Only
+        statements whose base tables are all views this engine
+        registered get a text key: for those the key (post-policy SQL,
+        params, user, catalog epoch, query limits, session-zone date)
+        names everything the plan depends on, up to data freshness,
+        which the TTL governs as it does for plan keys."""
         ensure_select(query)
         governed = self._policies.rewrite(query, user) if self._policies is not None else query
         tables = _base_tables(query)
@@ -367,6 +368,9 @@ class StrakeEngine:
                 prep.text_key = text_key(
                     governed, params, user, prep.epoch, self.config.query_limits, today
                 )
+                resolved = self._cache.resolve_text(prep.text_key)
+                if resolved is not None:
+                    prep.plan_key, prep.schema = resolved
         return prep
 
     def _plan(self, prep: PreparedStatement) -> PreparedStatement:
@@ -407,9 +411,12 @@ class StrakeEngine:
         is ignored and the query is prepared afresh.
 
         Admission (global budget + per-source caps) and per-source
-        circuit breakers wrap the whole query, the reference's
-        granularity (it wraps each source's TableProvider; one grant
-        per query per source).
+        circuit breakers wrap the statement's source work, planning
+        included when this call plans (pushdown planning contacts
+        sources): the reference's granularity (it wraps each source's
+        TableProvider; one grant per query per source). A result-cache
+        hit reads no source and takes neither. Only source faults move
+        a breaker; see ``reliability.source_envelope``.
 
         ``traceparent`` (W3C trace-context header) joins the caller's
         distributed trace; the query span + plan/run children land in
@@ -482,72 +489,69 @@ class StrakeEngine:
                 out.add(name.lower())
         return tuple(sorted(out))
 
+    def _envelope(self, sources: tuple[str, ...], user: str | None):
+        """Admission + breaker trials around one statement's source work
+        (execute's plan and run, profile's plan and run)."""
+        from strake_spark.reliability import source_envelope
+
+        breakers = [self._breakers[s] for s in sources if s in self._breakers]
+        return source_envelope(self._governor, sources, breakers, user=user)
+
+    def _check_row_cap(self, rows: int) -> None:
+        cap = self.config.query_limits.max_output_rows
+        if cap and rows > cap:
+            raise QueryRejected(f"result has {rows} rows > max_output_rows {cap}")
+
     def _execute_traced(self, query, user, params, prep, root):
-        limits = self.config.query_limits
+        """Probe the cache first: a hit returns without admission or
+        breakers. A miss enters the envelope to plan (when the caller did
+        not) and run. One plan-key fingerprint and one cache read per
+        statement: the probe's key is the put's key."""
         cache = self._cache
         started = time.time()
-        sources = prep.sources if prep is not None else self._touched_sources(query)
-        root.set_attribute("strake.sources", ",".join(sources))
-        breakers = [self._breakers[s] for s in sources if s in self._breakers]
-        with self._governor.admit(sources, user=user):
-            for b in breakers:
-                b.acquire()
-            try:
-                with self.tracer.span("query.plan") as plan_span:
-                    if prep is None:
-                        prep = self.prepare(query, user=user, params=params)
-                    hit = key = None
-                    if prep.df is None:
-                        if cache is not None:
-                            hit = cache.get(None, user, key=prep.plan_key)
-                        if hit is None:  # expired or evicted since: plan after all
-                            self._plan(prep)
-                    text_hit = hit is not None
-                    plan_span.set_attribute("strake.text_hit", text_hit)
-                    pushed = prep.pushdown
-                    plan_span.set_attribute("strake.pushdown", pushed is not None)
-                    if pushed is not None:
-                        plan_span.set_attribute(
-                            "strake.pushdown.summary",
-                            str(getattr(pushed, "rewritten_sql", ""))[:500],
-                        )
-                if not text_hit and cache is not None:
-                    from strake_spark.cache import plan_fingerprint
+        hit = key = probed = None
+        entered = False
+        with contextlib.ExitStack() as envelope:
+            with self.tracer.span("query.plan") as plan_span:
+                if prep is None:
+                    prep = self._statement(query, user, params)
+                root.set_attribute("strake.sources", ",".join(prep.sources))
+                if prep.df is None and prep.plan_key is not None:  # confirmed text key
+                    probed = prep.plan_key
+                    hit = cache.get(None, user, key=probed)
+                text_hit = hit is not None
+                plan_span.set_attribute("strake.text_hit", text_hit)
+                if prep.df is None and not text_hit:
+                    # expired or evicted, or never a text hit: plan inside
+                    # the envelope, as pushdown planning contacts sources
+                    envelope.enter_context(self._envelope(prep.sources, user))
+                    entered = True
+                    self._plan(prep)
+                pushed = prep.pushdown
+                plan_span.set_attribute("strake.pushdown", pushed is not None)
+                if pushed is not None:
+                    plan_span.set_attribute(
+                        "strake.pushdown.summary",
+                        str(getattr(pushed, "rewritten_sql", ""))[:500],
+                    )
+            if not text_hit and cache is not None:
+                from strake_spark.cache import plan_fingerprint
 
-                    key = plan_fingerprint(prep.df, user)
+                key = plan_fingerprint(prep.df, user)
+                if key != probed:  # an expired text hit's key was just read
                     hit = cache.get(prep.df, user, key=key)
-                if hit is not None:
-                    table = hit
-                else:
-                    with self.tracer.span("query.run"):
-                        table = run_with_timeout(
-                            prep.df, lambda d: d.toArrow(), limits.query_timeout_seconds
-                        )
-            except QueryRejected:
-                for b in breakers:
-                    b.release()  # governance rejection, not a source fault
-                raise
-            except Exception as e:
-                for b in breakers:
-                    b.record(False)
-                # Spark analysis/parse failures re-raise classified
-                # onto the stable code contract (convert.py, reference
-                # convert.rs): API users branch on STRAKE-2002/2003/...
-                # instead of matching Spark's message prose. Anything
-                # without a Spark error condition propagates unchanged.
-                from strake_spark.convert import classify_exception
-
-                classified = classify_exception(e)
-                if classified is not None:
-                    raise classified from e
-                raise
-            for b in breakers:
-                b.record(True)
+            if hit is not None:
+                table = hit
+            else:
+                if not entered:
+                    envelope.enter_context(self._envelope(prep.sources, user))
+                with self.tracer.span("query.run"):
+                    table = run_with_timeout(
+                        prep.df, lambda d: d.toArrow(),
+                        self.config.query_limits.query_timeout_seconds,
+                    )
         if hit is None:
-            if limits.max_output_rows and table.num_rows > limits.max_output_rows:
-                raise QueryRejected(
-                    f"result has {table.num_rows} rows > max_output_rows {limits.max_output_rows}"
-                )
+            self._check_row_cap(table.num_rows)
             if cache is not None:
                 cache.put(prep.df, user, table, key=key)
         if key is not None and prep.text_key is not None:
@@ -796,39 +800,21 @@ class StrakeEngine:
             runtime_profile,
         )
 
-        limits = self.config.query_limits
         sources = self._touched_sources(query)
-        breakers = [self._breakers[s] for s in sources if s in self._breakers]
         with self.tracer.span(
             "query.profile",
             {"db.statement.length": len(query), "enduser.id": user or ""},
             traceparent=traceparent,
         ) as root:
             root.set_attribute("strake.sources", ",".join(sources))
-            with self._governor.admit(sources, user=user):
-                for b in breakers:
-                    b.acquire()
-                try:
-                    with self.tracer.span("query.plan"):
-                        df = self.sql(query, user=user)
-                    with self.tracer.span("query.run"):
-                        n = run_with_timeout(
-                            df, execute_plan_only, limits.query_timeout_seconds
-                        )
-                except QueryRejected:
-                    for b in breakers:
-                        b.release()  # governance rejection, not a source fault
-                    raise
-                except Exception:
-                    for b in breakers:
-                        b.record(False)
-                    raise
-                for b in breakers:
-                    b.record(True)
-            if limits.max_output_rows and n > limits.max_output_rows:
-                raise QueryRejected(
-                    f"result has {n} rows > max_output_rows {limits.max_output_rows}"
-                )
+            with self._envelope(sources, user):
+                with self.tracer.span("query.plan"):
+                    df = self.sql(query, user=user)
+                with self.tracer.span("query.run"):
+                    n = run_with_timeout(
+                        df, execute_plan_only, self.config.query_limits.query_timeout_seconds
+                    )
+            self._check_row_cap(n)
             prof = runtime_profile(df)
             root.set_attribute("strake.rows", n)
         return {

@@ -491,28 +491,40 @@ def curation_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4 exchanges, a window and a SortMergeJoin. Now: the label rides
     # the map-only assignment (kmeans_assign carry_cols, zero extra
     # shuffle), and ONE pass over the counts takes sum(n) and
-    # max(struct(n, -label)) per cluster — the struct max reproduces
-    # the window's (n DESC, label ASC) tie-break exactly. 1 scan,
-    # 2 exchanges, no join, no window; measured 2.91 s -> 2.27 s
-    # interleaved same-session 7-run medians at sf0.1 (tail pairs
-    # 2.09 -> 1.67 once JIT settles), identical rows.
-    #
-    # PRECONDITION (r20, ADVICE item 3): the struct-max tie-break
-    # requires a NON-NULL NUMERIC label column. -label needs a numeric
-    # type, and a NULL label would change semantics vs the old window
-    # (orderBy label asc put NULLs FIRST, so a NULL-label tie won;
-    # struct-max sorts NULL neg_label last, so the smallest non-null
-    # label wins instead). The embeddings fixture's label is int and
-    # never NULL, so both shapes agree here — coalesce the label
-    # before negation if a nullable source is ever wired in.
+    # max(struct(n, label IS NULL, -label)) per cluster — the struct
+    # max reproduces the window's (n DESC, label ASC NULLS FIRST)
+    # tie-break exactly (see _majority_labels). 1 scan, 2 exchanges, no
+    # join, no window; measured 2.91 s -> 2.27 s interleaved
+    # same-session 7-run medians at sf0.1 (tail pairs 2.09 -> 1.67 once
+    # JIT settles), identical rows.
     from strake_spark.operators import semdedup as SD
 
     emb = table(spark, sf_dir, "embeddings")
     assign = SD.kmeans_assign(emb, k=8, iters=2, carry_cols=("label",))
     cnt = assign.groupBy("cluster", "label").agg(F.count(F.lit(1)).alias("n"))
+    return _majority_labels(cnt)
+
+
+def _majority_labels(cnt: DataFrame) -> DataFrame:
+    """Per cluster of (cluster, label, n) counts: the majority label, the
+    member count and the purity. Ties on n go to a NULL label first, then
+    to the smallest label: the order of a window over (n DESC, label ASC),
+    whose ascending sort puts NULLs first. The label must be numeric (the
+    tie-break negates it); that is checked on the schema, so no job runs."""
+    from pyspark.sql.types import NumericType
+
+    label_type = cnt.schema["label"].dataType
+    if not isinstance(label_type, NumericType):
+        raise TypeError(
+            f"cluster purity needs a numeric label column, got {label_type.simpleString()}"
+        )
     agg = cnt.groupBy("cluster").agg(
         F.sum("n").alias("total"),
-        F.max(F.struct(F.col("n").alias("n"), (-F.col("label")).alias("neg_label"))).alias("m"),
+        F.max(F.struct(
+            F.col("n").alias("n"),
+            F.col("label").isNull().alias("null_label"),
+            (-F.col("label")).alias("neg_label"),
+        )).alias("m"),
     )
     return agg.select(
         F.col("cluster").cast("bigint").alias("cluster"),

@@ -10,14 +10,17 @@ Reference:
   (crates/runtime/src/federation.rs:138,372) + per-source
   max_concurrent_queries semaphores (wrappers.rs:70-76)
 
-Spark placement: these guard DRIVER-side boundaries — query admission
-in StrakeEngine.execute and connector fetch/metadata calls. Executor-
-side scan tasks are already governed by Spark's own task retry
-(spark.task.maxFailures) and blacklisting; duplicating a Python breaker
-inside executor processes would mean cross-process shared state for no
-gain, so per-source breakers record the outcome of each *query* that
-touches the source, which is the reference's granularity too (it wraps
-the provider, one grant per query).
+Spark placement: these guard DRIVER-side boundaries — the source work
+of StrakeEngine.execute/profile (``source_envelope``) and connector
+fetch/metadata calls. Executor-side scan tasks are already governed by
+Spark's own task retry (spark.task.maxFailures) and blacklisting;
+duplicating a Python breaker inside executor processes would mean
+cross-process shared state for no gain, so per-source breakers record
+the outcome of each *query* that touches the source, which is the
+reference's granularity too (it wraps the provider, one grant per
+query). A result-cache hit touches no source, so it takes no permit and
+meets no breaker, as a hit never reaches the reference's wrapped
+providers.
 """
 
 from __future__ import annotations
@@ -26,10 +29,12 @@ import random
 import threading
 import time
 from collections import deque
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from strake_spark.config import RetryConfig
-from strake_spark.errors import QueryRejected
+from strake_spark.convert import classify_exception
+from strake_spark.errors import BudgetExceeded, EngineError, ErrorCategory, QueryRejected
 
 
 class CircuitOpen(QueryRejected):
@@ -270,3 +275,53 @@ class _Admission:
         while self._held:
             self._held.pop().release()
         return False
+
+
+def _source_fault(exc: BaseException) -> bool:
+    """Whether a failure counts against the breakers of the sources a
+    statement touched. Governance rejections (gate, policy, admission,
+    open breakers, the cost gate) and the statement's own parse and
+    analysis errors (classified onto the 2xxx query codes) say nothing
+    about a source's health; timeouts and everything else do."""
+    if isinstance(exc, (QueryRejected, BudgetExceeded)):
+        return False
+    if isinstance(exc, EngineError) and exc.code.category is ErrorCategory.QUERY:
+        return False
+    return isinstance(exc, Exception)
+
+
+@contextmanager
+def source_envelope(governor: ConcurrencyGovernor, sources: tuple[str, ...],
+                    breakers: list[CircuitBreaker], user: str | None = None):
+    """The governed envelope around one statement's source work:
+    admission (global, priority-lane, per-source and per-user permits),
+    then a trial on each touched source's breaker. A body that completes
+    records success on every breaker; a source fault records failure;
+    any other exception gives the trials back unjudged. Spark failures
+    leave classified onto the stable code contract (convert.py), so
+    callers branch on STRAKE-NNNN codes rather than Spark's prose."""
+    with governor.admit(sources, user=user):
+        acquired: list[CircuitBreaker] = []
+        try:
+            for b in breakers:
+                b.acquire()
+                acquired.append(b)
+        except CircuitOpen:
+            for b in acquired:
+                b.release()
+            raise
+        try:
+            yield
+        except BaseException as e:
+            classified = classify_exception(e) if isinstance(e, Exception) else None
+            fault = _source_fault(classified or e)
+            for b in breakers:
+                if fault:
+                    b.record(False)
+                else:
+                    b.release()
+            if classified is not None:
+                raise classified from e
+            raise
+        for b in breakers:
+            b.record(True)

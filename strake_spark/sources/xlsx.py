@@ -96,18 +96,32 @@ def _loud_workbook(path: str):
     except OSError as e:
         # A mutated header offset makes zipfile seek outside the file:
         # OSError(EINVAL) (fuzz find; ESPIPE is the same class of
-        # out-of-file seek on other platforms). ONLY that corrupt-input
-        # signature converts to SourceError (r20, ADVICE item 4) —
-        # every other OSError (transient disk I/O, ConnectionResetError
-        # on a network filesystem, missing file, permissions) is an
-        # environmental failure, not corrupt input, and keeps its type.
+        # out-of-file seek on other platforms). Only corrupt-input
+        # signatures convert to SourceError: those errnos, and an
+        # OSError with no errno raised inside zipfile's parsing (the OS
+        # always sets an errno, so an errno-less one is a format
+        # complaint). Every other OSError (transient disk I/O,
+        # ConnectionResetError on a network filesystem, missing file,
+        # permissions) is an environmental failure, not corrupt input,
+        # and keeps its type.
         import errno
 
-        if e.errno in (errno.EINVAL, errno.ESPIPE):
+        if e.errno in (errno.EINVAL, errno.ESPIPE) or (
+            e.errno is None and _raised_in_zipfile(e)
+        ):
             raise SourceError(
                 f"{path}: not a readable xlsx workbook: {e}"
             ) from e
         raise
+
+
+def _raised_in_zipfile(e: BaseException) -> bool:
+    import traceback
+
+    return any(
+        frame.f_globals.get("__name__") == "zipfile"
+        for frame, _ in traceback.walk_tb(e.__traceback__)
+    )
 
 
 def _member(z: zipfile.ZipFile, name: str) -> bytes:

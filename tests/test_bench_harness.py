@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from bench import BENCH_QUERIES, PIPELINE_QUERIES, ChaosInjector
 
 
@@ -76,6 +78,25 @@ class TestEndBlockRetry:
         bench._end_block("rend", lambda: 1.0, loads, retries)
         assert "rend" not in retries  # pre=0.5, post=0.4: no cascade
         assert loads["rend"] == 0.4
+
+
+class TestProbeBackoff:
+    @pytest.mark.parametrize("load, sleeps", [(2.5, [7.0]), (1.5, [])])
+    def test_probes_back_off_once_above_the_threshold(
+        self, monkeypatch, capsys, load, sleeps
+    ):
+        import bench
+
+        monkeypatch.setattr(bench, "_LOAD_THRESHOLD", 2.0)
+        monkeypatch.setattr(bench, "_LOAD_BACKOFF", 7.0)
+        monkeypatch.setattr(bench, "_load", lambda: load)
+        slept: list[float] = []
+        monkeypatch.setattr(bench.time, "sleep", slept.append)
+        bench._settle_before_probes()
+        assert slept == sleeps
+        err = capsys.readouterr()
+        assert f"pre-probe load {load}" in err.err and err.out == ""
+        assert ("backing off" in err.err) is bool(sleeps)
 
 
 class TestTailContract:

@@ -45,3 +45,27 @@ def test_entry_contract():
     o = e.oracle_sql()
     assert set(o) <= set(q)
     assert len(q) == len(inventory.REGISTRY)
+
+
+def test_cluster_purity_ties_go_to_null_then_smallest_label(spark):
+    from strake_spark.inventory.similarity import _majority_labels
+
+    cnt = spark.createDataFrame(
+        [(0, None, 3), (0, 1, 3), (0, 2, 1),   # NULL wins the tie on 3
+         (1, 5, 2), (1, 4, 2), (1, None, 1),   # smallest label wins
+         (2, 7, 4), (2, None, 1)],             # a plain majority
+        "cluster INT, label INT, n BIGINT",
+    )
+    rows = {r.cluster: r for r in _majority_labels(cnt).collect()}
+    assert rows[0].majority_label is None and rows[0].n_members == 7
+    assert rows[0].purity == 3 / 7
+    assert rows[1].majority_label == 4 and rows[1].n_members == 5
+    assert rows[2].majority_label == 7 and rows[2].purity == 0.8
+
+
+def test_cluster_purity_rejects_a_non_numeric_label(spark):
+    from strake_spark.inventory.similarity import _majority_labels
+
+    cnt = spark.createDataFrame([(0, "a", 1)], "cluster INT, label STRING, n BIGINT")
+    with pytest.raises(TypeError, match="numeric label"):
+        _majority_labels(cnt)

@@ -10,7 +10,9 @@
   principal;
 - pushed statements that differ only in a literal get different plan
   keys;
-- per-statement planning state is per thread.
+- per-statement planning state is per thread;
+- each statement reads the cache once and fingerprints its plan at
+  most once.
 """
 
 from __future__ import annotations
@@ -155,6 +157,45 @@ class TestTextKey:
             assert eng.prepare(NATION_Q).text_key is None
         finally:
             spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+class TestOneProbePerStatement:
+    def test_one_cache_read_and_one_fingerprint_per_statement(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from collections import Counter
+
+        from strake_spark import cache as cache_mod
+
+        eng = _engine(spark, tmp_path)
+        calls: Counter = Counter()
+        real_get, real_fp = cache_mod.ResultCache.get, cache_mod.plan_fingerprint
+
+        def get(self, *a, **kw):
+            calls["get"] += 1
+            return real_get(self, *a, **kw)
+
+        def fingerprint(*a, **kw):
+            calls["fingerprint"] += 1
+            return real_fp(*a, **kw)
+
+        monkeypatch.setattr(cache_mod.ResultCache, "get", get)
+        monkeypatch.setattr(cache_mod, "plan_fingerprint", fingerprint)
+
+        def probes(query=NATION_Q, **kw):
+            calls.clear()
+            eng.execute(query, **kw)
+            hit = eng.last_warnings() == ["x-strake-cache: hit"]
+            return hit, calls["get"], calls["fingerprint"]
+
+        assert probes() == (False, 1, 1)  # miss: the probe's key is the put's
+        assert probes() == (True, 1, 1)  # plan-key hit
+        assert probes() == (True, 1, 0)  # text hit: no plan, no fingerprint
+        for name in os.listdir(tmp_path / "cache"):
+            os.unlink(tmp_path / "cache" / name)
+        assert probes() == (False, 1, 1)  # the text hit's file is gone: planned
+        other = NATION_Q.replace("ORDER", " ORDER")
+        assert probes(other, prepared=eng.prepare(other)) == (True, 1, 1)
 
 
 @pytest.fixture(scope="module")

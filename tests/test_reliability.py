@@ -386,3 +386,254 @@ class TestPriorityLane:
                           "priority_reserved_slots": 2})
         assert c.priority_users == frozenset({"ceo"})
         assert c.priority_reserved_slots == 2
+
+
+# ------------------------------------------- cache hits and the envelope
+HIT_Q = "SELECT n_name FROM hs_nation WHERE n_regionkey = 1 ORDER BY n_name"
+MISS_Q = "SELECT count(*) AS n FROM hs_nation"
+
+
+def _hit_engine(spark, tmp_path, **extra):
+    import strake_spark as ss
+    from tests.conftest import SF_DIR
+
+    cfg = {
+        "sources": [{"name": "hs", "type": "parquet", "url": SF_DIR,
+                     "tables": [{"name": "nation"}]}],
+        "cache": {"enabled": True, "directory": str(tmp_path / "cache")},
+    }
+    cfg.update(extra)
+    return ss.connect(cfg, spark=spark)
+
+
+def _small_breaker(eng, source="hs", clock=time.monotonic):
+    br = CircuitBreaker(
+        source, BreakerConfig(window_size=2, min_calls=2, open_seconds=60), clock=clock
+    )
+    eng._breakers[source] = br
+    return br
+
+
+def _is_hit(eng, query, user=None) -> bool:
+    eng.execute(query, user=user)
+    return "x-strake-cache: hit" in eng.last_warnings()
+
+
+class _BlockedMiss:
+    """Runs one miss on a thread and holds it inside ``run_with_timeout``
+    (so inside the envelope, holding its permit) until released."""
+
+    def __init__(self, eng, monkeypatch):
+        from strake_spark import engine as engine_mod
+
+        self.started, self.release = threading.Event(), threading.Event()
+        real = engine_mod.run_with_timeout
+
+        def blocking(df, fn, timeout):
+            self.started.set()
+            self.release.wait(60)
+            return real(df, fn, timeout)
+
+        monkeypatch.setattr(engine_mod, "run_with_timeout", blocking)
+        self.rows = None
+        self.thread = threading.Thread(target=self._run, args=(eng,), daemon=True)
+
+    def _run(self, eng):
+        self.rows = eng.execute(MISS_Q).num_rows
+
+    def __enter__(self):
+        self.thread.start()
+        assert self.started.wait(60)
+        return self
+
+    def __exit__(self, *exc):
+        self.release.set()
+        self.thread.join(60)
+        assert not self.thread.is_alive() and self.rows == 1  # the miss completed
+
+
+def _finishes(fn, within=20.0):
+    """Run ``fn`` on a thread; its result when it returns within
+    ``within`` seconds, else an AssertionError."""
+    out, done = {}, threading.Event()
+
+    def run():
+        try:
+            out["v"] = fn()
+        except BaseException as e:  # noqa: BLE001 - re-raised below
+            out["e"] = e
+        done.set()
+
+    threading.Thread(target=run, daemon=True).start()
+    assert done.wait(within), "statement waited for the held permit"
+    if "e" in out:
+        raise out["e"]
+    return out["v"]
+
+
+class TestOnlySourceFaultsMoveBreakers:
+    def test_bad_columns_leave_the_breaker_closed(self, spark, tmp_path):
+        from strake_spark.errors import EngineError, ErrorCode
+
+        eng = _hit_engine(spark, tmp_path)
+        br = _small_breaker(eng)
+        for _ in range(3):
+            with pytest.raises(EngineError) as ei:
+                eng.execute("SELECT no_such_col FROM hs_nation")
+            assert ei.value.code is ErrorCode.FIELD_NOT_FOUND
+        assert br.state == "closed" and len(br._outcomes) == 0
+        # profile shares the envelope
+        with pytest.raises(EngineError):
+            eng.profile("SELECT no_such_col FROM hs_nation")
+        assert br.state == "closed"
+
+    def test_cost_gate_rejections_leave_the_breaker_closed(self, spark, tmp_path):
+        from strake_spark.errors import BudgetExceeded
+
+        eng = _hit_engine(spark, tmp_path, query_limits={"max_estimated_bytes": 1})
+        br = _small_breaker(eng)
+        for _ in range(3):
+            with pytest.raises(BudgetExceeded):
+                eng.execute(MISS_Q)
+        assert br.state == "closed"
+
+    def test_breaker_trial_of_an_open_second_source_is_given_back(self):
+        from strake_spark.reliability import source_envelope
+
+        clock = [0.0]
+        half = CircuitBreaker("a", BreakerConfig(window_size=1, min_calls=1,
+                                                 open_seconds=1), clock=lambda: clock[0])
+        half.record(False)
+        clock[0] = 2.0  # half-open: one trial
+        shut = CircuitBreaker("b", BreakerConfig(window_size=1, min_calls=1))
+        shut.record(False)
+        with pytest.raises(CircuitOpen):
+            with source_envelope(ConcurrencyGovernor(1), ("a", "b"), [half, shut]):
+                pass
+        half.acquire()  # the trial was released, not leaked
+        half.release()
+
+
+class TestCacheHitsSkipTheEnvelope:
+    def test_text_hit_completes_while_the_only_permit_is_held(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from strake_spark.errors import QueryRejected as Rejected
+
+        eng = _hit_engine(spark, tmp_path, global_connection_budget=1)
+        expected = eng.execute(HIT_Q)
+        eng.execute(HIT_Q)  # confirms the text key
+        with _BlockedMiss(eng, monkeypatch):
+            assert eng._governor._global._value == 0
+            before = eng.metrics()["cache_text_hits"]
+            assert _finishes(lambda: eng.execute(HIT_Q)).equals(expected)
+            assert eng.metrics()["cache_text_hits"] == before + 1
+            # the gate still runs first: a non-SELECT is refused at once
+            with pytest.raises(Rejected):
+                _finishes(lambda: eng.execute("DROP TABLE hs_nation"))
+
+    def test_flight_hit_completes_while_the_only_permit_is_held(
+        self, spark, tmp_path, monkeypatch
+    ):
+        import pyarrow.flight as fl
+
+        from strake_spark.server import make_server
+
+        eng = _hit_engine(spark, tmp_path, global_connection_budget=1)
+        srv = make_server(eng)
+        threading.Thread(target=srv.serve, daemon=True).start()
+        client = fl.FlightClient(f"grpc://127.0.0.1:{srv.port}")
+
+        def fetch():
+            info = client.get_flight_info(fl.FlightDescriptor.for_command(HIT_Q.encode()))
+            return client.do_get(info.endpoints[0].ticket).read_all()
+
+        try:
+            expected = fetch()  # miss: run and put
+            with _BlockedMiss(eng, monkeypatch):
+                assert _finishes(fetch).equals(expected)  # plan-key hit
+                assert _finishes(fetch).equals(expected)  # now a text hit
+        finally:
+            client.close()
+            srv.shutdown()
+
+    def test_open_breaker_serves_hits_and_rejects_misses(self, spark, tmp_path):
+        eng = _hit_engine(spark, tmp_path)
+        br = _small_breaker(eng)
+        for _ in range(2):
+            eng.execute(HIT_Q)  # confirms the text key
+        br.record(False)
+        br.record(False)
+        assert br.state == "open"
+        assert _is_hit(eng, HIT_Q)  # text hit
+        # other text, same plan, planned by the caller: a plan-key hit
+        other = HIT_Q.replace("ORDER", " ORDER")
+        eng.execute(other, prepared=eng.prepare(other))
+        assert eng.last_warnings() == ["x-strake-cache: hit"]
+        with pytest.raises(CircuitOpen):
+            eng.execute(MISS_Q)
+        assert br.state == "open"
+
+    def test_half_open_breaker_stays_half_open_after_a_hit(self, spark, tmp_path):
+        clock = [0.0]
+        eng = _hit_engine(spark, tmp_path)
+        br = _small_breaker(eng, clock=lambda: clock[0])
+        for _ in range(2):
+            eng.execute(HIT_Q)  # confirms the text key
+        br.record(False)
+        br.record(False)
+        clock[0] = 61.0
+        assert br.state == "half_open"
+        assert _is_hit(eng, HIT_Q)
+        assert br.state == "half_open" and br._half_open_in_flight == 0
+        eng.execute(MISS_Q)  # the source's real trial closes it
+        assert br.state == "closed"
+
+    def test_failing_source_with_mostly_hits_still_trips(self, spark, tmp_path):
+        import os
+
+        import duckdb
+
+        import strake_spark as ss
+
+        dbpath = str(tmp_path / "hits.duckdb")
+        con = duckdb.connect(dbpath)
+        con.execute("CREATE TABLE t (x INTEGER)")
+        con.execute("INSERT INTO t VALUES (1), (2)")
+        con.close()
+        eng = ss.connect(
+            {"sources": [{"name": "fs", "type": "duckdb", "url": dbpath}],
+             "cache": {"enabled": True, "directory": str(tmp_path / "cache")}},
+            spark=spark,
+        )
+        cached = "SELECT count(*) AS n FROM fs_t"
+        for _ in range(2):
+            eng.execute(cached)  # confirms the text key
+        br = _small_breaker(eng, source="fs")
+        os.remove(dbpath)  # source vanishes
+        for _ in range(2):  # three hits to one miss, twice
+            for _ in range(3):
+                assert _is_hit(eng, cached)
+            with pytest.raises(Exception) as ei:
+                eng.execute("SELECT sum(x) AS s FROM fs_t")
+            assert not isinstance(ei.value, CircuitOpen)
+        assert br.state == "open"
+        with pytest.raises(CircuitOpen):
+            eng.execute("SELECT sum(x) AS s FROM fs_t")
+        assert _is_hit(eng, cached)
+
+    def test_users_never_share_hits(self, spark, tmp_path):
+        eng = _hit_engine(
+            spark, tmp_path,
+            policies={
+                "roles": {"r0": {"tables": {"hs_nation": {"rls_filter": "n_regionkey = 0"}}}},
+                "users": {"pat": ["r0"]},
+            },
+        )
+        for _ in range(2):
+            eng.execute(MISS_Q, user="amy")
+        assert _is_hit(eng, MISS_Q, user="amy")
+        assert not _is_hit(eng, MISS_Q, user="bob")
+        assert eng.execute(MISS_Q, user="pat").to_pylist() == [{"n": 5}]
+        assert "x-strake-cache: hit" not in eng.last_warnings()
+        assert eng.execute(MISS_Q, user="amy").to_pylist() == [{"n": 25}]

@@ -227,6 +227,33 @@ class TestCorruptWorkbooks:
             z.writestr("xl/workbook.xml", wb_xml)
         return bytearray(path.read_bytes())
 
+    @staticmethod
+    def _ok_book(path):
+        """A readable one-sheet workbook with no rows."""
+        import zipfile
+
+        with zipfile.ZipFile(path, "w") as z:
+            z.writestr(
+                "xl/workbook.xml",
+                '<workbook xmlns="http://schemas.openxmlformats.org/'
+                'spreadsheetml/2006/main" xmlns:r="http://schemas.'
+                'openxmlformats.org/officeDocument/2006/relationships">'
+                '<sheets><sheet name="S1" r:id="rId1"/></sheets></workbook>',
+            )
+            z.writestr(
+                "xl/_rels/workbook.xml.rels",
+                '<Relationships xmlns="http://schemas.openxmlformats.org/'
+                'package/2006/relationships">'
+                '<Relationship Id="rId1" Target="worksheets/sheet1.xml"/>'
+                "</Relationships>",
+            )
+            z.writestr(
+                "xl/worksheets/sheet1.xml",
+                '<worksheet xmlns="http://schemas.openxmlformats.org/'
+                'spreadsheetml/2006/main"><sheetData/></worksheet>',
+            )
+        return path
+
     def test_unsupported_zip_features_are_loud(self, tmp_path):
         # pinned fuzz finds: stdlib zipfile signals these with raw
         # NotImplementedError / RuntimeError, not BadZipFile.
@@ -317,33 +344,11 @@ class TestCorruptWorkbooks:
         """r19 advice: only zipfile's missing-member KeyError may become
         'not a readable xlsx workbook'; a dict-lookup KeyError from a
         real bug inside the parse body must keep its traceback."""
-        import zipfile
-
         import pytest
 
         from strake_spark.sources import xlsx
 
-        ok = tmp_path / "ok.xlsx"
-        with zipfile.ZipFile(ok, "w") as z:
-            z.writestr(
-                "xl/workbook.xml",
-                '<workbook xmlns="http://schemas.openxmlformats.org/'
-                'spreadsheetml/2006/main" xmlns:r="http://schemas.'
-                'openxmlformats.org/officeDocument/2006/relationships">'
-                '<sheets><sheet name="S1" r:id="rId1"/></sheets></workbook>',
-            )
-            z.writestr(
-                "xl/_rels/workbook.xml.rels",
-                '<Relationships xmlns="http://schemas.openxmlformats.org/'
-                'package/2006/relationships">'
-                '<Relationship Id="rId1" Target="worksheets/sheet1.xml"/>'
-                "</Relationships>",
-            )
-            z.writestr(
-                "xl/worksheets/sheet1.xml",
-                '<worksheet xmlns="http://schemas.openxmlformats.org/'
-                'spreadsheetml/2006/main"><sheetData/></worksheet>',
-            )
+        ok = self._ok_book(tmp_path / "ok.xlsx")
         # sanity: the fixture workbook reads fine
         names, rows = xlsx.read_sheet(str(ok))
         assert rows == []
@@ -354,3 +359,32 @@ class TestCorruptWorkbooks:
         monkeypatch.setattr(xlsx, "_shared_strings", boom)
         with pytest.raises(KeyError, match="unrelated"):
             xlsx.read_sheet(str(ok))
+
+    def test_errno_less_oserror_inside_zipfile_is_loud(self, tmp_path, monkeypatch):
+        """An OSError without an errno raised inside zipfile's parsing is
+        a format complaint, not an OS failure: it becomes SourceError.
+        One raised outside zipfile keeps its type."""
+        import zipfile
+
+        import pytest
+
+        from strake_spark.errors import SourceError
+        from strake_spark.sources import xlsx
+
+        path = str(self._ok_book(tmp_path / "e.xlsx"))
+        assert xlsx.sheet_names(path) == ["S1"]
+
+        def bare(self, *a, **kw):
+            raise OSError()
+
+        with monkeypatch.context() as m:
+            m.setattr(zipfile._SharedFile, "read", bare)
+            with pytest.raises(SourceError, match="not a readable xlsx"):
+                xlsx.sheet_names(path)
+
+        def outside(z):
+            raise OSError()
+
+        monkeypatch.setattr(xlsx, "_shared_strings", outside)
+        with pytest.raises(OSError):  # SourceError is no OSError
+            xlsx.read_sheet(path)
