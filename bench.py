@@ -187,7 +187,9 @@ _LOAD_BACKOFF = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_BACKOFF", "20"))
 def _end_block(label, run_block, loads, retries):
     """Run an end-control block; if the 1-min load at either boundary
     exceeds the threshold, back off and re-run once, recording the
-    retry total (and its closing load) under ``end_retries``."""
+    retry total (and its closing load) under ``end_retries``. Returns
+    the settled total: the retry's when one ran (contention only ever
+    inflates, so the first reading is the suspect one)."""
     pre = loads[list(loads)[-1]] if loads else _load()
     total = run_block()
     post = _load()
@@ -218,6 +220,7 @@ def _end_block(label, run_block, loads, retries):
         # label already records that the pre-backoff boundary crossed
         # the threshold
         loads[label] = settled
+        return retry_total
     return total
 
 
@@ -472,6 +475,7 @@ def main() -> None:
         # would masquerade as the first run)
         first = not _qend_calls
         _qend_calls.append(1)
+        queries_end.clear()  # a retry's medians replace the first run's
         total = 0.0
         for name in BENCH_QUERIES:
             d, _ = _run(inventory.REGISTRY[name], spark, sf_dir,
@@ -480,11 +484,10 @@ def main() -> None:
             short = name.split("_")[1]  # tpch_q1_pricing_summary -> q1
             if d["med"] is not None:
                 total += d["med"]
-                if first:
-                    # 2-decimal controls (r18): the control blocks
-                    # adjudicate >=10% drifts, where 10 ms resolution
-                    # is ample; full numbers stay in the stderr detail
-                    queries_end[short] = round(d["med"], 2)
+                # 2-decimal controls (r18): the control blocks
+                # adjudicate >=10% drifts, where 10 ms resolution is
+                # ample; full numbers stay in the stderr detail
+                queries_end[short] = round(d["med"], 2)
             print(f"# {name}_end: med={d['med']} runs={d['runs']}",
                   file=sys.stderr)
         return total
@@ -506,6 +509,7 @@ def main() -> None:
     def _rest_end_block() -> float:
         first = not _rend_calls
         _rend_calls.append(1)
+        rest_end.clear()  # a retry's medians replace the first run's
         total = 0.0
         for name, spec in sorted(inventory.REGISTRY.items()):
             if not name.startswith("tpch_") or name in BENCH_QUERIES:
@@ -515,8 +519,7 @@ def main() -> None:
             short = name.split("_")[1]
             if d["med"] is not None:
                 total += d["med"]
-                if first:
-                    rest_end[short] = round(d["med"], 2)
+                rest_end[short] = round(d["med"], 2)
             print(f"# {name}_end: med={d['med']} runs={d['runs']}",
                   file=sys.stderr)
         return total

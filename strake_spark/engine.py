@@ -21,7 +21,6 @@ sql/describe/trace/explain_tree/list_sources).
 from __future__ import annotations
 
 import contextlib
-import functools
 import logging
 import threading
 import time
@@ -40,31 +39,11 @@ from strake_spark.governance.limits import (
     plan_stats,
     run_with_timeout,
 )
+from strake_spark.plans import sqlast
 from strake_spark.session import build_session
 from strake_spark.sources.registry import bump_catalog_epoch, catalog_epoch, register_source
 
 log = logging.getLogger("strake_spark.engine")
-
-
-@functools.lru_cache(maxsize=1024)
-def _base_tables(query: str) -> tuple[tuple[str, str], ...] | None:
-    """(qualifier, name) of every base table a statement reads, CTE
-    names excluded; None when DuckDB cannot parse it. Memoized: the
-    answer depends on the text alone, and a parse costs milliseconds."""
-    from strake_spark.plans.federation import _cte_names, _serialize, _walk_base_tables
-
-    ast = _serialize(query)
-    if ast is None:
-        return None
-    refs: list[dict] = []
-    _walk_base_tables(ast, refs)
-    ctes = _cte_names(ast)
-    return tuple(
-        (".".join(filter(None, (n.get("catalog_name"), n.get("schema_name")))),
-         n["table_name"])
-        for n in refs
-        if n["table_name"].lower() not in ctes
-    )
 
 
 @dataclass
@@ -113,12 +92,7 @@ class StrakeEngine:
         self._view_source: dict[str, str] = {}
         from collections import Counter, deque
 
-        from strake_spark.plans.federation import _serialize
-
-        # open the planner's shared DuckDB connection on this thread:
-        # opened first on a Flight/REST handler thread, DuckDB crashes
-        # the process after a few statements
-        _serialize("SELECT 1")
+        sqlast.connect()
 
         # bounded: a long-lived server must not grow its log forever;
         # 10k entries keeps impact()/query_log() useful while capping
@@ -215,7 +189,7 @@ class StrakeEngine:
     def _touched_sources(self, query: str) -> tuple[str, ...]:
         """Sources whose views a statement references (AST-derived;
         empty when unparseable — global admission still applies)."""
-        return self._sources_of(_base_tables(query))
+        return self._sources_of(sqlast.table_refs(query))
 
     def _sources_of(self, tables) -> tuple[str, ...]:
         return tuple(sorted({self._view_source[v] for v in self._views_in(tables)}))
@@ -353,7 +327,7 @@ class StrakeEngine:
         which the TTL governs as it does for plan keys."""
         ensure_select(query)
         governed = self._policies.rewrite(query, user) if self._policies is not None else query
-        tables = _base_tables(query)
+        tables = sqlast.table_refs(query)
         prep = PreparedStatement(
             query, user, params, governed, self._sources_of(tables), catalog_epoch()
         )
@@ -478,7 +452,7 @@ class StrakeEngine:
     def _referenced_views(self, query: str) -> tuple[str, ...]:
         """Registered view names a statement references (AST-derived;
         empty when unparseable — same posture as _touched_sources)."""
-        return self._views_in(_base_tables(query))
+        return self._views_in(sqlast.table_refs(query))
 
     def _views_in(self, tables) -> tuple[str, ...]:
         out: set[str] = set()

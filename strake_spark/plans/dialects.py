@@ -8,10 +8,10 @@ Oracle (dialects/oracle.rs:60-270, ~40 rules) and Snowflake
 supports_values_clause, requires_from_dual, map_* hooks).
 
 Here the mapper operates on the serialized SQL AST the federation
-planner already holds (plans/federation.py): FUNCTION nodes are renamed
+planner already holds (plans/sqlast.py): FUNCTION nodes are renamed
 per target dialect *before* deserialization, so the rename survives
 arbitrary nesting without touching string literals. Post-deserialize
-textual fixes (federation._DIALECT_FIXES) handle the few spellings that
+textual fixes (``DialectRules.fix_text``) handle the few spellings that
 are not function names (count_star(), quoting style).
 
 Oracle/Snowflake rules are shipped for unparser parity and covered by
@@ -22,6 +22,9 @@ container has no such endpoints to execute against.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+
+from strake_spark.plans import sqlast
+from strake_spark.plans.sqlast import _split_literals
 
 
 @dataclass(frozen=True)
@@ -53,34 +56,6 @@ class DialectRules:
                     seg = seg.replace(old, new)
             out.append(seg)
         return "".join(out)
-
-
-def _split_literals(sql: str):
-    """Split SQL text into alternating (segment, is_literal) pieces.
-    Literals are single-quoted with '' escaping (the only literal form
-    our unparser emits); they are yielded verbatim including quotes. An
-    unterminated literal swallows the rest of the text as literal —
-    conservative for a rewriter."""
-    i, n, start = 0, len(sql), 0
-    while i < n:
-        if sql[i] != "'":
-            i += 1
-            continue
-        if i > start:
-            yield sql[start:i], False
-        j = i + 1
-        while j < n:
-            if sql[j] == "'":
-                if j + 1 < n and sql[j + 1] == "'":
-                    j += 2  # escaped quote stays inside the literal
-                    continue
-                break
-            j += 1
-        end = min(j, n - 1)
-        yield sql[i:end + 1], True
-        i = start = end + 1
-    if start < n:
-        yield sql[start:], False
 
 
 # Oracle rule set per dialects/oracle.rs:60-270
@@ -151,13 +126,11 @@ def rules_for(dialect: str) -> DialectRules:
 def transpile(sql: str, rules: DialectRules) -> str | None:
     """Full transform for goldens/tools: parse -> AST function renames
     -> deserialize -> text fixes. None when unparseable."""
-    from strake_spark.plans.federation import _deserialize, _serialize
-
-    ast = _serialize(sql)
+    ast = sqlast.parse(sql)
     if ast is None:
         return None
     rename_functions(ast, rules)
-    out = _deserialize(ast)
+    out = sqlast.unparse(ast)
     return None if out is None else rules.fix_text(out)
 
 
@@ -166,17 +139,8 @@ def rename_functions(ast, rules: DialectRules) -> None:
     nesting-safe and literal-safe because it never touches text."""
     if not rules.function_renames:
         return
-
-    def walk(node):
-        if isinstance(node, dict):
-            if node.get("class") == "FUNCTION" and "function_name" in node:
-                new = rules.function_renames.get(str(node["function_name"]).lower())
-                if new:
-                    node["function_name"] = new
-            for v in node.values():
-                walk(v)
-        elif isinstance(node, list):
-            for v in node:
-                walk(v)
-
-    walk(ast)
+    for node in sqlast.nodes(ast):
+        if node.get("class") == "FUNCTION" and "function_name" in node:
+            new = rules.function_renames.get(str(node["function_name"]).lower())
+            if new:
+                node["function_name"] = new

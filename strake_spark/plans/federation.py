@@ -13,15 +13,16 @@ engine, so only the (small) result crosses the wire instead of the
 
 Spark-first design:
 
-- **Parse, don't regex.** DuckDB's ``json_serialize_sql`` gives a full
-  SQL AST; we walk it for base-table references (minus CTE names) and
-  map each through the source registry's ``REMOTE_TABLES`` provenance.
+- **Parse, don't regex.** DuckDB's parser gives a full SQL AST, read
+  once per statement through plans/sqlast.py; we walk it for
+  base-table references (minus CTE names) and map each through the
+  source registry's ``REMOTE_TABLES`` provenance.
 - **Whole-statement pushdown** when every referenced table resolves to
   one remote context: rewrite view names -> remote table names by
-  mutating the AST and deserializing back to SQL
-  (``json_deserialize_sql``), then execute via the source's own
-  DataSource ``query`` option. The remote engine does the join/agg; the
-  Spark scan sees only the result rows.
+  mutating the AST and deserializing back to SQL (``sqlast.unparse``),
+  then execute via the source's own DataSource ``query`` option. The
+  remote engine does the join/agg; the Spark scan sees only the result
+  rows.
 - **Graceful degradation**: mixed-source or unparseable queries run on
   Spark, where each scan still gets per-source filter/column pushdown
   (pushsql.py) — the same split as the reference's LocalExecution path
@@ -35,109 +36,37 @@ join-then-aggregate that reduces 10^9 rows to 10^3 should ship 10^3.
 
 from __future__ import annotations
 
-import json
 import logging
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from strake_spark.plans import sqlast
+from strake_spark.plans.dialects import rename_functions, rules_for
 from strake_spark.sources.registry import REMOTE_TABLES, RemoteTable
 
 log = logging.getLogger("strake_spark.federation")
 
-def apply_dialect_fixes(sql: str, dialect: str) -> str:
-    """Post-unparse textual fixes (count_star(), quoting style, the
-    COALESCE-family spellings) — see plans/dialects.py, the reference's
-    FunctionMapper layer."""
-    from strake_spark.plans.dialects import rules_for
 
-    return rules_for(dialect).fix_text(sql)
-
-
-_ast_lock = __import__("threading").Lock()
-_ast_con: object | None = None
-
-
-def _ast_execute(stmt: str, params: list) -> object:
-    """Run one AST (de)serialization statement on a single lock-guarded
-    shared in-memory DuckDB connection. The planning ladder calls
-    serialize/deserialize several times per statement (whole-statement,
-    subtree, iceberg, partial rungs); a fresh connect() costs ~8 ms,
-    dominating parse time. A shared connection (not threading.local):
-    the REST server is thread-per-request, so per-thread caching never
-    amortized there and cleanup depended on thread death + GC — one
-    global connection amortizes across requests and has an explicit
-    lifecycle. (De)serialization statements are cheap, so the lock is
-    not a contention point. On error the connection is closed and
-    forgotten (it may be poisoned); the next call rebuilds lazily."""
-    global _ast_con
-    import duckdb
-
-    with _ast_lock:
-        if _ast_con is None:
-            _ast_con = duckdb.connect()
-        try:
-            return _ast_con.execute(stmt, params).fetchone()[0]
-        except Exception:
-            con, _ast_con = _ast_con, None
-            try:
-                con.close()
-            except Exception:
-                pass
-            raise
-
-
-def _serialize(sql: str) -> dict | None:
-    """Spark-SQL text -> DuckDB JSON AST (None if DuckDB can't parse it —
-    that alone disqualifies pushdown, not execution)."""
-    try:
-        raw = _ast_execute("SELECT json_serialize_sql(?::VARCHAR)", [sql])
-        ast = json.loads(raw)
-        if ast.get("error"):
-            return None
-        return ast
-    except Exception:
-        return None
-
-
-def _deserialize(ast: dict) -> str | None:
-    try:
-        return _ast_execute("SELECT json_deserialize_sql(?::JSON)", [json.dumps(ast)])
-    except Exception:
-        return None
-
-
-def _walk_base_tables(node, out: list[dict]) -> None:
-    """Collect every BASE_TABLE node dict (mutable references into the AST)."""
-    if isinstance(node, dict):
-        if node.get("type") == "BASE_TABLE" and "table_name" in node:
-            out.append(node)
-        for v in node.values():
-            _walk_base_tables(v, out)
-    elif isinstance(node, list):
-        for v in node:
-            _walk_base_tables(v, out)
-
-
-def _cte_names(ast: dict) -> set[str]:
-    names: set[str] = set()
-
-    def walk(node):
-        if isinstance(node, dict):
-            cte = node.get("cte_map")
-            if isinstance(cte, dict):
-                for entry in cte.get("map", []):
-                    k = entry.get("key")
-                    if k:
-                        names.add(k.lower())
-            for v in node.values():
-                walk(v)
-        elif isinstance(node, list):
-            for v in node:
-                walk(v)
-
-    walk(ast)
-    return names
+def resolve_remotes(
+    refs: list[dict], ctes: set[str] = frozenset()
+) -> tuple[list[tuple[dict, RemoteTable]], list[str]]:
+    """Resolve BASE_TABLE nodes through the source registry's remote
+    provenance: (node, RemoteTable) for each remote-backed view, and the
+    names of the local rest, in walk order. References to ``ctes`` are
+    neither."""
+    remotes: list[tuple[dict, RemoteTable]] = []
+    local: list[str] = []
+    for node in refs:
+        name = node["table_name"]
+        if name.lower() in ctes:
+            continue
+        remote = REMOTE_TABLES.get(name) or REMOTE_TABLES.get(name.lower())
+        if remote is None:
+            local.append(name)
+        else:
+            remotes.append((node, remote))
+    return remotes, local
 
 
 def _rewrite_remote_ref(node: dict, remote: RemoteTable) -> bool:
@@ -167,7 +96,7 @@ def _rewrite_remote_ref(node: dict, remote: RemoteTable) -> bool:
         f"SELECT {', '.join(quote_ident(c) for c in strict_cols)} "
         f"FROM {quote_ident(remote.table)}"
     )
-    ast = _serialize(inner)
+    ast = sqlast.parse(inner)
     if ast is None:  # pragma: no cover - quoted idents always parse
         return False
     alias = node.get("alias") or name
@@ -210,35 +139,24 @@ def analyze(sql: str, trace: list | None = None) -> PushdownPlan | None:
     if not REMOTE_TABLES:
         _note(trace, "whole_statement", "rejected", "no remote-backed views registered")
         return None
-    ast = _serialize(sql)
+    ast = sqlast.parse(sql)
     if ast is None:
         _note(trace, "whole_statement", "rejected",
               "statement not parseable for AST analysis")
         return None
-    refs: list[dict] = []
-    _walk_base_tables(ast, refs)
-    if not refs:
-        _note(trace, "whole_statement", "rejected", "no base-table references")
-        return None
-    ctes = _cte_names(ast)
-    remotes: list[tuple[dict, RemoteTable]] = []
-    contexts: set[str] = set()
-    for node in refs:
-        name = node["table_name"]
-        if name.lower() in ctes:
-            continue
-        remote = REMOTE_TABLES.get(name) or REMOTE_TABLES.get(name.lower())
-        if remote is None:
-            # a local table participates -> Spark executes
-            _note(trace, "whole_statement", "rejected",
-                  f"table {name!r} is not remote-backed")
-            return None
-        remotes.append((node, remote))
-        contexts.add(remote.context())
-    if not remotes:
+    remotes, local = resolve_remotes(sqlast.base_tables(ast))
+    if local:
+        # a local table participates -> Spark executes
         _note(trace, "whole_statement", "rejected",
-              "statement references only CTEs")
+              f"table {local[0]!r} is not remote-backed")
         return None
+    if not remotes:
+        only_ctes = any(n.get("type") == "BASE_TABLE" for n in sqlast.nodes(ast))
+        _note(trace, "whole_statement", "rejected",
+              "statement references only CTEs" if only_ctes
+              else "no base-table references")
+        return None
+    contexts = {remote.context() for _, remote in remotes}
     if len(contexts) != 1:
         _note(trace, "whole_statement", "rejected",
               f"tables span {len(contexts)} remote contexts: "
@@ -256,42 +174,15 @@ def analyze(sql: str, trace: list | None = None) -> PushdownPlan | None:
                   f"cannot build strict-contract guard for {node.get('table_name')!r}")
             return None  # can't build a strict-contract guard -> local
     # dialect function mapping happens on the AST (nesting/literal-safe)
-    from strake_spark.plans.dialects import rename_functions, rules_for
-
     rename_functions(ast, rules_for(rep.dialect))
-    pushed_sql = _deserialize(ast)
+    pushed_sql = sqlast.unparse(ast)
     if pushed_sql is None:
         _note(trace, "whole_statement", "rejected",
               "rewritten AST failed to deserialize to remote SQL")
         return None
-    pushed_sql = apply_dialect_fixes(pushed_sql, rep.dialect)
+    pushed_sql = rules_for(rep.dialect).fix_text(pushed_sql)
     _note(trace, "whole_statement", "pushed", f"to {rep.context()}")
     return PushdownPlan(remote=rep, rewritten_sql=pushed_sql, views=views)
-
-
-def referenced_remote_views(sql: str) -> set[str] | None:
-    """Remote views a statement references, or None when unparseable
-    (callers should then refresh conservatively)."""
-    ast = _serialize(sql)
-    if ast is None:
-        return None
-    refs: list[dict] = []
-    _walk_base_tables(ast, refs)
-    ctes = _cte_names(ast)
-    out: set[str] = set()
-    for node in refs:
-        name = node["table_name"]
-        if name.lower() in ctes:
-            continue
-        if name in REMOTE_TABLES:
-            out.add(name)
-        elif name.lower() in REMOTE_TABLES:
-            out.add(name.lower())
-    return out
-
-
-def execute_pushdown(spark: SparkSession, plan: PushdownPlan) -> DataFrame:
-    return plan.remote.push_query(spark, plan.rewritten_sql)
 
 
 def plan_sql(
@@ -320,7 +211,7 @@ def plan_sql(
     plan = analyze(sql, trace=trace)
     if plan is not None:
         try:
-            df = execute_pushdown(spark, plan)
+            df = plan.remote.push_query(spark, plan.rewritten_sql)
             # force schema resolution now so dialect errors surface here
             df.schema
             return df, plan
@@ -372,7 +263,6 @@ def plan_sql(
     ice_plan = None
     try:
         from strake_spark.plans.iceberg_prune import analyze_iceberg_prune
-        from strake_spark.plans.partial import _fix_for_spark
 
         ice = analyze_iceberg_prune(spark, sql)
         if ice is None:
@@ -385,7 +275,7 @@ def plan_sql(
             # — a deserializer artifact degrades to the unpruned plan,
             # never fails the query
             pruned_raw, plan_candidate = ice
-            pruned_spark = _fix_for_spark(pruned_raw)
+            pruned_spark = sqlast.fix_for_spark(pruned_raw)
             spark.sql(pruned_spark).schema
             sql, local_sql, ice_plan = pruned_raw, pruned_spark, plan_candidate
             _note(trace, "iceberg_prune", "applied",

@@ -12,8 +12,7 @@ file. This module restores file-level pruning for engine.sql queries:
 on an iceberg_native view re-plans the scan over only the files whose
 partition metadata can match, by
 
-1. parsing the statement (DuckDB AST, same machinery as
-   plans/partial.py),
+1. parsing the statement (DuckDB AST, plans/sqlast.py),
 2. extracting top-level WHERE conjuncts of shape
    ``col OP constant`` / ``col IN (constants)`` where ``col`` is a
    partition SOURCE column of a registered iceberg_native view
@@ -39,105 +38,70 @@ instead of just registration-time filters.
 
 from __future__ import annotations
 
-import decimal
 import hashlib
 import logging
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from strake_spark.plans import sqlast
+
 log = logging.getLogger("strake_spark.federation.iceberg_prune")
 
-_COMPARE_TO_OP = {
-    "COMPARE_EQUAL": "==",
-    "COMPARE_NOTEQUAL": "!=",
-    "COMPARE_LESSTHAN": "<",
-    "COMPARE_GREATERTHAN": ">",
-    "COMPARE_LESSTHANOREQUALTO": "<=",
-    "COMPARE_GREATERTHANOREQUALTO": ">=",
-}
+# the pruner's operator spelling for each comparison
+_PRUNER_OPS = {t: {"=": "==", "<>": "!="}.get(op, op) for t, op in sqlast.COMPARE_OPS.items()}
 _FLIP = {"<": ">", ">": "<", "<=": ">=", ">=": "<=", "==": "==", "!=": "!="}
-
-_NUMERIC_IDS = {
-    "TINYINT", "SMALLINT", "INTEGER", "BIGINT", "HUGEINT",
-    "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT", "FLOAT", "DOUBLE",
-}
 
 
 class _Skip(Exception):
     """Conjunct not usable for pruning (never an error — keep the file)."""
 
 
-def _const_py(node: dict):
+def _literal(node) -> object:
     """CONSTANT or CAST(CONSTANT AS DATE/TIMESTAMP/...) -> plain Python
     literal for the pruner. Date/timestamp casts keep the inner ISO
     string — iceberg_native._coerce_literal / _time_transform_value
     understand ISO text for date/timestamp-typed partition columns."""
-    if not isinstance(node, dict):
+    while (isinstance(node, dict) and node.get("class") == "CAST"
+           and node.get("type") == "OPERATOR_CAST"):
+        node = node.get("child") or {}
+    if not isinstance(node, dict) or node.get("class") != "CONSTANT":
         raise _Skip
-    if node.get("class") == "CAST" and node.get("type") == "OPERATOR_CAST":
-        inner = node.get("child") or {}
-        return _const_py(inner)
-    if node.get("class") != "CONSTANT":
-        raise _Skip
-    v = node.get("value") or {}
-    if v.get("is_null"):
+    try:
+        value, tid = sqlast.constant(node)
+    except ValueError:
+        raise _Skip from None
+    if value is None or tid == "BOOLEAN":
         raise _Skip  # col OP NULL keeps nothing; leave that to Spark
-    tid = ((v.get("type") or {}).get("id") or "").upper()
-    raw = v.get("value")
-    if tid == "DECIMAL":
-        info = (v.get("type") or {}).get("type_info") or {}
-        return float(decimal.Decimal(raw).scaleb(-int(info.get("scale", 0))))
-    if tid in _NUMERIC_IDS:
-        return raw
-    if tid == "VARCHAR":
-        return str(raw)
-    raise _Skip
-
-
-def _owned_col(node: dict, view_cols, alias: str, others: set[str]) -> str:
-    """COLUMN_REF -> column name when it unambiguously belongs to the
-    target view (qualified by its alias, or bare and not a column of
-    any other base table)."""
-    if not isinstance(node, dict) or node.get("class") != "COLUMN_REF":
-        raise _Skip
-    names = list(node.get("column_names", []))
-    if not names:
-        raise _Skip
-    if len(names) == 1:
-        col = names[0]
-        if col not in view_cols or col in others:
-            raise _Skip
-        return col
-    qual, col = names[-2], names[-1]
-    if qual.lower() != alias.lower() or col not in view_cols:
-        raise _Skip
-    return col
+    return float(value) if tid == "DECIMAL" else value
 
 
 def _extract_pred(node: dict, view_cols, alias: str, others: set[str]):
-    """One WHERE conjunct -> (col, op, literal) triple, or _Skip."""
+    """One WHERE conjunct -> (col, op, literal) triple, or _Skip. The
+    column must be a partition column the target view owns
+    (``sqlast.owned_column``)."""
+
+    def col(ref) -> str:
+        if not isinstance(ref, dict) or ref.get("class") != "COLUMN_REF":
+            raise _Skip
+        owned = sqlast.owned_column(ref.get("column_names", []), view_cols, alias, others)
+        if owned is None:
+            raise _Skip
+        return owned
+
     cls, typ = node.get("class"), node.get("type")
-    if cls == "COMPARISON" and typ in _COMPARE_TO_OP:
+    if cls == "COMPARISON" and typ in _PRUNER_OPS:
         left, right = node.get("left"), node.get("right")
-        op = _COMPARE_TO_OP[typ]
+        op = _PRUNER_OPS[typ]
         try:
-            col = _owned_col(left, view_cols, alias, others)
-            return (col, op, _const_py(right))
+            return (col(left), op, _literal(right))
         except _Skip:
-            col = _owned_col(right, view_cols, alias, others)
-            return (col, _FLIP[op], _const_py(left))
-    if cls == "OPERATOR" and typ == "COMPARE_IN":
-        ch = node.get("children", [])
-        if len(ch) >= 2:
-            col = _owned_col(ch[0], view_cols, alias, others)
-            return (col, "in", [_const_py(c) for c in ch[1:]])
-    if cls == "OPERATOR" and typ in ("OPERATOR_IS_NULL", "OPERATOR_IS_NOT_NULL"):
-        ch = node.get("children", [])
-        if len(ch) == 1:
-            col = _owned_col(ch[0], view_cols, alias, others)
-            return (col, "is_null" if typ == "OPERATOR_IS_NULL" else "not_null",
-                    None)
+            return (col(right), _FLIP[op], _literal(left))
+    ch = node.get("children", [])
+    if cls == "OPERATOR" and typ == "COMPARE_IN" and len(ch) >= 2:
+        return (col(ch[0]), "in", [_literal(c) for c in ch[1:]])
+    if cls == "OPERATOR" and typ in ("OPERATOR_IS_NULL", "OPERATOR_IS_NOT_NULL") and len(ch) == 1:
+        return (col(ch[0]), "is_null" if typ == "OPERATOR_IS_NULL" else "not_null", None)
     raise _Skip
 
 
@@ -202,12 +166,6 @@ def analyze_iceberg_prune(spark: SparkSession, sql: str):
     partition predicates; None otherwise. Never raises for analysis
     problems — pruning is an optimization, the original statement is
     always a correct plan."""
-    from strake_spark.plans.federation import _cte_names, _deserialize, _serialize
-    from strake_spark.plans.partial import (
-        _from_base_tables,
-        _split_conjuncts,
-        _top_select,
-    )
     from strake_spark.sources.iceberg_native import (
         ICEBERG_VIEWS,
         pruned_files_and_df,
@@ -215,22 +173,22 @@ def analyze_iceberg_prune(spark: SparkSession, sql: str):
 
     if not ICEBERG_VIEWS:
         return None
-    ast = _serialize(sql)
+    ast = sqlast.parse(sql)
     if ast is None:
         return None
-    select = _top_select(ast)
+    select = sqlast.top_select(ast)
     if select is None:
         return None
-    ctes = _cte_names(ast)
-    base_nodes = _from_base_tables(select.get("from_table"))
-    conjuncts = _split_conjuncts(select.get("where_clause"))
+    ctes = sqlast.cte_names(ast)
+    base_nodes = sqlast.from_tables(select)
+    conjuncts = sqlast.conjuncts(select.get("where_clause"))
     if not base_nodes or not conjuncts:
         return None
 
-    # bare-name ambiguity: columns owned by the OTHER base tables
+    # bare-name ambiguity: lower-cased columns of the OTHER base tables
     def cols_of(name: str) -> set[str]:
         try:
-            return set(spark.table(name).columns)
+            return {c.lower() for c in spark.table(name).columns}
         except Exception:  # noqa: BLE001 - unknown table: no claim
             return set()
 
@@ -271,22 +229,18 @@ def analyze_iceberg_prune(spark: SparkSession, sql: str):
             repr((name, info.snapshot_id, info.as_of_timestamp_ms, preds)).encode()
         ).hexdigest()[:10]
         temp = f"strake_iceprune_{digest}"
-        node["table_name"] = temp
-        if not node.get("alias"):
-            node["alias"] = name
-        if node.get("schema_name"):
-            node["schema_name"] = ""
+        sqlast.retarget(node, temp, name)
         scans.append((PrunedScan(name, temp, before, after, tuple(preds)), df))
 
     if not scans:
         return None
-    rewritten = _deserialize(ast)
+    rewritten = sqlast.unparse(ast)
     if rewritten is None:
         return None  # no views created yet: nothing leaks on abandon
     # NB: returned in DuckDB-parseable form (double-quoted identifiers
     # et al), NOT Spark form — the planning ladder may feed it back
     # through the AST machinery (partial pushdown); the caller applies
-    # plans.partial._fix_for_spark before handing it to spark.sql.
+    # sqlast.fix_for_spark before handing it to spark.sql.
     for s, df in scans:
         df.createOrReplaceTempView(s.temp_view)
         _remember_prune_view(spark, s.temp_view)

@@ -11,8 +11,8 @@ which registered view columns feed each output column. Uses:
 - impact analysis: which saved queries break if a source drops a column?
 - data contracts: verify a pipeline only reads the columns it declares.
 
-Resolution walks the DuckDB-serialized AST (the repo's established
-parse layer, plans/federation.py) with a scope chain: base tables
+Resolution walks the DuckDB-serialized AST (the planner's one parse
+layer, plans/sqlast.py) with a scope chain: base tables
 resolve through ``spark.table(name)`` schemas; derived tables and CTEs
 resolve recursively; set operations merge positionally. Output
 lineage is SELECT-clause (direct) lineage; the columns steering which
@@ -30,6 +30,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
+from strake_spark.plans import sqlast
+
 
 @dataclass
 class _Scope:
@@ -42,25 +44,17 @@ class _Scope:
     outputs: list[tuple[str, set[str]]] = field(default_factory=list)  # derived
 
 
-def _expr_column_refs(node, out: list[list[str]], subs: list[dict] | None = None) -> None:
+def _expr_column_refs(node, out: list[list[str]], subs: list[dict]) -> None:
     """Column refs in an expression tree; expression subqueries
     (scalar/IN/EXISTS) are NOT descended — they resolve against their
     own scopes — but are collected into ``subs`` so the caller can
     recurse with a fresh resolution (their outputs feed the enclosing
     expression; their internal filters land in the global filter set)."""
-    if isinstance(node, dict):
-        if node.get("type") == "COLUMN_REF" and node.get("column_names"):
-            out.append(list(node["column_names"]))
-        for k, v in node.items():
-            if k == "subquery" and isinstance(v, dict):
-                inner = v.get("node")
-                if subs is not None and isinstance(inner, dict):
-                    subs.append(inner)
-                continue
-            _expr_column_refs(v, out, subs)
-    elif isinstance(node, list):
-        for v in node:
-            _expr_column_refs(v, out, subs)
+    out.extend(sqlast.column_refs(node, skip={"subquery"}))
+    subs.extend(
+        n["subquery"]["node"] for n in sqlast.nodes(node, skip={"subquery"})
+        if isinstance(n.get("subquery"), dict) and isinstance(n["subquery"].get("node"), dict)
+    )
 
 
 class _Resolver:
@@ -227,9 +221,7 @@ def column_lineage(spark: SparkSession, sql: str) -> dict:
 
     Raises ValueError when the statement does not parse: an audit that
     cannot analyze must FAIL, not report all-clear."""
-    from strake_spark.plans.federation import _serialize
-
-    ast = _serialize(sql)
+    ast = sqlast.parse(sql)
     stmts = (ast or {}).get("statements") or []
     if not stmts:
         raise ValueError("lineage: statement did not parse")

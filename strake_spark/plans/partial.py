@@ -45,13 +45,14 @@ predicate — while staying provably equivalent to local execution.
 
 from __future__ import annotations
 
-import decimal
-import json
 import logging
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from strake_spark.plans import sqlast
+from strake_spark.plans.dialects import rules_for
+from strake_spark.plans.federation import resolve_remotes
 from strake_spark.sources.pushsql import quote_ident
 from strake_spark.sources.registry import REMOTE_TABLES, RemoteTable
 
@@ -64,47 +65,29 @@ class _NotPushable(Exception):
 
 # ------------------------------------------------------------- constants
 
-_NUMERIC_IDS = {
-    "TINYINT", "SMALLINT", "INTEGER", "BIGINT", "HUGEINT",
-    "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT",
-    "FLOAT", "DOUBLE", "DECIMAL",
-}
 _CAST_IDS = {"DATE", "TIMESTAMP", "TIMESTAMP WITH TIME ZONE", "TIME",
              "INTEGER", "BIGINT", "DOUBLE", "BOOLEAN", "VARCHAR"}
-
-_COMPARE_OPS = {
-    "COMPARE_EQUAL": "=",
-    "COMPARE_NOTEQUAL": "<>",
-    "COMPARE_LESSTHAN": "<",
-    "COMPARE_GREATERTHAN": ">",
-    "COMPARE_LESSTHANOREQUALTO": "<=",
-    "COMPARE_GREATERTHANOREQUALTO": ">=",
-}
 _INEQUALITY = {"COMPARE_LESSTHAN", "COMPARE_GREATERTHAN",
                "COMPARE_LESSTHANOREQUALTO", "COMPARE_GREATERTHANOREQUALTO"}
 
 
-def _const_info(node: dict) -> tuple[str, str]:
-    """CONSTANT node -> (sql_text, duck_type_id). Raises _NotPushable."""
-    v = node.get("value") or {}
-    tid = ((v.get("type") or {}).get("id") or "").upper()
-    if v.get("is_null"):
-        return "NULL", "NULL"
-    raw = v.get("value")
+def _const_sql(node: dict) -> str:
+    """CONSTANT node -> SQL literal text. Raises _NotPushable."""
+    try:
+        value, tid = sqlast.constant(node)
+    except ValueError as e:
+        raise _NotPushable(str(e)) from None
+    if tid == "NULL":
+        return "NULL"
     if tid == "BOOLEAN":
-        return ("TRUE" if raw else "FALSE"), tid
+        return "TRUE" if value else "FALSE"
     if tid == "DECIMAL":
-        info = (v.get("type") or {}).get("type_info") or {}
-        scale = int(info.get("scale", 0))
-        d = decimal.Decimal(raw).scaleb(-scale)
-        return format(d, "f"), tid
-    if tid in _NUMERIC_IDS:
-        return repr(raw), tid
+        return format(value, "f")
     if tid == "VARCHAR":
-        if "\x00" in str(raw):
+        if "\x00" in value:
             raise _NotPushable("NUL in literal")
-        return "'" + str(raw).replace("'", "''") + "'", tid
-    raise _NotPushable(f"constant type {tid}")
+        return "'" + value.replace("'", "''") + "'"
+    return repr(value)
 
 
 @dataclass
@@ -113,7 +96,7 @@ class _TableCtx:
     alias: str  # effective alias in the statement (alias or view name)
     remote: RemoteTable
     columns: set[str]
-    string_cols: set[str]  # columns with string dtype in the Spark schema
+    string_cols: set[str]  # lower-cased columns with string dtype in the Spark schema
     node: dict  # mutable BASE_TABLE node in the AST
 
 
@@ -123,7 +106,7 @@ class _ConjunctSql:
 
     def __init__(self, t: _TableCtx, others_cols: set[str]):
         self.t = t
-        self.others = others_cols  # columns owned by other tables (bare-name ambiguity)
+        self.others = others_cols  # lower-cased columns of other tables (bare-name ambiguity)
 
     def _no_strings(self, node) -> bool:
         """True iff the subtree provably involves NO string-typed operand
@@ -152,7 +135,7 @@ class _ConjunctSql:
             return self._no_strings(node.get("child"))
         if cls == "COLUMN_REF":
             names = node.get("column_names", [])
-            return bool(names) and names[-1] not in self.t.string_cols
+            return bool(names) and names[-1].lower() not in self.t.string_cols
         if cls == "FUNCTION" and node.get("function_name") in ("~~", "!~~"):
             return False
         for key in ("children", "left", "right", "child"):
@@ -171,7 +154,7 @@ class _ConjunctSql:
         if cls == "CONJUNCTION" and typ in ("CONJUNCTION_AND", "CONJUNCTION_OR"):
             op = " AND " if typ == "CONJUNCTION_AND" else " OR "
             return "(" + op.join(self.render(c) for c in node.get("children", [])) + ")"
-        if cls == "COMPARISON" and typ in _COMPARE_OPS:
+        if cls == "COMPARISON" and typ in sqlast.COMPARE_OPS:
             left, right = node["left"], node["right"]
             if typ in _INEQUALITY and not (
                 self._no_strings(left) and self._no_strings(right)
@@ -181,7 +164,7 @@ class _ConjunctSql:
                 self._no_strings(left) and self._no_strings(right)
             ):
                 raise _NotPushable("string <> (negation under-includes)")
-            return f"({self.render(left)} {_COMPARE_OPS[typ]} {self.render(right)})"
+            return f"({self.render(left)} {sqlast.COMPARE_OPS[typ]} {self.render(right)})"
         if cls == "OPERATOR":
             ch = node.get("children", [])
             if typ in ("COMPARE_IN", "COMPARE_NOT_IN") and len(ch) >= 2:
@@ -209,20 +192,13 @@ class _ConjunctSql:
                 raise _NotPushable("NOT LIKE (negation under-includes)")
             return f"({self.render(ch[0])} LIKE {self.render(ch[1])})"
         if cls == "COLUMN_REF":
-            names = [n for n in node.get("column_names", [])]
-            if not names:
-                raise _NotPushable("empty column ref")
-            if len(names) == 1:
-                col = names[0]
-                if col not in self.t.columns or col in self.others:
-                    raise _NotPushable(f"column {col} not uniquely owned")
-            else:
-                qual, col = names[-2], names[-1]
-                if qual.lower() != self.t.alias.lower() or col not in self.t.columns:
-                    raise _NotPushable(f"column {'.'.join(names)} not owned")
-            return quote_ident(names[-1])
+            names = node.get("column_names", [])
+            col = sqlast.owned_column(names, self.t.columns, self.t.alias, self.others)
+            if col is None:
+                raise _NotPushable(f"column {'.'.join(names)} not uniquely owned")
+            return quote_ident(col)
         if cls == "CONSTANT":
-            return _const_info(node)[0]
+            return _const_sql(node)
         if cls == "CAST" and typ == "OPERATOR_CAST":
             inner = node.get("child") or {}
             if inner.get("class") != "CONSTANT":
@@ -232,96 +208,6 @@ class _ConjunctSql:
                 raise _NotPushable(f"cast to {cast_id}")
             return f"CAST({self.render(inner)} AS {cast_id})"
         raise _NotPushable(f"node {cls}/{typ}")
-
-
-# ---------------------------------------------------------- AST walking
-
-
-def _top_select(ast: dict) -> dict | None:
-    stmts = ast.get("statements") or []
-    if len(stmts) != 1:
-        return None
-    node = stmts[0].get("node") or {}
-    if node.get("type") != "SELECT_NODE":
-        return None
-    return node
-
-
-def _from_base_tables(from_node) -> list[dict]:
-    """BASE_TABLE nodes that are DIRECT members of the top-level join
-    tree (never descends into subqueries — their scopes are separate)."""
-    out: list[dict] = []
-
-    def walk(n):
-        if not isinstance(n, dict):
-            return
-        t = n.get("type")
-        if t == "BASE_TABLE":
-            out.append(n)
-        elif t in ("JOIN", "CROSS_PRODUCT"):
-            walk(n.get("left"))
-            walk(n.get("right"))
-
-    walk(from_node)
-    return out
-
-
-def _split_conjuncts(where) -> list[dict]:
-    if not isinstance(where, dict):
-        return []
-    if where.get("class") == "CONJUNCTION" and where.get("type") == "CONJUNCTION_AND":
-        out = []
-        for c in where.get("children", []):
-            out.extend(_split_conjuncts(c))
-        return out
-    return [where]
-
-
-def _collect_column_refs(node, out: list[list[str]], stars: list[dict]) -> None:
-    if isinstance(node, dict):
-        if node.get("class") == "COLUMN_REF":
-            out.append(list(node.get("column_names", [])))
-        if "STAR" in str(node.get("class", "")):
-            stars.append(node)
-        for v in node.values():
-            _collect_column_refs(v, out, stars)
-    elif isinstance(node, list):
-        for v in node:
-            _collect_column_refs(v, out, stars)
-
-
-def _fix_for_spark(sql: str) -> str:
-    """DuckDB-isms in json_deserialize_sql output that Spark's parser
-    rejects (the local-dialect mirror of plans/dialects.fix_text).
-    Literal-aware for the same reason as fix_text: a user string
-    containing ' ~~ ' or 'count_star()' must survive verbatim.
-
-    Also converts double-quoted identifiers to backticks: the
-    deserializer quotes any identifier that is a DuckDB reserved word
-    (e.g. ``d."label"``), which Spark's parser rejects outside ANSI
-    double-quoted-identifier mode. Only non-literal segments are
-    touched, so double quotes inside string literals survive; an
-    escaped ``\"\"`` inside a quoted identifier unescapes to one ``"``
-    (backtick identifiers escape a literal backtick by doubling)."""
-    import re
-
-    from strake_spark.plans.dialects import _split_literals
-
-    def _ident_to_backtick(m: re.Match) -> str:
-        inner = m.group(1).replace('""', '"').replace("`", "``")
-        return f"`{inner}`"
-
-    out = []
-    for seg, is_literal in _split_literals(sql):
-        if not is_literal:
-            seg = (
-                seg.replace("count_star()", "count(*)")
-                .replace(" !~~ ", " NOT LIKE ")
-                .replace(" ~~ ", " LIKE ")
-            )
-            seg = re.sub(r'"((?:[^"]|"")*)"', _ident_to_backtick, seg)
-        out.append(seg)
-    return "".join(out)
 
 
 # -------------------------------------------------------------- planning
@@ -362,41 +248,23 @@ def analyze_partial(spark: SparkSession, sql: str):
     (rewritten_local_sql, PartialPlan) or None when nothing is pushable
     (all-local, fully-one-remote — the whole-statement path handles
     that — or no table gains a filter/projection)."""
-    from strake_spark.plans.federation import (
-        _cte_names,
-        _deserialize,
-        _serialize,
-        apply_dialect_fixes,
-    )
-
     if not REMOTE_TABLES:
         return None
-    ast = _serialize(sql)
+    ast = sqlast.parse(sql)
     if ast is None:
         return None
-    select = _top_select(ast)
+    select = sqlast.top_select(ast)
     if select is None:
         return None
-    ctes = _cte_names(ast)
-    base_nodes = _from_base_tables(select.get("from_table"))
+    base_nodes = sqlast.from_tables(select)
     if not base_nodes:
         return None
 
     tables: list[_TableCtx] = []
-    any_local = False
-    contexts: set[str] = set()
-    for node in base_nodes:
-        name = node.get("table_name", "")
-        if name.lower() in ctes:
-            any_local = True
-            continue
-        remote = REMOTE_TABLES.get(name) or REMOTE_TABLES.get(name.lower())
-        if remote is None:
-            any_local = True
-            continue
+    for node, remote in resolve_remotes(base_nodes, sqlast.cte_names(ast))[0]:
         if remote.push_query is None:
-            any_local = True
             continue
+        name = node["table_name"]
         try:
             # STRICT-CONTRACT GUARANTEE (structural): spark.table() is
             # deliberately the column authority here. Under a strict
@@ -416,39 +284,29 @@ def analyze_partial(spark: SparkSession, sql: str):
             return None
         cols = {c for c, _ in dtypes}
         string_cols = {
-            c for c, dt in dtypes
+            c.lower() for c, dt in dtypes
             if dt == "string" or dt.startswith(("varchar", "char"))
         }
         alias = node.get("alias") or name
         tables.append(_TableCtx(name, alias, remote, cols, string_cols, node))
-        contexts.add(remote.context())
     if not tables:
         return None
-    if not any_local and len(contexts) == 1:
+    if len(tables) == len(base_nodes) and len({t.remote.context() for t in tables}) == 1:
         return None  # fully one remote: whole-statement pushdown owns this
 
     # column refs + stars across the WHOLE statement (projection safety)
-    refs: list[list[str]] = []
-    stars: list[dict] = []
-    _collect_column_refs(select, refs, stars)
-
-    conjuncts = _split_conjuncts(select.get("where_clause"))
+    refs = sqlast.column_refs(select)
+    star = any("STAR" in str(n.get("class", "")) for n in sqlast.nodes(select))
+    conjuncts = sqlast.conjuncts(select.get("where_clause"))
 
     scans: list[PushedScan] = []
     for i, t in enumerate(tables):
-        others = set()
-        for o in tables:
-            if o is not t:
-                others |= o.columns
+        others = {c.lower() for o in tables if o is not t for c in o.columns}
         # projection: everything referenced that this table can own
-        needed: set[str] = set()
-        star = bool(stars)
-        for names in refs:
-            if len(names) == 1:
-                if names[0] in t.columns:
-                    needed.add(names[0])
-            elif names[-2].lower() == t.alias.lower() and names[-1] in t.columns:
-                needed.add(names[-1])
+        needed = {
+            col for names in refs
+            if (col := sqlast.owned_column(names, t.columns, t.alias)) is not None
+        }
         cols = sorted(t.columns) if star else sorted(needed)
         if not cols:
             cols = sorted(t.columns)
@@ -470,16 +328,10 @@ def analyze_partial(spark: SparkSession, sql: str):
         )
         if where_parts:
             remote_sql += " WHERE " + " AND ".join(where_parts)
-        remote_sql = apply_dialect_fixes(remote_sql, t.remote.dialect)
+        remote_sql = rules_for(t.remote.dialect).fix_text(remote_sql)
 
         temp = pushed_temp_name("strake_pushed", i, t.remote.context(), remote_sql)
-        # rewrite the AST ref: temp view stands in; alias pins the
-        # statement's own qualifier so column references keep resolving
-        t.node["table_name"] = temp
-        if not t.node.get("alias"):
-            t.node["alias"] = t.view
-        if t.node.get("schema_name"):
-            t.node["schema_name"] = ""
+        sqlast.retarget(t.node, temp, t.view)
         scans.append(
             PushedScan(view=t.view, temp_view=temp, remote_sql=remote_sql,
                        context=t.remote.context())
@@ -487,10 +339,10 @@ def analyze_partial(spark: SparkSession, sql: str):
 
     if not scans:
         return None
-    local_sql = _deserialize(ast)
+    local_sql = sqlast.unparse(ast)
     if local_sql is None:
         return None
-    local_sql = _fix_for_spark(local_sql)
+    local_sql = sqlast.fix_for_spark(local_sql)
     plan = PartialPlan(
         scans=tuple(scans),
         local_sql=sql,

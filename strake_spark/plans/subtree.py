@@ -37,12 +37,15 @@ same-source join-then-aggregate that reduces 10^9 rows to 10^3 ships
 from __future__ import annotations
 
 import copy
-import json
 import logging
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+from strake_spark.plans import sqlast
+from strake_spark.plans.dialects import rename_functions, rules_for
+from strake_spark.plans.federation import _rewrite_remote_ref, resolve_remotes
+from strake_spark.plans.partial import PushedScan, pushed_temp_name
 from strake_spark.sources.registry import REMOTE_TABLES, RemoteTable
 
 log = logging.getLogger("strake_spark.federation.subtree")
@@ -53,46 +56,6 @@ class SubtreeResult:
     duck_sql: str  # rewritten statement, DuckDB-parseable (ladder input)
     spark_sql: str  # same statement respelled for spark.sql
     scans: tuple  # PushedScan per shipped subtree
-
-
-def _walk_column_refs(node, out: list[list[str]]) -> None:
-    if isinstance(node, dict):
-        if node.get("type") == "COLUMN_REF" and node.get("column_names"):
-            out.append(list(node["column_names"]))
-        for v in node.values():
-            _walk_column_refs(v, out)
-    elif isinstance(node, list):
-        for v in node:
-            _walk_column_refs(v, out)
-
-
-def _walk_aliases(node, out: set[str]) -> None:
-    """Select-list aliases anywhere in the subtree (allowed unqualified
-    names: HAVING/ORDER BY may reference them)."""
-    if isinstance(node, dict):
-        if node.get("select_list"):
-            for e in node["select_list"]:
-                if isinstance(e, dict) and e.get("alias"):
-                    out.add(e["alias"].lower())
-        for v in node.values():
-            _walk_aliases(v, out)
-    elif isinstance(node, list):
-        for v in node:
-            _walk_aliases(v, out)
-
-
-def _inner_table_aliases(node, out: set[str]) -> None:
-    if isinstance(node, dict):
-        t = node.get("type")
-        if t == "BASE_TABLE" and node.get("table_name"):
-            out.add((node.get("alias") or node["table_name"]).lower())
-        elif t == "SUBQUERY" and node.get("alias"):
-            out.add(node["alias"].lower())
-        for v in node.values():
-            _inner_table_aliases(v, out)
-    elif isinstance(node, list):
-        for v in node:
-            _inner_table_aliases(v, out)
 
 
 _AGG_FUNCS = {
@@ -112,34 +75,14 @@ def _reduces(q_node: dict, n_tables: int) -> bool:
     push_query connection."""
     if n_tables > 1:
         return True
-
-    found = {"hit": False}
-
-    def walk(n):
-        if found["hit"]:
-            return
-        if isinstance(n, dict):
-            if n.get("group_expressions") or n.get("group_sets"):
-                found["hit"] = True
-                return
-            for m in n.get("modifiers", []) or []:
-                if m.get("type") in ("DISTINCT_MODIFIER", "LIMIT_MODIFIER"):
-                    found["hit"] = True
-                    return
-            if (
-                n.get("type") == "FUNCTION"
-                and n.get("function_name", "").lower() in _AGG_FUNCS
-            ):
-                found["hit"] = True
-                return
-            for v in n.values():
-                walk(v)
-        elif isinstance(n, list):
-            for v in n:
-                walk(v)
-
-    walk(q_node)
-    return found["hit"]
+    return any(
+        n.get("group_expressions") or n.get("group_sets")
+        or any(m.get("type") in ("DISTINCT_MODIFIER", "LIMIT_MODIFIER")
+               for m in n.get("modifiers", []) or [])
+        or (n.get("type") == "FUNCTION"
+            and n.get("function_name", "").lower() in _AGG_FUNCS)
+        for n in sqlast.nodes(q_node)
+    )
 
 
 def _try_push_subtree(
@@ -147,50 +90,36 @@ def _try_push_subtree(
 ) -> tuple[str, RemoteTable] | None:
     """If the subtree rooted at ``q_node`` is single-remote-source,
     scope-closed, and REDUCING, return (remote_sql, representative)."""
-    from strake_spark.plans.federation import (
-        _cte_names,
-        _deserialize,
-        _walk_base_tables,
-        apply_dialect_fixes,
-    )
-
-    refs: list[dict] = []
-    _walk_base_tables(q_node, refs)
-    inner_ctes = _cte_names({"wrap": q_node})
-    remotes: list[tuple[dict, RemoteTable]] = []
-    contexts: set[str] = set()
-    for node in refs:
-        name = node["table_name"]
-        low = name.lower()
-        if low in inner_ctes:
-            continue
-        if low in outer_ctes:
-            return None  # leans on an outer CTE -> local
-        remote = REMOTE_TABLES.get(name) or REMOTE_TABLES.get(low)
-        if remote is None or remote.push_query is None:
-            return None
-        remotes.append((node, remote))
-        contexts.add(remote.context())
-    if not remotes or len(contexts) != 1:
+    refs = sqlast.base_tables(q_node)
+    if any(node["table_name"].lower() in outer_ctes for node in refs):
+        return None  # leans on an outer CTE -> local
+    remotes, local = resolve_remotes(refs)
+    if local or not remotes or any(r.push_query is None for _, r in remotes):
+        return None
+    if len({r.context() for _, r in remotes}) != 1:
         return None
     if not _reduces(q_node, len(remotes)):
         return None
 
     # scope closure: qualified refs must use inner qualifiers; unqualified
     # refs must be known inner columns or select aliases
-    inner_quals: set[str] = set(inner_ctes)
-    _inner_table_aliases(q_node, inner_quals)
-    allowed_unqual: set[str] = set()
-    _walk_aliases(q_node, allowed_unqual)
-    for node, remote in remotes:
+    inner_quals = sqlast.cte_names(q_node) | {
+        (n.get("alias") or n.get("table_name")).lower() for n in sqlast.nodes(q_node)
+        if (n.get("type") == "BASE_TABLE" and n.get("table_name"))
+        or (n.get("type") == "SUBQUERY" and n.get("alias"))
+    }
+    # select-list aliases anywhere in the subtree (HAVING/ORDER BY may
+    # reference them unqualified)
+    allowed_unqual = {
+        e["alias"].lower() for n in sqlast.nodes(q_node)
+        for e in n.get("select_list") or [] if isinstance(e, dict) and e.get("alias")
+    }
+    for node, _ in remotes:
         try:
-            for c in spark.table(node["table_name"]).columns:
-                allowed_unqual.add(c.lower())
+            allowed_unqual.update(c.lower() for c in spark.table(node["table_name"]).columns)
         except Exception:
             return None
-    col_refs: list[list[str]] = []
-    _walk_column_refs(q_node, col_refs)
-    for names in col_refs:
+    for names in sqlast.column_refs(q_node):
         if len(names) >= 2:
             if names[-2].lower() not in inner_quals:
                 return None
@@ -199,48 +128,28 @@ def _try_push_subtree(
 
     rep = remotes[0][1]
     q_copy = copy.deepcopy(q_node)
-    refs2: list[dict] = []
-    _walk_base_tables(q_copy, refs2)
-    for node in refs2:
-        low = node["table_name"].lower()
-        if low in inner_ctes:
-            continue
-        remote = REMOTE_TABLES.get(node["table_name"]) or REMOTE_TABLES.get(low)
-        # strict-contract views become inline projected subqueries so
-        # the shipped subtree can't expose undeclared columns
-        from strake_spark.plans.federation import _rewrite_remote_ref
-
+    # strict-contract views become inline projected subqueries so the
+    # shipped subtree can't expose undeclared columns
+    for node, remote in resolve_remotes(sqlast.base_tables(q_copy))[0]:
         if not _rewrite_remote_ref(node, remote):
             return None
-    from strake_spark.plans.dialects import rename_functions, rules_for
-
     rename_functions(q_copy, rules_for(rep.dialect))
-    pushed = _deserialize({"error": False, "statements": [{"node": q_copy}]})
+    pushed = sqlast.unparse({"error": False, "statements": [{"node": q_copy}]})
     if pushed is None:
         return None
-    return apply_dialect_fixes(pushed, rep.dialect), rep
-
-
-def _select_star_node(temp: str) -> dict:
-    from strake_spark.plans.federation import _serialize
-
-    ast = _serialize(f"SELECT * FROM {temp}")
-    return ast["statements"][0]["node"]
+    return rules_for(rep.dialect).fix_text(pushed), rep
 
 
 def analyze_subtrees(spark: SparkSession, sql: str) -> SubtreeResult | None:
     """Find and ship maximal single-source CTEs / derived tables.
     Returns None when nothing ships (then the existing ladder applies
     unchanged)."""
-    from strake_spark.plans.federation import _cte_names, _deserialize, _serialize
-    from strake_spark.plans.partial import PushedScan, _fix_for_spark
-
     if not REMOTE_TABLES:
         return None
-    ast = _serialize(sql)
+    ast = sqlast.parse(sql)
     if ast is None:
         return None
-    all_ctes = _cte_names(ast)
+    all_ctes = sqlast.cte_names(ast)
     scans: list = []
 
     def visit(node) -> None:
@@ -254,7 +163,7 @@ def analyze_subtrees(spark: SparkSession, sql: str) -> SubtreeResult | None:
                         if hit is not None:
                             remote_sql, rep = hit
                             temp = _temp_name(len(scans), rep, remote_sql)
-                            q["node"] = _select_star_node(temp)
+                            q["node"] = sqlast.select_star(temp)
                             scans.append(
                                 PushedScan(view=entry["key"], temp_view=temp,
                                            remote_sql=remote_sql, context=rep.context())
@@ -276,20 +185,7 @@ def analyze_subtrees(spark: SparkSession, sql: str) -> SubtreeResult | None:
                         remote_sql, rep = hit
                         temp = _temp_name(len(scans), rep, remote_sql)
                         alias = node.get("alias") or temp
-                        colalias = node.get("column_name_alias") or []
-                        node.clear()
-                        node.update(
-                            {
-                                "type": "BASE_TABLE",
-                                "alias": alias,
-                                "sample": None,
-                                "query_location": 0,
-                                "schema_name": "",
-                                "table_name": temp,
-                                "column_name_alias": colalias,
-                                "catalog_name": "",
-                            }
-                        )
+                        sqlast.retarget(node, temp, alias)
                         scans.append(
                             PushedScan(view=alias, temp_view=temp,
                                        remote_sql=remote_sql, context=rep.context())
@@ -310,17 +206,15 @@ def analyze_subtrees(spark: SparkSession, sql: str) -> SubtreeResult | None:
     visit(ast)
     if not scans:
         return None
-    duck_sql = _deserialize(ast)
+    duck_sql = sqlast.unparse(ast)
     if duck_sql is None:
         return None
     return SubtreeResult(
-        duck_sql=duck_sql, spark_sql=_fix_for_spark(duck_sql), scans=tuple(scans)
+        duck_sql=duck_sql, spark_sql=sqlast.fix_for_spark(duck_sql), scans=tuple(scans)
     )
 
 
 def _temp_name(i: int, rep: RemoteTable, remote_sql: str) -> str:
-    from strake_spark.plans.partial import pushed_temp_name
-
     return pushed_temp_name("strake_sub", i, rep.context(), remote_sql)
 
 

@@ -79,6 +79,21 @@ class TestEndBlockRetry:
         assert "rend" not in retries  # pre=0.5, post=0.4: no cascade
         assert loads["rend"] == 0.4
 
+    @pytest.mark.parametrize("load, shipped", [(3.0, 15.73), (1.0, 35.38)])
+    def test_a_retried_block_ships_the_retry_total(self, monkeypatch, load, shipped):
+        """r20: `pipeline_total_end` shipped the contended 35.38 although
+        the retry had settled at 15.73. Without a retry the one reading
+        ships."""
+        import bench
+
+        monkeypatch.setattr(bench, "_LOAD_THRESHOLD", 2.0)
+        monkeypatch.setattr(bench, "_LOAD_BACKOFF", 0.0)
+        monkeypatch.setattr(bench, "_load", lambda: load)
+        totals = iter([35.38, 15.73])
+        retries: dict[str, float] = {}
+        assert bench._end_block("pend", lambda: next(totals), {}, retries) == shipped
+        assert retries == ({"pend": 15.73} if load > 2.0 else {})
+
 
 class TestProbeBackoff:
     @pytest.mark.parametrize("load, sleeps", [(2.5, [7.0]), (1.5, [])])

@@ -238,3 +238,23 @@ class TestPartialPushdown:
                GROUP BY n.n_name ORDER BY n.n_name"""
         )
         assert out.num_rows == 25
+
+
+class TestColumnCase:
+    """Spark resolves columns case-insensitively while the parsed
+    statement keeps the user's spelling: ownership matches without case
+    and the remote SQL names the schema's own column."""
+
+    def test_mixed_case_columns_are_owned(self, mixed):
+        sql = """SELECT c.C_NAME, n.n_name, c.c_acctbal
+                 FROM rm_customer c JOIN lc_nation n ON c.c_nationkey = n.n_nationkey
+                 WHERE c.C_ACCTBAL > 9000"""
+        trace: list = []
+        df, plan = plan_sql(mixed.spark, sql, trace=trace)
+        assert isinstance(plan, PartialPlan)
+        assert ("partial", "applied", "1 remote scan(s)") in trace
+        (scan,) = plan.scans
+        assert '"c_name"' in scan.remote_sql.split("FROM")[0]
+        assert '"c_acctbal" > 9000' in scan.remote_sql
+        assert "C_" not in scan.remote_sql
+        assert _rows(df) == _rows(mixed.spark.sql(sql))
