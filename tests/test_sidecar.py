@@ -78,9 +78,11 @@ class TestSupervision:
 
     def test_cooldown_breaker_after_max_retries(self):
         # a child that dies instantly, tiny backoff, max_retries=3:
-        # the supervisor must stop churning and record a cooldown
+        # the supervisor must stop churning and record a cooldown. A shell
+        # exit, not `python -c pass`: an interpreter start can outlast the
+        # 50 ms first health tick, whose healthy reading resets the breaker
         h = spawn_sidecar(
-            _cfg([sys.executable, "-c", "pass"], max_retries=3, cooldown_secs=30.0)
+            _cfg(["sh", "-c", "exit 0"], max_retries=3, cooldown_secs=30.0)
         )
         try:
             assert _wait_until(lambda: h.stats.cooldowns >= 1)

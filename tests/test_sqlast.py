@@ -32,7 +32,7 @@ class TestParse:
         """The memo is shared by every thread (REST is thread-per-request);
         each caller still gets its own tree."""
         texts = [f"SELECT x FROM t{i} JOIN u{i} ON true" for i in range(4)]
-        sqlast._parsed.cache_clear()
+        sqlast._raw.cache_clear()
         errors: list[str] = []
 
         def worker(k: int) -> None:
@@ -131,7 +131,8 @@ class TestOneParsePerStatement:
                 parses.append(params[0])
             return real(stmt, params)
 
-        sqlast._parsed.cache_clear()
+        sqlast._raw.cache_clear()
+        sqlast._refs.cache_clear()
         monkeypatch.setattr(sqlast, "_ast_execute", counting)
         assert remote_engine.execute(sql).num_rows > 0
         assert isinstance(remote_engine._last_pushdown, plan_type)
@@ -139,6 +140,24 @@ class TestOneParsePerStatement:
         assert len(parses) <= most, parses
         if most == 2:  # the subtree rung ran: its rewritten text is the second
             assert len(parses) == 2 and "strake_sub_" in parses[1]
+
+
+def test_engine_without_duckdb_runs_locally(spark, monkeypatch):
+    """DuckDB is a dev extra: without it the engine still builds, every
+    parse is None, and a statement runs locally."""
+    monkeypatch.setitem(sys.modules, "duckdb", None)
+    monkeypatch.setattr(sqlast, "_ast_con", None)
+    sqlast._raw.cache_clear()
+    sqlast._refs.cache_clear()
+    engine = ss.connect(
+        {"sources": [{"name": "sl", "type": "parquet", "url": SF_DIR,
+                      "tables": [{"name": "nation"}]}]},
+        spark=spark,
+    )
+    sql = "SELECT n_name FROM sl_nation WHERE n_regionkey = 1"
+    assert sqlast.parse(sql) is None and sqlast.table_refs(sql) is None
+    assert engine.execute(sql).num_rows == 5
+    assert sqlast._ast_con is None
 
 
 def test_only_sqlast_calls_duckdb_ast_functions():
