@@ -179,11 +179,6 @@ class _PgHandler(socketserver.BaseRequestHandler):
                     continue
                 sql = body.rstrip(b"\0").decode()
                 srv.queries.append(sql)
-                cached = srv.wire_cache.get(sql) if srv.wire_cache is not None else None
-                if cached is not None:
-                    self.request.sendall(cached)
-                    self._ready()
-                    continue
                 try:
                     rel = con.sql(sql)
                     names = rel.columns
@@ -227,10 +222,7 @@ class _PgHandler(socketserver.BaseRequestHandler):
                     buf.append(b"D" + struct.pack(">i", len(payload) + 4) + payload)
                 cmsg = f"SELECT {len(rows)}\0".encode()
                 buf.append(b"C" + struct.pack(">i", len(cmsg) + 4) + cmsg)
-                rendered = b"".join(buf)
-                if srv.wire_cache is not None:
-                    srv.wire_cache[sql] = rendered
-                self.request.sendall(rendered)
+                self.request.sendall(b"".join(buf))
                 self._ready()
         finally:
             con.close()
@@ -240,18 +232,13 @@ class FakePg(socketserver.ThreadingTCPServer):
     allow_reuse_address = True
     daemon_threads = True
 
-    def __init__(self, duck_path, users, auth_mode="md5", ssl_context=None,
-                 wire_cache: dict | None = None):
+    def __init__(self, duck_path, users, auth_mode="md5", ssl_context=None):
         super().__init__(("127.0.0.1", 0), _PgHandler)
         self.duck_path = duck_path
         self.users = users
         self.auth_mode = auth_mode
         self.ssl_context = ssl_context
         self.queries: list[str] = []
-        # when a dict is supplied, rendered resultset bytes are cached
-        # by SQL text — benchmarks then measure the CLIENT, not this
-        # Python fake's per-cell encode (tools/bench_wire_scan.py)
-        self.wire_cache = wire_cache
 
 
 _DUCK_TO_MYSQL_TYPE = {

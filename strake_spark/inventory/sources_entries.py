@@ -177,9 +177,10 @@ def _az_spool_for(sf_dir: str) -> str:
     ),
 )
 def source_sqlite_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from strake_spark.sources.sqlite import FORMAT_NAME, ensure_format
+    from strake_spark.sources.registry import ensure_format
+    from strake_spark.sources.sqlite import FORMAT_NAME, SQLiteDataSource
 
-    ensure_format(spark)
+    ensure_format(spark, SQLiteDataSource)
     df = (
         spark.read.format(FORMAT_NAME)
         .options(
@@ -237,9 +238,10 @@ def _sqlite_db_for(sf_dir: str) -> str:
     ),
 )
 def source_rest_paginated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from strake_spark.sources.rest import FORMAT_NAME, ensure_format
+    from strake_spark.sources.registry import ensure_format
+    from strake_spark.sources.rest import FORMAT_NAME, RestDataSource
 
-    ensure_format(spark)
+    ensure_format(spark, RestDataSource)
     endpoint = _fakes.rest_endpoint_for(sf_dir)
     df = (
         spark.read.format(FORMAT_NAME)
@@ -322,9 +324,10 @@ def _gs_view_for(spark: SparkSession, sf_dir: str) -> str:
 )
 def source_pg_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
     from strake_spark.inventory import _wire_fakes as W
-    from strake_spark.sources.pgwire import FORMAT_NAME, ensure_format
+    from strake_spark.sources.registry import ensure_format
+    from strake_spark.sources.pgwire import FORMAT_NAME, PgWireDataSource
 
-    ensure_format(spark)
+    ensure_format(spark, PgWireDataSource)
     srv = W.pg_server_for(sf_dir)
     df = (
         spark.read.format(FORMAT_NAME)
@@ -357,9 +360,10 @@ def source_pg_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def source_mysql_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
     from strake_spark.inventory import _wire_fakes as W
-    from strake_spark.sources.mysqlwire import FORMAT_NAME, ensure_format
+    from strake_spark.sources.registry import ensure_format
+    from strake_spark.sources.mysqlwire import FORMAT_NAME, MySqlDataSource
 
-    ensure_format(spark)
+    ensure_format(spark, MySqlDataSource)
     srv = W.my_server_for(sf_dir)
     df = (
         spark.read.format(FORMAT_NAME)
@@ -391,9 +395,10 @@ def source_mysql_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def source_clickhouse_http(spark: SparkSession, sf_dir: str) -> DataFrame:
     from strake_spark.inventory import _wire_fakes as W
-    from strake_spark.sources.clickhouse_http import FORMAT_NAME, ensure_format
+    from strake_spark.sources.registry import ensure_format
+    from strake_spark.sources.clickhouse_http import FORMAT_NAME, ClickHouseDataSource
 
-    ensure_format(spark)
+    ensure_format(spark, ClickHouseDataSource)
     srv = W.ch_server_for(sf_dir)
     df = (
         spark.read.format(FORMAT_NAME)
@@ -423,9 +428,10 @@ def source_clickhouse_http(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def source_duckdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     from strake_spark.inventory import _wire_fakes as W
-    from strake_spark.sources.duck import FORMAT_NAME, ensure_format
+    from strake_spark.sources.registry import ensure_format
+    from strake_spark.sources.duck import FORMAT_NAME, DuckDBDataSource
 
-    ensure_format(spark)
+    ensure_format(spark, DuckDBDataSource)
     df = (
         spark.read.format(FORMAT_NAME)
         .options(
@@ -454,9 +460,10 @@ def source_duckdb(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def source_flight(spark: SparkSession, sf_dir: str) -> DataFrame:
     from strake_spark.inventory import _wire_fakes as W
-    from strake_spark.sources.flight import FORMAT_NAME, ensure_format
+    from strake_spark.sources.registry import ensure_format
+    from strake_spark.sources.flight import FORMAT_NAME, FlightDataSource
 
-    ensure_format(spark)
+    ensure_format(spark, FlightDataSource)
     srv = W.flight_server_for(sf_dir)
     df = (
         spark.read.format(FORMAT_NAME)
@@ -575,9 +582,10 @@ def _xlsx_for(sf_dir: str) -> str:
 )
 def source_grpc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from strake_spark.inventory import _wire_fakes as W
-    from strake_spark.sources.grpc_source import FORMAT_NAME, ensure_format
+    from strake_spark.sources.registry import ensure_format
+    from strake_spark.sources.grpc_source import FORMAT_NAME, GrpcDataSource
 
-    ensure_format(spark)
+    ensure_format(spark, GrpcDataSource)
     srv = W.grpc_server_for(sf_dir)
     df = (
         spark.read.format(FORMAT_NAME)

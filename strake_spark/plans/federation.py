@@ -86,15 +86,14 @@ def _rewrite_remote_ref(node: dict, remote: RemoteTable) -> bool:
     strict_cols = STRICT_VIEWS.get(name) or STRICT_VIEWS.get(name.lower())
     if not strict_cols:
         node["table_name"] = remote.table
-        # drop any schema qualifier that named our view namespace
-        if node.get("schema_name"):
-            node["schema_name"] = ""
+        # the remote namespace replaces any qualifier that named our view
+        node["schema_name"] = remote.schema or ""
         return True
     from strake_spark.sources.pushsql import quote_ident
 
     inner = (
         f"SELECT {', '.join(quote_ident(c) for c in strict_cols)} "
-        f"FROM {quote_ident(remote.table)}"
+        f"FROM {remote.table_sql()}"
     )
     ast = sqlast.parse(inner)
     if ast is None:  # pragma: no cover - quoted idents always parse

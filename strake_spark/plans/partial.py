@@ -324,7 +324,7 @@ def analyze_partial(spark: SparkSession, sql: str):
 
         remote_sql = (
             f"SELECT {', '.join(quote_ident(c) for c in cols)} "
-            f"FROM {quote_ident(t.remote.table)}"
+            f"FROM {t.remote.table_sql()}"
         )
         if where_parts:
             remote_sql += " WHERE " + " AND ".join(where_parts)

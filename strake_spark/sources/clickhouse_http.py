@@ -33,7 +33,7 @@ from pyspark.sql.types import StructType
 from strake_spark.config import SourceConfig
 from strake_spark.errors import SourceError
 from strake_spark.sources import pushsql
-from strake_spark.sources.registry import RemoteTable, remember_remote, source_type
+from strake_spark.sources.registry import source_type
 
 FORMAT_NAME = "strake_clickhouse"
 
@@ -343,16 +343,9 @@ class ClickHouseReader(DataSourceReader):
         # kernels per chunk (see sources/textbatch.py); Spark ingests
         # the RecordBatches without per-row pickling. ClickHouse bool
         # text is 'true'/'false'.
-        from strake_spark.sources.textbatch import TextBatchBuilder
+        from strake_spark.sources.textbatch import text_batches
 
-        builder = TextBatchBuilder(self.schema, bool_style="word")
-        for cells in client.query_iter(sql):
-            batch = builder.add_row(cells)
-            if batch is not None:
-                yield batch
-        tail = builder.flush()
-        if tail is not None:
-            yield tail
+        yield from text_batches(self.schema, client.query_iter(sql))
 
 
 class ClickHouseDataSource(DataSource):
@@ -376,22 +369,10 @@ class ClickHouseDataSource(DataSource):
         return ClickHouseReader(self.options, schema)
 
 
-_REGISTERED: set[int] = set()
-
-
-def ensure_format(spark: SparkSession) -> None:
-    key = id(spark.sparkContext)
-    if key not in _REGISTERED:
-        spark.dataSource.register(ClickHouseDataSource)
-        _REGISTERED.add(key)
-
-
 @source_type("clickhouse_http", "clickhouse")
 def register_clickhouse_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
     """clickhouse routed by URL: http(s):// uses this jar-free HTTP
     interface; jdbc:/anything-else falls through to the JDBC path."""
-    from strake_spark.sources.file import view_name
-
     if not cfg.url:
         raise SourceError(f"clickhouse source {cfg.name!r} needs url")
     if not cfg.url.startswith(("http://", "https://")):
@@ -408,47 +389,9 @@ def register_clickhouse_source(spark: SparkSession, cfg: SourceConfig) -> list[s
     for opt in ("ssl_ca", "insecure"):
         if cfg.options.get(opt):
             base[opt] = str(cfg.options[opt])
-    registered: list[str] = []
-    for tbl in cfg.tables:
-        options = dict(base)
-        options["table"] = tbl.name
-        if tbl.partition_column:
-            options["partition_column"] = tbl.partition_column
-        # explicit num_partitions wins; otherwise a declared partition
-        # column defaults to the source's concurrency budget (same
-        # shape as the reference pool's max_concurrent_queries)
-        n_parts = cfg.options.get("num_partitions") or (
-            cfg.max_concurrent_queries if tbl.partition_column else None
-        )
-        if n_parts:
-            options["num_partitions"] = str(n_parts)
-        ensure_format(spark)
-        view = view_name(cfg.name, tbl.name)
-        df = spark.read.format(FORMAT_NAME).options(**options).load()
-        declared = tbl.struct_type()
-        if declared is not None:
-            from strake_spark.sources.drift import reconcile
-
-            df = reconcile(df, declared, context=view)
-        df.createOrReplaceTempView(view)
-
-        def push_query(spark: SparkSession, sql: str, _base=dict(base)):
-            return (
-                spark.read.format(FORMAT_NAME)
-                .options(**_base)
-                .option("query", sql)
-                .load()
-            )
-
-        remember_remote(
-            view,
-            RemoteTable(
-                cfg.name,
-                "clickhouse",
-                cfg.url,
-                tbl.name,
-                push_query=push_query,
-            ),
-        )
-        registered.append(view)
-    return registered
+    # a declared partition column defaults to the source's concurrency
+    # budget (same shape as the reference pool's max_concurrent_queries)
+    return pushsql.register_tables(
+        spark, cfg, ClickHouseDataSource, "clickhouse", base,
+        [t.name for t in cfg.tables], default_partitions=cfg.max_concurrent_queries,
+    )

@@ -10,8 +10,8 @@ Spark-first shape:
   DuckDB connection and streams Arrow record batches straight into the
   scan (no driver materialization), so a 1000-executor cluster fans out
   1000 concurrent range scans;
-- Catalyst filters arrive via ``pushFilters`` and become the remote
-  WHERE clause (crates' scan-level `supports_filters_pushdown` analog);
+- remote filtering comes from whole-statement federation pushdown or
+  an explicit ``where`` option, not ``pushFilters`` (see DuckDBReader);
 - a numeric ``partition_column`` splits the table into range partitions
   exactly like Spark's JDBC reader.
 """
@@ -27,7 +27,7 @@ from pyspark.sql.types import StructType
 from strake_spark.config import SourceConfig
 from strake_spark.errors import SourceError
 from strake_spark.sources import pushsql
-from strake_spark.sources.registry import RemoteTable, remember_remote, source_type
+from strake_spark.sources.registry import source_type
 
 FORMAT_NAME = "strake_duckdb"
 
@@ -127,16 +127,6 @@ class DuckDBDataSource(DataSource):
         return DuckDBReader(self.options, schema)
 
 
-_REGISTERED: set[int] = set()
-
-
-def ensure_format(spark: SparkSession) -> None:
-    key = id(spark.sparkContext)
-    if key not in _REGISTERED:
-        spark.dataSource.register(DuckDBDataSource)
-        _REGISTERED.add(key)
-
-
 def discover_tables(path: str) -> list[str]:
     con = _connect(path)
     try:
@@ -151,63 +141,9 @@ def discover_tables(path: str) -> list[str]:
 
 @source_type("duckdb")
 def register_duckdb_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
-    from strake_spark.sources.file import view_name
-
     if not cfg.url:
         raise SourceError(f"duckdb source {cfg.name!r} needs url (database file path)")
-    ensure_format(spark)
     names = [t.name for t in cfg.tables] or discover_tables(cfg.url)
-    declared = {t.name: t for t in cfg.tables}
-    registered: list[str] = []
-    for tname in names:
-        options = {"path": cfg.url, "table": tname}
-        tbl = declared.get(tname)
-        if tbl is not None and tbl.partition_column:
-            options["partition_column"] = tbl.partition_column
-            options["num_partitions"] = str(cfg.options.get("num_partitions", 8))
-        view = view_name(cfg.name, tname)
-        declared_schema = tbl.struct_type() if tbl is not None else None
-
-        def build(
-            spark: SparkSession,
-            known_schema=None,
-            _options=options,
-            _declared=declared_schema,
-            _view=view,
-            _tname=tname,
-        ):
-            reader = spark.read.format(FORMAT_NAME).options(**_options)
-            if known_schema is not None:
-                reader = reader.schema(known_schema)
-            df = reader.load()
-            schema = df.schema
-            if _declared is not None:
-                from strake_spark.sources.drift import reconcile
-
-                df = reconcile(df, _declared, context=_view)
-            df.createOrReplaceTempView(_view)
-            return schema
-
-        schema = build(spark)
-
-        def push_query(spark: SparkSession, sql: str, _url=cfg.url):
-            return (
-                spark.read.format(FORMAT_NAME)
-                .option("path", _url)
-                .option("query", sql)
-                .load()
-            )
-
-        remember_remote(
-            view,
-            RemoteTable(
-                cfg.name,
-                "duckdb",
-                cfg.url,
-                tname,
-                rebuild=lambda spark, _b=build, _s=schema: _b(spark, known_schema=_s),
-                push_query=push_query,
-            ),
-        )
-        registered.append(view)
-    return registered
+    return pushsql.register_tables(
+        spark, cfg, DuckDBDataSource, "duckdb", {"path": cfg.url}, names, default_partitions=8
+    )

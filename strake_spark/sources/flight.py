@@ -25,7 +25,7 @@ from pyspark.sql.types import StructType
 
 from strake_spark.config import SourceConfig
 from strake_spark.errors import SourceError
-from strake_spark.sources.registry import source_type
+from strake_spark.sources.registry import ensure_format, source_type
 
 FORMAT_NAME = "strake_flight"
 
@@ -122,23 +122,13 @@ class FlightDataSource(DataSource):
         return FlightReader(self.options, schema)
 
 
-_REGISTERED: set[int] = set()
-
-
-def ensure_format(spark: SparkSession) -> None:
-    key = id(spark.sparkContext)
-    if key not in _REGISTERED:
-        spark.dataSource.register(FlightDataSource)
-        _REGISTERED.add(key)
-
-
 @source_type("flight", "flight_sql")
 def register_flight_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
     from strake_spark.sources.file import view_name
 
     if not cfg.url:
         raise SourceError(f"flight source {cfg.name!r} needs url (grpc://host:port)")
-    ensure_format(spark)
+    ensure_format(spark, FlightDataSource)
     registered: list[str] = []
     for tbl in cfg.tables:
         options = {"location": cfg.url}

@@ -38,7 +38,7 @@ from pyspark.sql import SparkSession
 
 from strake_spark.config import SourceConfig
 from strake_spark.errors import SourceError
-from strake_spark.sources.registry import source_type
+from strake_spark.sources.registry import ensure_format, source_type
 
 # table -> (endpoint template, default query params,
 #           [(column, spark_type, dotted_path_or_None), ...])
@@ -179,7 +179,7 @@ _DEFAULT_TABLES = ("issues", "pulls", "commits")
 def register_github_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
     """Expand the preset into generic REST registrations."""
     from strake_spark.config import ColumnConfig, TableConfig
-    from strake_spark.sources.rest import FORMAT_NAME, ensure_format
+    from strake_spark.sources.rest import FORMAT_NAME, RestDataSource
     from strake_spark.sources.file import view_name
 
     base = (cfg.url or "https://api.github.com").rstrip("/")
@@ -190,7 +190,7 @@ def register_github_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
 
     wanted = [t.name for t in cfg.tables] or list(_DEFAULT_TABLES)
     table_cols = {t.name: t for t in cfg.tables}
-    ensure_format(spark)
+    ensure_format(spark, RestDataSource)
     registered: list[str] = []
     for name in wanted:
         if name in _GRAPHQL_TABLES:

@@ -28,7 +28,7 @@ from pyspark.sql.types import StructType
 
 from strake_spark.config import SourceConfig
 from strake_spark.errors import SourceError
-from strake_spark.sources.registry import source_type
+from strake_spark.sources.registry import ensure_format, source_type
 
 FORMAT_NAME = "strake_grpc"
 
@@ -229,23 +229,13 @@ class GrpcDataSource(DataSource):
         return GrpcReader(self.options, schema)
 
 
-_REGISTERED: set[int] = set()
-
-
-def ensure_format(spark: SparkSession) -> None:
-    key = id(spark.sparkContext)
-    if key not in _REGISTERED:
-        spark.dataSource.register(GrpcDataSource)
-        _REGISTERED.add(key)
-
-
 @source_type("grpc")
 def register_grpc_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
     from strake_spark.sources.file import view_name
 
     if not cfg.url:
         raise SourceError(f"grpc source {cfg.name!r} needs url (host:port)")
-    ensure_format(spark)
+    ensure_format(spark, GrpcDataSource)
     registered: list[str] = []
     for tbl in cfg.tables:
         if "fields" not in tbl.options or "method" not in tbl.options:

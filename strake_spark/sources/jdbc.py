@@ -78,43 +78,26 @@ def register_jdbc_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
             f"jdbc source {cfg.name!r} needs explicit tables (no discovery "
             "without a live connection)"
         )
+
+    def push_query(spark: SparkSession, sql: str):
+        return _reader(spark, cfg).option("query", sql).load()
+
     registered: list[str] = []
     for tbl in cfg.tables:
-        remote_name = f"{tbl.schema}.{tbl.name}" if tbl.schema else tbl.name
         view = view_name(cfg.name, tbl.name)
-
-        def build(
-            spark: SparkSession,
-            known_schema=None,
-            _cfg=cfg,
-            _remote=remote_name,
-            _tbl=tbl,
-            _view=view,
-        ):
-            reader = _reader(spark, _cfg).option("dbtable", _remote)
-            if _tbl.partition_column:
-                reader = (
-                    reader.option("partitionColumn", _tbl.partition_column)
-                    .option(
-                        "numPartitions",
-                        str(_cfg.options.get("num_partitions", 8)),
-                    )
-                    # bounds refreshed per registration; Spark requires them
-                    .option("lowerBound", str(_tbl.options.get("lower_bound", 0)))
-                    .option("upperBound", str(_tbl.options.get("upper_bound", 1 << 31)))
-                )
-            df = reader.load()
-            schema = df.schema
-            declared = _tbl.struct_type()
-            if declared is not None:
-                from strake_spark.sources.drift import reconcile
-
-                df = reconcile(df, declared, context=_view)
-            df.createOrReplaceTempView(_view)
-            return schema
-
+        reader = _reader(spark, cfg).option(
+            "dbtable", f"{tbl.schema}.{tbl.name}" if tbl.schema else tbl.name
+        )
+        if tbl.partition_column:
+            reader = (
+                reader.option("partitionColumn", tbl.partition_column)
+                .option("numPartitions", str(cfg.options.get("num_partitions", 8)))
+                # bounds refreshed per registration; Spark requires them
+                .option("lowerBound", str(tbl.options.get("lower_bound", 0)))
+                .option("upperBound", str(tbl.options.get("upper_bound", 1 << 31)))
+            )
         try:
-            build(spark)
+            df = reader.load()
         except Exception as e:
             if "ClassNotFoundException" in str(e) or "No suitable driver" in str(e):
                 raise SourceError(
@@ -122,17 +105,16 @@ def register_jdbc_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
                     f"the classpath; add the driver jar via spark.jars"
                 ) from e
             raise
-        def push_query(spark: SparkSession, sql: str, _cfg=cfg):
-            return _reader(spark, _cfg).option("query", sql).load()
+        declared = tbl.struct_type()
+        if declared is not None:
+            from strake_spark.sources.drift import reconcile
 
+            df = reconcile(df, declared, context=view)
+        df.createOrReplaceTempView(view)
         remember_remote(
             view,
             RemoteTable(
-                cfg.name,
-                cfg.type if cfg.type != "jdbc" else "jdbc",
-                jdbc_url(cfg),
-                remote_name,
-                rebuild=build,
+                cfg.name, cfg.type, jdbc_url(cfg), tbl.name, schema=tbl.schema,
                 push_query=push_query,
             ),
         )

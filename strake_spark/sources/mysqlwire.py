@@ -37,7 +37,7 @@ from pyspark.sql.types import StructType
 from strake_spark.config import SourceConfig
 from strake_spark.errors import SourceError
 from strake_spark.sources import pushsql
-from strake_spark.sources.registry import RemoteTable, remember_remote, source_type
+from strake_spark.sources.registry import source_type
 
 FORMAT_NAME = "strake_mysql"
 
@@ -450,16 +450,9 @@ class MySqlReader(DataSourceReader):
             # streamed + columnar: raw text cells parse inside Arrow's
             # cast kernels per chunk (see sources/textbatch.py); Spark
             # ingests the RecordBatches without per-row pickling
-            from strake_spark.sources.textbatch import TextBatchBuilder
+            from strake_spark.sources.textbatch import text_batches
 
-            builder = TextBatchBuilder(self.schema, bool_style="word")
-            for cells in con.query_iter(sql, raw=True):
-                batch = builder.add_row(cells)
-                if batch is not None:
-                    yield batch
-            tail = builder.flush()
-            if tail is not None:
-                yield tail
+            yield from text_batches(self.schema, con.query_iter(sql, raw=True))
         finally:
             con.close()
 
@@ -490,22 +483,10 @@ class MySqlDataSource(DataSource):
         return MySqlReader(self.options, schema)
 
 
-_REGISTERED: set[int] = set()
-
-
-def ensure_format(spark: SparkSession) -> None:
-    key = id(spark.sparkContext)
-    if key not in _REGISTERED:
-        spark.dataSource.register(MySqlDataSource)
-        _REGISTERED.add(key)
-
-
 @source_type("mysql_wire")
 def register_mysql_wire_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
     """mysql:// via the classic protocol. URL: mysql://host:3306/db."""
     from urllib.parse import urlparse
-
-    from strake_spark.sources.file import view_name
 
     if not cfg.url:
         raise SourceError(f"mysql_wire source {cfg.name!r} needs url")
@@ -522,47 +503,9 @@ def register_mysql_wire_source(spark: SparkSession, cfg: SourceConfig) -> list[s
         base["ssl_ca"] = str(cfg.options["ssl_ca"])
     if not cfg.tables:
         raise SourceError(f"mysql_wire source {cfg.name!r} declares no tables")
-    registered: list[str] = []
-    for tbl in cfg.tables:
-        options = dict(base)
-        options["table"] = tbl.name
-        if tbl.partition_column:
-            options["partition_column"] = tbl.partition_column
-        # explicit num_partitions wins; otherwise a declared partition
-        # column defaults to the source's concurrency budget (same
-        # shape as the reference pool's max_concurrent_queries)
-        n_parts = cfg.options.get("num_partitions") or (
-            cfg.max_concurrent_queries if tbl.partition_column else None
-        )
-        if n_parts:
-            options["num_partitions"] = str(n_parts)
-        ensure_format(spark)
-        view = view_name(cfg.name, tbl.name)
-        df = spark.read.format(FORMAT_NAME).options(**options).load()
-        declared = tbl.struct_type()
-        if declared is not None:
-            from strake_spark.sources.drift import reconcile
-
-            df = reconcile(df, declared, context=view)
-        df.createOrReplaceTempView(view)
-
-        def push_query(spark: SparkSession, sql: str, _base=dict(base)):
-            return (
-                spark.read.format(FORMAT_NAME)
-                .options(**_base)
-                .option("query", sql)
-                .load()
-            )
-
-        remember_remote(
-            view,
-            RemoteTable(
-                cfg.name,
-                "mysql",
-                cfg.url,
-                tbl.name,
-                push_query=push_query,
-            ),
-        )
-        registered.append(view)
-    return registered
+    # a declared partition column defaults to the source's concurrency
+    # budget (same shape as the reference pool's max_concurrent_queries)
+    return pushsql.register_tables(
+        spark, cfg, MySqlDataSource, "mysql", base,
+        [t.name for t in cfg.tables], default_partitions=cfg.max_concurrent_queries,
+    )

@@ -40,7 +40,7 @@ from pyspark.sql.types import StructType
 from strake_spark.config import SourceConfig
 from strake_spark.errors import SourceError
 from strake_spark.sources import pushsql
-from strake_spark.sources.registry import RemoteTable, remember_remote, source_type
+from strake_spark.sources.registry import source_type
 
 FORMAT_NAME = "strake_pgwire"
 
@@ -522,28 +522,13 @@ class PgWireReader(DataSourceReader):
         )
         con = _conn_from_options(self.options)
         try:
-            if str(self.options.get("arrow", "true")).lower() == "false":
-                # row-tuple escape hatch (and the A/B baseline for
-                # tools/bench_wire_scan.py): per-cell Python decode,
-                # per-row pickling — measured 1.4x slower than the
-                # Arrow path at 1M rows x 6 cols (the residual cost
-                # both paths share is v3 message framing in Python)
-                yield from con.query_iter(sql)
-                return
             # streamed + columnar: raw text cells accumulate per chunk
             # and parse inside Arrow's C++ cast kernels; Spark ingests
             # the RecordBatches directly (no per-row pickling). PG bool
             # text is 't'/'f'.
-            from strake_spark.sources.textbatch import TextBatchBuilder
+            from strake_spark.sources.textbatch import text_batches
 
-            builder = TextBatchBuilder(self.schema, bool_style="tf")
-            for cells in con.query_iter(sql, raw=True):
-                batch = builder.add_row(cells)
-                if batch is not None:
-                    yield batch
-            tail = builder.flush()
-            if tail is not None:
-                yield tail
+            yield from text_batches(self.schema, con.query_iter(sql, raw=True), bool_style="tf")
         finally:
             con.close()
 
@@ -572,23 +557,11 @@ class PgWireDataSource(DataSource):
         return PgWireReader(self.options, schema)
 
 
-_REGISTERED: set[int] = set()
-
-
-def ensure_format(spark: SparkSession) -> None:
-    key = id(spark.sparkContext)
-    if key not in _REGISTERED:
-        spark.dataSource.register(PgWireDataSource)
-        _REGISTERED.add(key)
-
-
 @source_type("postgres_wire")
 def register_pgwire_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
     """postgres:// via the wire protocol. URL: postgresql://host:port/db
     (credentials from cfg.username/password or options)."""
     from urllib.parse import urlparse
-
-    from strake_spark.sources.file import view_name
 
     if not cfg.url:
         raise SourceError(f"postgres_wire source {cfg.name!r} needs url")
@@ -605,48 +578,10 @@ def register_pgwire_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
         base["ssl_ca"] = str(cfg.options["ssl_ca"])
     if not cfg.tables:
         raise SourceError(f"postgres_wire source {cfg.name!r} declares no tables")
-    registered: list[str] = []
-    for tbl in cfg.tables:
-        options = dict(base)
-        options["table"] = tbl.name
-        if tbl.partition_column:
-            options["partition_column"] = tbl.partition_column
-        # explicit num_partitions wins; otherwise a declared partition
-        # column defaults to the source's concurrency budget — the same
-        # connections-per-scan shape the reference pool exposes
-        # (max_concurrent_queries, crates/common/src/config.rs:20-23)
-        n_parts = cfg.options.get("num_partitions") or (
-            cfg.max_concurrent_queries if tbl.partition_column else None
-        )
-        if n_parts:
-            options["num_partitions"] = str(n_parts)
-        ensure_format(spark)
-        view = view_name(cfg.name, tbl.name)
-        df = spark.read.format(FORMAT_NAME).options(**options).load()
-        declared = tbl.struct_type()
-        if declared is not None:
-            from strake_spark.sources.drift import reconcile
-
-            df = reconcile(df, declared, context=view)
-        df.createOrReplaceTempView(view)
-
-        def push_query(spark: SparkSession, sql: str, _base=dict(base)):
-            return (
-                spark.read.format(FORMAT_NAME)
-                .options(**_base)
-                .option("query", sql)
-                .load()
-            )
-
-        remember_remote(
-            view,
-            RemoteTable(
-                cfg.name,
-                "postgres",
-                cfg.url,
-                tbl.name,
-                push_query=push_query,
-            ),
-        )
-        registered.append(view)
-    return registered
+    # a declared partition column defaults to the source's concurrency
+    # budget: the same connections-per-scan shape the reference pool
+    # exposes (max_concurrent_queries, crates/common/src/config.rs:20-23)
+    return pushsql.register_tables(
+        spark, cfg, PgWireDataSource, "postgres", base,
+        [t.name for t in cfg.tables], default_partitions=cfg.max_concurrent_queries,
+    )

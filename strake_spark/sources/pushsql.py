@@ -17,6 +17,12 @@ mutable read plan per shared provider, so per-scan filter state corrupts
 self-joins and filtered-then-unfiltered sequences (see DuckDBReader).
 They serve explicit ``where`` options and will plug straight back into
 pushFilters when upstream keys the read plan by scan.
+
+``register_tables`` is the one registration path of these sources
+(duckdb, sqlite, postgres_wire, mysql_wire, clickhouse_http), like the
+reference's shared SQL-source module (crates/connectors/src/sources/
+sql/mod.rs): one view per table, and one ``push_query`` for the
+federation ladder.
 """
 
 from __future__ import annotations
@@ -24,7 +30,9 @@ from __future__ import annotations
 import datetime as _dt
 from dataclasses import dataclass
 
+from pyspark.sql import SparkSession
 from pyspark.sql.datasource import (
+    DataSource,
     EqualNullSafe,
     EqualTo,
     Filter,
@@ -41,6 +49,7 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 
+from strake_spark.config import SourceConfig
 from strake_spark.errors import SourceError
 
 _BAD_IDENT_CHARS = set('"\0;`\\')
@@ -206,3 +215,60 @@ def plan_ranges(column: str, lo, hi, n: int) -> list[RangePartition]:
         prev = b
     parts.append(RangePartition(column, prev, None))
     return parts
+
+
+def register_tables(
+    spark: SparkSession,
+    cfg: SourceConfig,
+    source_cls: type[DataSource],
+    dialect: str,
+    base: dict[str, str],
+    names: list[str],
+    default_partitions: int | None = None,
+) -> list[str]:
+    """Register view ``<source>_<table>`` for each of ``names`` over
+    ``source_cls`` and record it as a remote of ``dialect``. ``base``
+    holds the connection options that every scan and every pushed
+    statement share. A table with a declared ``partition_column`` reads
+    in the source's explicit ``num_partitions``, else in
+    ``default_partitions``; an explicit value applies without a column
+    too, for readers that split by an implicit key (sqlite's rowid).
+    Each table loads once; declared columns reconcile drift."""
+    from strake_spark.sources.drift import reconcile
+    from strake_spark.sources.file import view_name
+    from strake_spark.sources.registry import RemoteTable, ensure_format, remember_remote
+
+    for t in cfg.tables:
+        if t.schema:
+            # reading the bare name could hit another namespace's table
+            raise SourceError(
+                f"{cfg.type} source {cfg.name!r}: table {t.name!r} declares "
+                f"schema {t.schema!r}, but schema: is not supported for "
+                f"{cfg.type} sources"
+            )
+    ensure_format(spark, source_cls)
+    fmt = source_cls.name()
+
+    def push_query(spark: SparkSession, sql: str):
+        return spark.read.format(fmt).options(**base).option("query", sql).load()
+
+    declared = {t.name: t for t in cfg.tables}
+    registered: list[str] = []
+    for name in names:
+        tbl = declared.get(name)
+        column = tbl.partition_column if tbl is not None else None
+        options = dict(base, table=name)
+        if column:
+            options["partition_column"] = column
+        n_parts = cfg.options.get("num_partitions") or (default_partitions if column else None)
+        if n_parts:
+            options["num_partitions"] = str(n_parts)
+        view = view_name(cfg.name, name)
+        df = spark.read.format(fmt).options(**options).load()
+        columns = tbl.struct_type() if tbl is not None else None
+        if columns is not None:
+            df = reconcile(df, columns, context=view)
+        df.createOrReplaceTempView(view)
+        remember_remote(view, RemoteTable(cfg.name, dialect, cfg.url, name, push_query=push_query))
+        registered.append(view)
+    return registered

@@ -33,20 +33,13 @@ class RemoteTable:
     ``url`` play the role of the reference's SQLExecutor
     ``compute_context`` (connection identity,
     crates/connectors/src/sources/sql/postgres_federation.rs:46-49).
-
-    ``rebuild`` re-registers the view over a brand-new relation. Needed
-    because Spark's PythonDataSourceV2 caches its read plan on the
-    shared TableProvider instance and the filter-pushdown rule mutates
-    it (setReadInfo) — a query WITHOUT filters reuses the previous
-    query's pushed-filter read plan if the relation object is shared.
-    The engine refreshes referenced remote views before local execution
-    so every statement plans against a fresh provider."""
+    ``schema`` is the remote namespace of ``table``, when it has one."""
 
     source: str
     dialect: str
     url: str
     table: str
-    rebuild: Callable[[SparkSession], None] | None = None
+    schema: str | None = None
     # Executes one SQL statement INSIDE the remote engine, returning the
     # result as a DataFrame scan — the federation planner's vehicle for
     # whole-statement pushdown. None => this source can't push.
@@ -54,6 +47,13 @@ class RemoteTable:
 
     def context(self) -> str:
         return f"{self.dialect}://{self.url}"
+
+    def table_sql(self) -> str:
+        """The physical table as quoted SQL: ``"schema"."table"``."""
+        from strake_spark.sources.pushsql import quote_ident
+
+        parts = (self.schema, self.table) if self.schema else (self.table,)
+        return ".".join(quote_ident(p) for p in parts)
 
 
 # view name -> remote provenance (views without an entry are local files)
@@ -64,14 +64,18 @@ def remember_remote(view: str, remote: RemoteTable) -> None:
     REMOTE_TABLES[view] = remote
 
 
-def refresh_remote_views(spark: SparkSession, views=None) -> None:
-    """Re-register the given remote views (default: all) over fresh
-    relations, clearing any stale pushed-filter read plan."""
-    names = list(REMOTE_TABLES) if views is None else [v for v in views if v in REMOTE_TABLES]
-    for v in names:
-        rb = REMOTE_TABLES[v].rebuild
-        if rb is not None:
-            rb(spark)
+# (id(SparkContext), DataSource class) pairs already registered
+_FORMATS: set[tuple[int, type]] = set()
+
+
+def ensure_format(spark: SparkSession, cls: type) -> None:
+    """Register a Python DataSource class with the session's context,
+    once per context. The only caller of ``spark.dataSource.register``
+    in the package (a tier-1 test greps for it)."""
+    key = (id(spark.sparkContext), cls)
+    if key not in _FORMATS:
+        spark.dataSource.register(cls)
+        _FORMATS.add(key)
 
 
 def source_type(*names: str):

@@ -35,7 +35,7 @@ from pyspark.sql.types import StructType
 
 from strake_spark.config import SourceConfig
 from strake_spark.errors import SourceError
-from strake_spark.sources.registry import source_type
+from strake_spark.sources.registry import ensure_format, source_type
 
 FORMAT_NAME = "strake_rest"
 
@@ -478,16 +478,6 @@ class RestDataSource(DataSource):
         return RestReader(self.options, schema)
 
 
-_REGISTERED: set[int] = set()
-
-
-def ensure_format(spark: SparkSession) -> None:
-    key = id(spark.sparkContext)
-    if key not in _REGISTERED:
-        spark.dataSource.register(RestDataSource)
-        _REGISTERED.add(key)
-
-
 @dataclass(frozen=True)
 class _RestDefaults:
     """Source-level options inherited by each table."""
@@ -508,7 +498,7 @@ def register_rest_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
 
     if not cfg.url and not all(t.path for t in cfg.tables):
         raise SourceError(f"rest source {cfg.name!r} needs url or per-table paths")
-    ensure_format(spark)
+    ensure_format(spark, RestDataSource)
     registered: list[str] = []
     base = (cfg.url or "").rstrip("/")
     for tbl in cfg.tables:

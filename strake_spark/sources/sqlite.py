@@ -4,8 +4,8 @@ Reference: crates/connectors/src/sources/sql/sqlite.rs +
 sqlite_federation.rs (local-file DB registered as table providers).
 
 Executor-side scans (each partition opens its own read-only sqlite3
-connection), Catalyst filter pushdown into the remote WHERE clause, and
-``rowid``-range partitioning for parallel reads — rowid is SQLite's
+connection), remote filtering through federation pushdown (see
+SQLiteReader), and ``rowid``-range partitioning for parallel reads — rowid is SQLite's
 implicit integer PK, so a table splits into N contiguous slices without
 any schema cooperation.
 """
@@ -22,7 +22,7 @@ from pyspark.sql.types import StructType
 from strake_spark.config import SourceConfig
 from strake_spark.errors import SourceError
 from strake_spark.sources import pushsql
-from strake_spark.sources.registry import RemoteTable, remember_remote, source_type
+from strake_spark.sources.registry import source_type
 
 FORMAT_NAME = "strake_sqlite"
 
@@ -152,16 +152,6 @@ class SQLiteDataSource(DataSource):
         return SQLiteReader(self.options, schema)
 
 
-_REGISTERED: set[int] = set()
-
-
-def ensure_format(spark: SparkSession) -> None:
-    key = id(spark.sparkContext)
-    if key not in _REGISTERED:
-        spark.dataSource.register(SQLiteDataSource)
-        _REGISTERED.add(key)
-
-
 def discover_tables(path: str) -> list[str]:
     con = _connect(path)
     try:
@@ -176,65 +166,9 @@ def discover_tables(path: str) -> list[str]:
 
 @source_type("sqlite")
 def register_sqlite_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
-    from strake_spark.sources.file import view_name
-
     if not cfg.url:
         raise SourceError(f"sqlite source {cfg.name!r} needs url (database file path)")
-    ensure_format(spark)
     names = [t.name for t in cfg.tables] or discover_tables(cfg.url)
-    declared = {t.name: t for t in cfg.tables}
-    registered: list[str] = []
-    for tname in names:
-        options = {"path": cfg.url, "table": tname}
-        tbl = declared.get(tname)
-        if tbl is not None and tbl.partition_column:
-            options["partition_column"] = tbl.partition_column
-        n_parts = cfg.options.get("num_partitions")
-        if n_parts:
-            options["num_partitions"] = str(n_parts)
-        view = view_name(cfg.name, tname)
-        declared_schema = tbl.struct_type() if tbl is not None else None
-
-        def build(
-            spark: SparkSession,
-            known_schema=None,
-            _options=options,
-            _declared=declared_schema,
-            _view=view,
-            _tname=tname,
-        ):
-            reader = spark.read.format(FORMAT_NAME).options(**_options)
-            if known_schema is not None:
-                reader = reader.schema(known_schema)
-            df = reader.load()
-            schema = df.schema
-            if _declared is not None:
-                from strake_spark.sources.drift import reconcile
-
-                df = reconcile(df, _declared, context=_view)
-            df.createOrReplaceTempView(_view)
-            return schema
-
-        schema = build(spark)
-
-        def push_query(spark: SparkSession, sql: str, _url=cfg.url):
-            return (
-                spark.read.format(FORMAT_NAME)
-                .option("path", _url)
-                .option("query", sql)
-                .load()
-            )
-
-        remember_remote(
-            view,
-            RemoteTable(
-                cfg.name,
-                "sqlite",
-                cfg.url,
-                tname,
-                rebuild=lambda spark, _b=build, _s=schema: _b(spark, known_schema=_s),
-                push_query=push_query,
-            ),
-        )
-        registered.append(view)
-    return registered
+    return pushsql.register_tables(
+        spark, cfg, SQLiteDataSource, "sqlite", {"path": cfg.url}, names
+    )

@@ -24,7 +24,7 @@ selects the parse.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterable, Iterator, Sequence
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -67,19 +67,8 @@ def arrow_type(dt: T.DataType) -> pa.DataType:
 
 class TextBatchBuilder:
     """Accumulates rows of text cells (str | bytes | None) and emits
-    Arrow RecordBatches matching a Spark schema.
-
-    Usage (inside DataSourceReader.read):
-
-        builder = TextBatchBuilder(self.schema)
-        for cells in wire_rows:
-            batch = builder.add_row(cells)
-            if batch is not None:
-                yield batch
-        tail = builder.flush()
-        if tail is not None:
-            yield tail
-    """
+    Arrow RecordBatches matching a Spark schema. ``text_batches`` runs
+    the add_row/flush loop a DataSourceReader.read needs."""
 
     def __init__(self, schema: StructType, *, batch_rows: int = DEFAULT_BATCH_ROWS,
                  bool_style: str = "word"):
@@ -159,3 +148,16 @@ class TextBatchBuilder:
         # kernels (C++), including ISO dates and 'YYYY-MM-DD HH:MM:SS
         # [.ffffff][+TZ]' timestamps.
         return text.cast(typ)
+
+
+def text_batches(schema: StructType, rows: Iterable[Sequence], *,
+                 bool_style: str = "word") -> Iterator[pa.RecordBatch]:
+    """Stream ``rows`` of text cells as RecordBatches of ``schema``."""
+    builder = TextBatchBuilder(schema, bool_style=bool_style)
+    for cells in rows:
+        batch = builder.add_row(cells)
+        if batch is not None:
+            yield batch
+    tail = builder.flush()
+    if tail is not None:
+        yield tail

@@ -947,9 +947,10 @@ class TestRound18Additions:
         partitions — each executor task opens its own read-only
         connection against a rowid/key range slice."""
         from strake_spark.inventory.sources_entries import _sqlite_db_for
-        from strake_spark.sources.sqlite import FORMAT_NAME, ensure_format
+        from strake_spark.sources.registry import ensure_format
+        from strake_spark.sources.sqlite import FORMAT_NAME, SQLiteDataSource
 
-        ensure_format(spark)
+        ensure_format(spark, SQLiteDataSource)
         df = (
             spark.read.format(FORMAT_NAME)
             .options(
@@ -969,6 +970,7 @@ class TestRound18Additions:
         proven on all three protocol clients)."""
         from strake_spark.inventory import _wire_fakes as W
         from strake_spark.sources import clickhouse_http, mysqlwire, pgwire
+        from strake_spark.sources.registry import ensure_format
 
         for mod, opts in (
             (
@@ -995,7 +997,11 @@ class TestRound18Additions:
                 },
             ),
         ):
-            mod.ensure_format(spark)
+            ensure_format(spark, {
+                pgwire: pgwire.PgWireDataSource,
+                mysqlwire: mysqlwire.MySqlDataSource,
+                clickhouse_http: clickhouse_http.ClickHouseDataSource,
+            }[mod])
             df = (
                 spark.read.format(mod.FORMAT_NAME)
                 .options(
@@ -1015,8 +1021,9 @@ class TestRound18Additions:
         maps the server's 5 region-shard endpoints to 5 partitions."""
         from strake_spark.inventory import _wire_fakes as W
         from strake_spark.sources import duck, flight
+        from strake_spark.sources.registry import ensure_format
 
-        duck.ensure_format(spark)
+        ensure_format(spark, duck.DuckDBDataSource)
         df = (
             spark.read.format(duck.FORMAT_NAME)
             .options(
@@ -1029,7 +1036,7 @@ class TestRound18Additions:
         )
         assert df.rdd.getNumPartitions() == 4
 
-        flight.ensure_format(spark)
+        ensure_format(spark, flight.FlightDataSource)
         srv = W.flight_server_for(SF_DIR)
         df = (
             spark.read.format(flight.FORMAT_NAME)

@@ -220,8 +220,9 @@ class TestRestRetry:
         threading.Thread(target=srv.serve_forever, daemon=True).start()
         try:
             from strake_spark.sources import rest as rest_src
+            from strake_spark.sources.registry import ensure_format
 
-            rest_src.ensure_format(spark)
+            ensure_format(spark, rest_src.RestDataSource)
             df = (
                 spark.read.format(rest_src.FORMAT_NAME)
                 .option("url", f"http://127.0.0.1:{srv.server_port}/x")

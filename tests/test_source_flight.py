@@ -12,6 +12,7 @@ import pytest
 
 from strake_spark.config import parse_config
 from strake_spark.sources import flight as flight_src
+from strake_spark.sources.registry import ensure_format
 from strake_spark.sources.registry import register_source
 from tests.conftest import SF_DIR
 
@@ -91,7 +92,7 @@ def auth_server():
 
 class TestFlightSource:
     def test_path_descriptor_full_table(self, spark, flight_server):
-        flight_src.ensure_format(spark)
+        ensure_format(spark, flight_src.FlightDataSource)
         df = (
             spark.read.format(flight_src.FORMAT_NAME)
             .option("location", flight_server)
@@ -102,7 +103,7 @@ class TestFlightSource:
         assert set(df.columns) == {"n_nationkey", "n_name", "n_regionkey"}
 
     def test_multi_endpoint_maps_to_partitions(self, spark, flight_server):
-        flight_src.ensure_format(spark)
+        ensure_format(spark, flight_src.FlightDataSource)
         df = (
             spark.read.format(flight_src.FORMAT_NAME)
             .option("location", flight_server)
@@ -133,7 +134,7 @@ class TestFlightSource:
         assert n == 5
 
     def test_bearer_token_auth(self, spark, auth_server):
-        flight_src.ensure_format(spark)
+        ensure_format(spark, flight_src.FlightDataSource)
         df = (
             spark.read.format(flight_src.FORMAT_NAME)
             .option("location", auth_server)
@@ -144,7 +145,7 @@ class TestFlightSource:
         assert df.count() == 25
 
     def test_bad_token_rejected(self, spark, auth_server):
-        flight_src.ensure_format(spark)
+        ensure_format(spark, flight_src.FlightDataSource)
         with pytest.raises(Exception, match="(?i)unauthenticated|bad token"):
             (
                 spark.read.format(flight_src.FORMAT_NAME)

@@ -14,6 +14,7 @@ import pytest
 
 from strake_spark.config import parse_config
 from strake_spark.sources import rest as rest_src
+from strake_spark.sources.registry import ensure_format
 from strake_spark.sources.registry import register_source
 
 ROWS = [{"id": i, "name": f"item_{i}", "score": i * 1.5} for i in range(25)]
@@ -146,7 +147,7 @@ def server():
 
 
 def _load(spark, url, **options):
-    rest_src.ensure_format(spark)
+    ensure_format(spark, rest_src.RestDataSource)
     reader = spark.read.format(rest_src.FORMAT_NAME).option("url", url)
     for k, v in options.items():
         reader = reader.option(k, v)

@@ -13,7 +13,7 @@ import pytest
 from strake_spark.config import parse_config
 from strake_spark.sources import duck as duck_src
 from strake_spark.sources import sqlite as sqlite_src
-from strake_spark.sources.registry import REMOTE_TABLES, register_source
+from strake_spark.sources.registry import REMOTE_TABLES, ensure_format, register_source
 from tests.conftest import SF_DIR, compare_frames
 
 
@@ -55,7 +55,7 @@ def _expected(db_path: str, sql: str):
 
 class TestDuckDBSource:
     def test_full_scan_matches(self, spark, duck_db):
-        duck_src.ensure_format(spark)
+        ensure_format(spark, duck_src.DuckDBDataSource)
         df = (
             spark.read.format(duck_src.FORMAT_NAME)
             .option("path", duck_db)
@@ -65,7 +65,7 @@ class TestDuckDBSource:
         compare_frames(df.toPandas(), _expected(duck_db, "SELECT * FROM nation"))
 
     def test_filtered_scan_matches(self, spark, duck_db):
-        duck_src.ensure_format(spark)
+        ensure_format(spark, duck_src.DuckDBDataSource)
         df = (
             spark.read.format(duck_src.FORMAT_NAME)
             .option("path", duck_db)
@@ -80,7 +80,7 @@ class TestDuckDBSource:
         compare_frames(df.toPandas(), exp)
 
     def test_where_option_filters_remotely(self, spark, duck_db):
-        duck_src.ensure_format(spark)
+        ensure_format(spark, duck_src.DuckDBDataSource)
         df = (
             spark.read.format(duck_src.FORMAT_NAME)
             .option("path", duck_db)
@@ -95,7 +95,7 @@ class TestDuckDBSource:
         """Two scans of one view with different predicates must not share
         state (the PythonDataSourceV2 read-plan-cache hazard that made us
         drop pushFilters)."""
-        duck_src.ensure_format(spark)
+        ensure_format(spark, duck_src.DuckDBDataSource)
         (
             spark.read.format(duck_src.FORMAT_NAME)
             .option("path", duck_db)
@@ -111,7 +111,7 @@ class TestDuckDBSource:
         assert n == 25  # 5 nations in region 0 x 5 in region 4
 
     def test_partitioned_read_complete(self, spark, duck_db):
-        duck_src.ensure_format(spark)
+        ensure_format(spark, duck_src.DuckDBDataSource)
         df = (
             spark.read.format(duck_src.FORMAT_NAME)
             .option("path", duck_db)
@@ -128,7 +128,7 @@ class TestDuckDBSource:
         """A filter applied by one query must not bleed into the next
         scan of the same view (PythonDataSourceV2 read-plan-cache
         hazard)."""
-        duck_src.ensure_format(spark)
+        ensure_format(spark, duck_src.DuckDBDataSource)
         df = (
             spark.read.format(duck_src.FORMAT_NAME)
             .option("path", duck_db)
@@ -145,7 +145,7 @@ class TestDuckDBSource:
         assert n_again == n_all
 
     def test_query_option(self, spark, duck_db):
-        duck_src.ensure_format(spark)
+        ensure_format(spark, duck_src.DuckDBDataSource)
         q = "SELECT n_regionkey, count(*) AS n FROM nation GROUP BY n_regionkey"
         df = (
             spark.read.format(duck_src.FORMAT_NAME)
@@ -168,7 +168,7 @@ class TestDuckDBSource:
 
 class TestSQLiteSource:
     def test_full_scan_matches(self, spark, sqlite_db):
-        sqlite_src.ensure_format(spark)
+        ensure_format(spark, sqlite_src.SQLiteDataSource)
         df = (
             spark.read.format(sqlite_src.FORMAT_NAME)
             .option("path", sqlite_db)
@@ -183,7 +183,7 @@ class TestSQLiteSource:
         assert sorted(got.n_name) == sorted(exp.n_name)
 
     def test_filter_pushdown_and_partitions(self, spark, sqlite_db):
-        sqlite_src.ensure_format(spark)
+        ensure_format(spark, sqlite_src.SQLiteDataSource)
         df = (
             spark.read.format(sqlite_src.FORMAT_NAME)
             .option("path", sqlite_db)
