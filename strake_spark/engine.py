@@ -8,6 +8,12 @@ Mirrors the reference's FederationEngine lifecycle
     -> plan-key cache probe -> admission + breakers -> timed execution
     -> cache put
 
+Timed execution reads remote rows on the driver where it can: a
+statement pushed whole to a source with a driver ``fetch`` is answered
+by that source, with no Spark job, and each fragment a subtree or
+partial plan ships that fits in ``pushsql.FETCH_ROWS_MAX`` rows
+replaces its Spark scan with an in-memory relation.
+
 ``prepare`` runs everything up to the plan (or resolves a confirmed
 text key, skipping Catalyst); ``execute`` runs a prepared statement.
 A cache hit reads no source, so it is served before admission and the
@@ -41,6 +47,7 @@ from strake_spark.governance.limits import (
 )
 from strake_spark.plans import sqlast
 from strake_spark.session import build_session
+from strake_spark.sources import pushsql
 from strake_spark.sources.registry import bump_catalog_epoch, catalog_epoch, register_source
 
 log = logging.getLogger("strake_spark.engine")
@@ -65,6 +72,7 @@ class PreparedStatement:
     federation: list[tuple[str, str, str]] = field(default_factory=list)
     plan_key: str | None = None
     schema: Any = None  # pyarrow.Schema of the result, when known
+    limit: int | None = None  # the defensive limit the plan applies
 
     def arrow_schema(self):
         if self.schema is None:
@@ -300,10 +308,18 @@ class StrakeEngine:
             if classified is not None:
                 raise classified from e
             raise
-        df = apply_defensive_limit(df, self.config.query_limits)
-        check_cost(df, self.config.query_limits)
+        limits = self.config.query_limits
+        limited = apply_defensive_limit(df, limits)
+        # the cost gate keeps Spark's estimate of the capped plan: a
+        # pushed relation carries no statistics, and the cap bounds it
+        check_cost(limited, limits)
+        if limited is not df and local.pushdown is not None and sqlast.bounded(query):
+            # a rung rewrote the statement, so Spark sees an opaque
+            # remote relation; the skip list reads the statement as written
+            limited = df
+        local.limit = limits.default_limit if limited is not df else None
         self._metrics["queries_planned"] += 1
-        return df
+        return limited
 
     def prepare(
         self,
@@ -353,6 +369,7 @@ class StrakeEngine:
         prep.df = self.sql(prep.governed_sql, params=prep.params)
         prep.pushdown = self._last_pushdown
         prep.federation = self._last_federation_trace
+        prep.limit = self._plan_local.limit
         prep.plan_key = prep.schema = None
         return prep
 
@@ -520,10 +537,7 @@ class StrakeEngine:
                 if not entered:
                     envelope.enter_context(self._envelope(prep.sources, user))
                 with self.tracer.span("query.run"):
-                    table = run_with_timeout(
-                        prep.df, lambda d: d.toArrow(),
-                        self.config.query_limits.query_timeout_seconds,
-                    )
+                    table = self._run(prep)
         if hit is None:
             self._check_row_cap(table.num_rows)
             if cache is not None:
@@ -534,6 +548,68 @@ class StrakeEngine:
             self._metrics["cache_text_hits"] += 1
         self._log_query(query, user, started, cached=hit is not None, pushed=pushed)
         return table, hit is not None
+
+    def _run(self, prep: PreparedStatement):
+        """A planned statement's result as Arrow, under the query
+        deadline. Remote rows are read here only."""
+        from strake_spark.plans.federation import PushdownPlan
+        from strake_spark.plans.partial import PartialPlan
+
+        timeout = self.config.query_limits.query_timeout_seconds
+        started = time.monotonic()
+        pushed = prep.pushdown
+        if isinstance(pushed, PushdownPlan) and pushed.remote.fetch is not None:
+            with pushsql.deadline(timeout):
+                return pushed.remote.fetch(pushed.rewritten_sql, prep.limit,
+                                           schema=prep.df.schema, large_types=self._large_types())
+        df, views = prep.df, {}
+        if isinstance(pushed, PartialPlan):
+            with pushsql.deadline(timeout):
+                views = self._fetch_fragments(pushed)
+        try:
+            if views:
+                df = self.spark.sql(_rename_views(pushed.local_sql, views))
+                if prep.limit is not None:
+                    df = df.limit(prep.limit)
+            return run_with_timeout(
+                df, lambda d: d.toArrow(), timeout - (time.monotonic() - started)
+            )
+        finally:
+            for name in views.values():
+                self.spark.catalog.dropTempView(name)
+
+    def _large_types(self) -> bool:
+        """Whether ``toArrow()`` gives large string/binary types."""
+        return self.spark._jconf.arrowUseLargeVarTypes()
+
+    def _fetch_fragments(self, plan) -> dict[str, str]:
+        """Fetch each shipped fragment on the driver, reading at most
+        FETCH_ROWS_MAX + 1 rows; register each that fits as an in-memory
+        relation under a name private to this statement. Returns
+        {temp view: private view}; a fragment that does not fit keeps
+        its Spark scan."""
+        import uuid
+
+        views: dict[str, str] = {}
+        large = self._large_types()
+        try:
+            for scan in plan.scans:
+                remote = scan.remote()
+                if remote is None or remote.fetch is None:
+                    continue
+                schema = self.spark.table(scan.temp_view).schema
+                table = remote.fetch(scan.remote_sql, pushsql.FETCH_ROWS_MAX + 1,
+                                     schema=schema, large_types=large)
+                if table.num_rows > pushsql.FETCH_ROWS_MAX:
+                    continue
+                name = f"{scan.temp_view}_{uuid.uuid4().hex[:12]}"
+                self.spark.createDataFrame(table, schema=schema).createOrReplaceTempView(name)
+                views[scan.temp_view] = name
+        except BaseException:
+            for name in views.values():
+                self.spark.catalog.dropTempView(name)
+            raise
+        return views
 
     # ---------------------------------------------------------- inspection
     def explain_tree(self, query: str) -> str:
@@ -861,6 +937,15 @@ class StrakeEngine:
                     "ts": started,
                 }
             )
+
+
+def _rename_views(sql: str, names: dict[str, str]) -> str:
+    """``sql`` with each temp view of ``names`` replaced by its value."""
+    import re
+
+    for old, new in names.items():
+        sql = re.sub(rf"\b{re.escape(old)}\b", new, sql)
+    return sql
 
 
 def connect(

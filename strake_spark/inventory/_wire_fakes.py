@@ -179,6 +179,8 @@ class _PgHandler(socketserver.BaseRequestHandler):
                     continue
                 sql = body.rstrip(b"\0").decode()
                 srv.queries.append(sql)
+                if srv.stall is not None:
+                    srv.stall(sql)
                 try:
                     rel = con.sql(sql)
                     names = rel.columns
@@ -239,6 +241,8 @@ class FakePg(socketserver.ThreadingTCPServer):
         self.auth_mode = auth_mode
         self.ssl_context = ssl_context
         self.queries: list[str] = []
+        # called with each statement before it runs (a test's stalling server)
+        self.stall = None
 
 
 _DUCK_TO_MYSQL_TYPE = {
@@ -364,6 +368,8 @@ class _MyHandler(socketserver.BaseRequestHandler):
                     continue
                 sql = pkt[1:].decode()
                 srv.queries.append(sql)
+                if srv.stall is not None:
+                    srv.stall(sql)
                 try:
                     # the DuckDB backend doesn't parse MySQL backtick
                     # quoting; translate at the emulation boundary (no
@@ -428,6 +434,7 @@ class FakeMySql(socketserver.ThreadingTCPServer):
         self.users = users
         self.ssl_context = ssl_context
         self.queries: list[str] = []
+        self.stall = None  # as FakePg.stall
 
 
 _DUCK_TO_CH = {
@@ -472,6 +479,8 @@ def make_fake_ch(duck_path: str, users: dict[str, str]):
                 int(self.headers.get("Content-Length", 0))
             ).decode()
             queries.append(sql)
+            if self.server.stall is not None:
+                self.server.stall(sql)
             con = duckdb.connect(duck_path, read_only=True)
             try:
                 rel = con.sql(sql)
@@ -507,6 +516,7 @@ def make_fake_ch(duck_path: str, users: dict[str, str]):
     srv = HTTPServer(("127.0.0.1", 0), Handler)
     srv.queries = queries  # type: ignore[attr-defined]
     srv.duck_path = duck_path  # type: ignore[attr-defined]
+    srv.stall = None  # type: ignore[attr-defined]  # as FakePg.stall
     return srv
 
 

@@ -22,7 +22,8 @@ Spark-first design:
   mutating the AST and deserializing back to SQL (``sqlast.unparse``),
   then execute via the source's own DataSource ``query`` option. The
   remote engine does the join/agg; the Spark scan sees only the result
-  rows.
+  rows, and ``StrakeEngine.execute`` reads them on the driver, with no
+  Spark job, when the source has a driver ``fetch``.
 - **Graceful degradation**: mixed-source or unparseable queries run on
   Spark, where each scan still gets per-source filter/column pushdown
   (pushsql.py) — the same split as the reference's LocalExecution path
@@ -210,8 +211,8 @@ def plan_sql(
     plan = analyze(sql, trace=trace)
     if plan is not None:
         try:
-            df = plan.remote.push_query(spark, plan.rewritten_sql)
-            # force schema resolution now so dialect errors surface here
+            # the schema resolves now, so dialect errors surface here
+            df = plan.remote.scan(spark, plan.rewritten_sql)
             df.schema
             return df, plan
         except Exception as e:  # pragma: no cover - dialect drift path
@@ -227,7 +228,8 @@ def plan_sql(
     sub_scans: tuple = ()
     local_sql = sql  # what the final local rung executes (Spark dialect)
     try:
-        from strake_spark.plans.subtree import analyze_subtrees, register_scans
+        from strake_spark.plans.partial import register_scans
+        from strake_spark.plans.subtree import analyze_subtrees
 
         st = analyze_subtrees(spark, sql)
         if st is None:
@@ -283,7 +285,7 @@ def plan_sql(
         _note(trace, "iceberg_prune", "failed", str(e))
         log.warning("iceberg partition-prune analysis failed (%s); original plan", e)
     try:
-        from strake_spark.plans.partial import analyze_partial, execute_partial
+        from strake_spark.plans.partial import analyze_partial, register_scans
 
         partial = analyze_partial(spark, sql)
         if partial is None:
@@ -291,7 +293,8 @@ def plan_sql(
                   "no remote scan gains from per-table filter/projection shipping")
         if partial is not None:
             rewritten, pplan = partial
-            df = execute_partial(spark, rewritten, pplan)
+            register_scans(spark, pplan.scans)
+            df = spark.sql(rewritten)
             df.schema
             if sub_scans:  # report shipped subtrees alongside the scans
                 pplan.scans = tuple(sub_scans) + tuple(pplan.scans)

@@ -97,6 +97,7 @@ class _TableCtx:
     remote: RemoteTable
     columns: set[str]
     string_cols: set[str]  # lower-cased columns with string dtype in the Spark schema
+    temporal_cols: set[str]  # lower-cased date / timestamp_ntz columns
     node: dict  # mutable BASE_TABLE node in the AST
 
 
@@ -147,6 +148,26 @@ class _ConjunctSql:
                 return False
         return True
 
+    def _temporal(self, a, b) -> bool:
+        """True when one side is a date or timestamp_ntz column and the
+        other a date/timestamp literal (``TIMESTAMP '1998-09-02'`` parses
+        as a CAST of a VARCHAR constant): the comparison orders dates,
+        not strings. A zoned ``timestamp`` column stays refused, as the
+        remote's zone may differ."""
+        for col, lit in ((a, b), (b, a)):
+            if not (isinstance(col, dict) and isinstance(lit, dict)):
+                return False
+            names = col.get("column_names") or []
+            if (
+                col.get("class") == "COLUMN_REF" and names
+                and names[-1].lower() in self.t.temporal_cols
+                and lit.get("class") == "CAST"
+                and (lit.get("child") or {}).get("class") == "CONSTANT"
+                and (lit.get("cast_type") or {}).get("id", "").upper() in ("DATE", "TIMESTAMP")
+            ):
+                return True
+        return False
+
     def render(self, node) -> str:
         if not isinstance(node, dict):
             raise _NotPushable("non-dict node")
@@ -156,13 +177,12 @@ class _ConjunctSql:
             return "(" + op.join(self.render(c) for c in node.get("children", [])) + ")"
         if cls == "COMPARISON" and typ in sqlast.COMPARE_OPS:
             left, right = node["left"], node["right"]
-            if typ in _INEQUALITY and not (
+            ordered = self._temporal(left, right) or (
                 self._no_strings(left) and self._no_strings(right)
-            ):
+            )
+            if typ in _INEQUALITY and not ordered:
                 raise _NotPushable("string inequality (collation drift)")
-            if typ == "COMPARE_NOTEQUAL" and not (
-                self._no_strings(left) and self._no_strings(right)
-            ):
+            if typ == "COMPARE_NOTEQUAL" and not ordered:
                 raise _NotPushable("string <> (negation under-includes)")
             return f"({self.render(left)} {sqlast.COMPARE_OPS[typ]} {self.render(right)})"
         if cls == "OPERATOR":
@@ -224,10 +244,18 @@ def pushed_temp_name(prefix: str, i: int, context: str, remote_sql: str) -> str:
 
 @dataclass(frozen=True)
 class PushedScan:
-    view: str  # original Spark view
+    view: str  # original Spark view (a subtree's: its CTE name or alias)
     temp_view: str  # substituted temp view name
     remote_sql: str
     context: str
+
+    def remote(self) -> RemoteTable | None:
+        """The remote that answers this scan: its view's, else the first
+        registered one of its context."""
+        remote = REMOTE_TABLES.get(self.view) or REMOTE_TABLES.get(self.view.lower())
+        if remote is not None and remote.context() == self.context:
+            return remote
+        return next((r for r in REMOTE_TABLES.values() if r.context() == self.context), None)
 
 
 @dataclass
@@ -235,7 +263,7 @@ class PartialPlan:
     """Mixed-source statement with >=1 remote scan pushed down."""
 
     scans: tuple[PushedScan, ...]
-    local_sql: str  # original statement text (temp views swap in via AST)
+    local_sql: str  # the statement Spark runs over the temp views
     rewritten_sql: str = field(default="")  # human-readable summary
     remote: RemoteTable | None = None  # representative, for trace/metrics
 
@@ -287,8 +315,9 @@ def analyze_partial(spark: SparkSession, sql: str):
             c.lower() for c, dt in dtypes
             if dt == "string" or dt.startswith(("varchar", "char"))
         }
+        temporal_cols = {c.lower() for c, dt in dtypes if dt in ("date", "timestamp_ntz")}
         alias = node.get("alias") or name
-        tables.append(_TableCtx(name, alias, remote, cols, string_cols, node))
+        tables.append(_TableCtx(name, alias, remote, cols, string_cols, temporal_cols, node))
     if not tables:
         return None
     if len(tables) == len(base_nodes) and len({t.remote.context() for t in tables}) == 1:
@@ -345,20 +374,19 @@ def analyze_partial(spark: SparkSession, sql: str):
     local_sql = sqlast.fix_for_spark(local_sql)
     plan = PartialPlan(
         scans=tuple(scans),
-        local_sql=sql,
+        local_sql=local_sql,
         remote=tables[0].remote,
     )
     plan.rewritten_sql = plan.summary()
     return local_sql, plan
 
 
-def execute_partial(spark: SparkSession, rewritten_sql: str, plan: PartialPlan,
-                    tables: dict[str, RemoteTable] | None = None) -> DataFrame:
-    """Materialize each pushed scan as a temp view, then run the
-    rewritten statement on Spark."""
-    lookup = tables or REMOTE_TABLES
-    for scan in plan.scans:
-        remote = lookup.get(scan.view) or lookup.get(scan.view.lower())
-        df = remote.push_query(spark, scan.remote_sql)
-        df.createOrReplaceTempView(scan.temp_view)
-    return spark.sql(rewritten_sql)
+def register_scans(spark: SparkSession, scans) -> None:
+    """Register each pushed scan (a partial scan or a shipped subtree)
+    as a lazy temp view over its remote: the remote statement runs when
+    the outer statement executes."""
+    for scan in scans:
+        remote = scan.remote()
+        if remote is None:  # pragma: no cover - registry drift
+            raise RuntimeError(f"no source registered for context {scan.context}")
+        remote.scan(spark, scan.remote_sql).createOrReplaceTempView(scan.temp_view)

@@ -341,3 +341,35 @@ def select_star(table: str) -> dict:
             "sample": None, "qualify": None}
     retarget(node["from_table"], table, "")
     return node
+
+
+AGG_FUNCS = frozenset({
+    "count", "count_star", "sum", "avg", "min", "max", "string_agg",
+    "array_agg", "list", "first", "last", "median", "mode", "stddev",
+    "stddev_pop", "stddev_samp", "var_pop", "var_samp", "variance",
+    "bit_and", "bit_or", "bit_xor", "bool_and", "bool_or", "product",
+    "approx_count_distinct", "arg_min", "arg_max", "group_concat",
+})
+
+
+def reduces(tree) -> bool:
+    """True when some query under ``tree`` groups, aggregates, or has a
+    DISTINCT or LIMIT modifier."""
+    return any(
+        n.get("group_expressions") or n.get("group_sets")
+        or any(m.get("type") in ("DISTINCT_MODIFIER", "LIMIT_MODIFIER")
+               for m in n.get("modifiers", []) or [])
+        or (n.get("type") == "FUNCTION"
+            and n.get("function_name", "").lower() in AGG_FUNCS)
+        for n in nodes(tree)
+    )
+
+
+def bounded(sql: str) -> bool:
+    """The defensive limit's skip list (LIMIT, aggregate, DISTINCT,
+    window) read from a statement as written; False when it does not
+    parse."""
+    tree = parse(sql)
+    return tree is not None and (
+        reduces(tree) or any(n.get("class") == "WINDOW" for n in nodes(tree))
+    )

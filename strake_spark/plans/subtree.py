@@ -58,31 +58,13 @@ class SubtreeResult:
     scans: tuple  # PushedScan per shipped subtree
 
 
-_AGG_FUNCS = {
-    "count", "count_star", "sum", "avg", "min", "max", "string_agg",
-    "array_agg", "list", "first", "last", "median", "mode", "stddev",
-    "stddev_pop", "stddev_samp", "var_pop", "var_samp", "variance",
-    "bit_and", "bit_or", "bit_xor", "bool_and", "bool_or", "product",
-    "approx_count_distinct", "arg_min", "arg_max", "group_concat",
-}
-
-
 def _reduces(q_node: dict, n_tables: int) -> bool:
     """Ship only subtrees that REDUCE data remotely: an aggregate,
     DISTINCT, LIMIT, or a multi-table join. A bare filter/projection is
     better served by the partial-pushdown rung, whose partitioned scan
     parallelizes the transfer instead of pulling through the single
     push_query connection."""
-    if n_tables > 1:
-        return True
-    return any(
-        n.get("group_expressions") or n.get("group_sets")
-        or any(m.get("type") in ("DISTINCT_MODIFIER", "LIMIT_MODIFIER")
-               for m in n.get("modifiers", []) or [])
-        or (n.get("type") == "FUNCTION"
-            and n.get("function_name", "").lower() in _AGG_FUNCS)
-        for n in sqlast.nodes(q_node)
-    )
+    return n_tables > 1 or sqlast.reduces(q_node)
 
 
 def _try_push_subtree(
@@ -216,15 +198,3 @@ def analyze_subtrees(spark: SparkSession, sql: str) -> SubtreeResult | None:
 
 def _temp_name(i: int, rep: RemoteTable, remote_sql: str) -> str:
     return pushed_temp_name("strake_sub", i, rep.context(), remote_sql)
-
-
-def register_scans(spark: SparkSession, scans, tables: dict[str, RemoteTable] | None = None) -> None:
-    """Materialize each shipped subtree as a temp view (lazy — the
-    remote query runs when the outer statement executes)."""
-    lookup = tables or REMOTE_TABLES
-    by_ctx = {rt.context(): rt for rt in lookup.values()}
-    for s in scans:
-        rt = by_ctx.get(s.context)
-        if rt is None:  # pragma: no cover - registry drift
-            raise RuntimeError(f"no source registered for context {s.context}")
-        rt.push_query(spark, s.remote_sql).createOrReplaceTempView(s.temp_view)

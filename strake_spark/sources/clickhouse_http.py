@@ -5,7 +5,7 @@ connector). ClickHouse ships a first-class HTTP query interface
 (https://clickhouse.com/docs/en/interfaces/http): POST the SQL, get
 ``TSVWithNamesAndTypes`` back — names line, ClickHouse types line, then
 TSV rows with backslash escapes and ``\\N`` nulls. That is the whole
-protocol, so a stdlib urllib client covers it end-to-end; the JDBC path
+protocol, so a stdlib http.client covers it end-to-end; the JDBC path
 (sources/jdbc.py) remains for deployments that prefer the jar.
 
 Scan architecture mirrors sources/pgwire.py: a Spark 4 Python
@@ -21,8 +21,9 @@ convention; also what clickhouse-connect sends).
 
 from __future__ import annotations
 
+import http.client
+import socket
 import urllib.parse
-import urllib.request
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
@@ -191,7 +192,7 @@ class ClickHouseHttp:
         """Stream rows line-by-line from the HTTP response (TSV escapes
         literal newlines as \\n inside fields, so line framing is
         exact). Appends [names, types] to ``header_out`` when given.
-        Consume fully or the response stays open."""
+        Closing the generator closes the connection."""
         # wait_end_of_query: the server buffers the result until the
         # query COMPLETES, so a mid-query failure (memory limit, killed
         # query) is a non-200 with the exception text — without it the
@@ -206,51 +207,59 @@ class ClickHouseHttp:
         # cfg.url may legitimately carry a query string (e.g.
         # ?database=analytics — there is no separate database option);
         # gluing "/?" after it would mangle both parameter sets
-        if "?" in self.base:
-            url = f"{self.base}&{q}"
+        u = urllib.parse.urlsplit(self.base)
+        if u.query:
+            target = f"{u.path or '/'}?{u.query}&{q}"
         else:
-            url = f"{self.base.rstrip('/')}/?{q}"
-        req = urllib.request.Request(
-            url,
-            data=sql.encode(),
-            headers={
-                "X-ClickHouse-User": self.user,
-                "X-ClickHouse-Key": self.password,
-                "Content-Type": "text/plain; charset=utf-8",
-            },
-            method="POST",
-        )
+            target = f"{u.path.rstrip('/')}/?{q}"
+        if u.scheme == "https":
+            conn = http.client.HTTPSConnection(u.hostname, u.port, timeout=self.timeout,
+                                               context=self._ctx)
+        else:
+            conn = http.client.HTTPConnection(u.hostname, u.port, timeout=self.timeout)
+        headers = {
+            "X-ClickHouse-User": self.user,
+            "X-ClickHouse-Key": self.password,
+            "Content-Type": "text/plain; charset=utf-8",
+        }
         try:
-            resp = urllib.request.urlopen(
-                req, timeout=self.timeout, context=self._ctx
+            try:
+                conn.connect()
+                # a deadline unblocks the wait for the (buffered) answer
+                pushsql.on_cancel(lambda: conn.sock.shutdown(socket.SHUT_RDWR))
+                conn.request("POST", target, body=sql.encode(), headers=headers)
+                resp = conn.getresponse()
+            except Exception as e:  # noqa: BLE001 - transport error with context
+                raise SourceError(f"clickhouse unreachable: {e}") from e
+            if resp.status != 200:
+                detail = resp.read().decode(errors="replace")[:300]
+                raise SourceError(f"clickhouse query failed: {detail}")
+            yield from self._rows(resp, header_out)
+        finally:
+            conn.close()
+
+    def _rows(self, resp, header_out: list | None):
+        names_line = self._bounded_line(resp)
+        types_line = self._bounded_line(resp)
+        if not types_line:
+            raise SourceError("clickhouse response missing names/types header")
+        if header_out is not None:
+            header_out.append(
+                [_utf8(f) for f in names_line.rstrip(b"\n").split(b"\t")]
             )
-        except urllib.error.HTTPError as e:
-            detail = e.read().decode(errors="replace")[:300]
-            raise SourceError(f"clickhouse query failed: {detail}") from None
-        except Exception as e:  # noqa: BLE001 - transport error with context
-            raise SourceError(f"clickhouse unreachable: {e}") from e
-        with resp:
-            names_line = self._bounded_line(resp)
-            types_line = self._bounded_line(resp)
-            if not types_line:
-                raise SourceError("clickhouse response missing names/types header")
-            if header_out is not None:
-                header_out.append(
-                    [_utf8(f) for f in names_line.rstrip(b"\n").split(b"\t")]
-                )
-                header_out.append(
-                    [_utf8(f) for f in types_line.rstrip(b"\n").split(b"\t")]
-                )
-            # every line is a row — a single-column row whose value is
-            # the empty string serializes as a bare newline, so lines
-            # must NOT be skipped when empty (iteration ends at EOF;
-            # there is no trailing blank line to filter)
-            while True:
-                ln = self._bounded_line(resp)
-                if not ln:
-                    break
-                ln = ln.rstrip(b"\n")
-                yield [_unescape_field(f) for f in ln.split(b"\t")]
+            header_out.append(
+                [_utf8(f) for f in types_line.rstrip(b"\n").split(b"\t")]
+            )
+        # every line is a row — a single-column row whose value is
+        # the empty string serializes as a bare newline, so lines
+        # must NOT be skipped when empty (iteration ends at EOF;
+        # there is no trailing blank line to filter)
+        while True:
+            ln = self._bounded_line(resp)
+            if not ln:
+                break
+            ln = ln.rstrip(b"\n")
+            yield [_unescape_field(f) for f in ln.split(b"\t")]
 
     def query(self, sql: str) -> tuple[list[str], list[str], list[list[str | None]]]:
         """-> (names, ch_types, rows-as-text). Raises SourceError with

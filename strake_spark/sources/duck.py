@@ -35,7 +35,9 @@ FORMAT_NAME = "strake_duckdb"
 def _connect(path: str):
     import duckdb
 
-    return duckdb.connect(path, read_only=True)
+    con = duckdb.connect(path, read_only=True)
+    pushsql.on_cancel(con.interrupt)
+    return con
 
 
 def _table_sql(options) -> str:

@@ -151,6 +151,8 @@ class MySqlWireConnection:
         semantics as the pgwire client."""
         self._sock = socket.create_connection((host, port), timeout=timeout)
         self._buf = b""
+        # a deadline unblocks a pending recv; TLS may replace _sock later
+        pushsql.on_cancel(lambda: self._sock.shutdown(socket.SHUT_RDWR))
         self._seq = 0
         if sslmode not in ("disable", "require", "verify-full"):
             raise SourceError(f"unsupported sslmode {sslmode!r}")

@@ -223,6 +223,8 @@ class PgWireConnection:
         self.last_tags: list[str] = []
         self._sock = socket.create_connection((host, port), timeout=timeout)
         self._buf = b""
+        # a deadline unblocks a pending recv; TLS may replace _sock later
+        pushsql.on_cancel(lambda: self._sock.shutdown(socket.SHUT_RDWR))
         if sslmode not in ("disable", "require", "verify-full"):
             raise SourceError(f"unsupported sslmode {sslmode!r}")
         if sslmode != "disable":

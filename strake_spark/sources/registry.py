@@ -44,9 +44,20 @@ class RemoteTable:
     # result as a DataFrame scan — the federation planner's vehicle for
     # whole-statement pushdown. None => this source can't push.
     push_query: Callable[[SparkSession, str], "object"] | None = None
+    # Answers a pushed statement on the driver as a pyarrow.Table
+    # (pushsql.DriverFetch); None => only the Spark scan can read it.
+    fetch: "object | None" = None
 
     def context(self) -> str:
         return f"{self.dialect}://{self.url}"
+
+    def scan(self, spark: SparkSession, sql: str):
+        """The Spark scan of ``sql`` pushed to this source. With a driver
+        ``fetch`` the schema comes from the source's own probe on the
+        driver, so ``load()`` calls no Python worker."""
+        if self.fetch is None:
+            return self.push_query(spark, sql)
+        return self.push_query(spark, sql, self.fetch.schema(sql))
 
     def table_sql(self) -> str:
         """The physical table as quoted SQL: ``"schema"."table"``."""

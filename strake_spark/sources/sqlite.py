@@ -31,6 +31,7 @@ def _connect(path: str):
     import sqlite3
 
     con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
+    pushsql.on_cancel(con.interrupt)
     return con
 
 

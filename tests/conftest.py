@@ -18,6 +18,20 @@ if REPO_ROOT not in sys.path:
 
 from strake_spark.data import TABLES  # noqa: E402
 
+# the reference implementation's checkout, beside this repository
+REFERENCE_ROOT = os.path.join(os.path.dirname(REPO_ROOT), "reference")
+
+
+def reference_file(rel: str) -> str:
+    """Path of a file of the reference checkout. The calling test skips
+    when the checkout is absent or lacks the file: it checks that the
+    reference's shipped configs parse, which needs those files."""
+    path = os.path.join(REFERENCE_ROOT, rel)
+    if not os.path.exists(path):
+        pytest.skip(f"reference checkout file {rel} is absent")
+    return path
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_MID = "/root/testdata/sf0.01"
 

@@ -488,7 +488,7 @@ class TestStrictFallback:
         rt = REMOTE_TABLES["pg_orders"]
         import dataclasses
 
-        def boom(s, sql):
+        def boom(s, sql, schema=None):
             raise RuntimeError("simulated remote outage")
 
         REMOTE_TABLES["pg_orders"] = dataclasses.replace(rt, push_query=boom)

@@ -258,3 +258,61 @@ class TestColumnCase:
         assert '"c_acctbal" > 9000' in scan.remote_sql
         assert "C_" not in scan.remote_sql
         assert _rows(df) == _rows(mixed.spark.sql(sql))
+
+
+class TestTemporalRanges:
+    """A date or timestamp_ntz column compared with a date/timestamp
+    literal orders dates, not strings: the range ships. A zoned
+    timestamp column keeps its range local, as the remote's zone may
+    differ from the session's."""
+
+    @pytest.fixture(scope="class")
+    def temporal(self, spark, tmp_path_factory):
+        dpath = str(tmp_path_factory.mktemp("tr") / "tr.duckdb")
+        con = duckdb.connect(dpath)
+        con.execute(
+            "CREATE TABLE ev AS SELECT i AS id, i % 25 AS nk, "
+            "DATE '1995-01-01' + CAST(i AS INTEGER) AS d, "
+            "TIMESTAMP '1995-01-01' + INTERVAL (i) HOUR AS ts, "
+            "CAST(TIMESTAMP '1995-01-01' + INTERVAL (i) HOUR AS TIMESTAMPTZ) AS tz "
+            "FROM range(2000) r(i)"
+        )
+        con.close()
+        return ss.connect(
+            {"sources": [
+                {"name": "tr", "type": "duckdb", "url": dpath},
+                {"name": "trl", "type": "parquet", "url": SF_DIR,
+                 "tables": [{"name": "nation"}]},
+            ]},
+            spark=spark,
+        )
+
+    @pytest.mark.parametrize("cond,pushed", [
+        ("e.d >= DATE '1996-03-01' AND e.d < DATE '1996-05-01'",
+         ["(\"d\" >= CAST('1996-03-01' AS DATE))", "(\"d\" < CAST('1996-05-01' AS DATE))"]),
+        ("e.ts > TIMESTAMP '1995-02-01 06:00:00' AND e.ts <= TIMESTAMP '1995-02-03'",
+         ["(\"ts\" > CAST('1995-02-01 06:00:00' AS TIMESTAMP))",
+          "(\"ts\" <= CAST('1995-02-03' AS TIMESTAMP))"]),
+        ("e.d <> DATE '1995-01-02'", ["(\"d\" <> CAST('1995-01-02' AS DATE))"]),
+    ], ids=["date", "timestamp_ntz", "date_not_equal"])
+    def test_range_ships_and_matches_local(self, temporal, cond, pushed):
+        sql = f"""SELECT e.id, n.n_name FROM tr_ev e
+                  JOIN trl_nation n ON e.nk = n.n_nationkey WHERE {cond}"""
+        df, plan = plan_sql(temporal.spark, sql)
+        assert isinstance(plan, PartialPlan)
+        (scan,) = plan.scans
+        for text in pushed:
+            assert text in scan.remote_sql
+        assert _rows(df) == _rows(temporal.spark.sql(sql))
+        assert len(_rows(df)) > 0
+
+    def test_zoned_timestamp_stays_local(self, temporal):
+        assert dict(temporal.spark.table("tr_ev").dtypes)["tz"] == "timestamp"
+        sql = """SELECT e.id, n.n_name FROM tr_ev e
+                 JOIN trl_nation n ON e.nk = n.n_nationkey
+                 WHERE e.tz >= TIMESTAMP '1995-02-01'"""
+        df, plan = plan_sql(temporal.spark, sql)
+        assert isinstance(plan, PartialPlan)
+        (scan,) = plan.scans
+        assert "WHERE" not in scan.remote_sql
+        assert _rows(df) == _rows(temporal.spark.sql(sql))

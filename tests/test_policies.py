@@ -7,7 +7,7 @@ import pytest
 
 import strake_spark as ss
 from strake_spark.governance.policies import parse_policies, rename_tables
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, reference_file
 
 
 @pytest.fixture(scope="module")
@@ -202,7 +202,7 @@ class TestReferencePoliciesShape:
 
         from strake_spark.governance.policies import parse_policies
 
-        raw = yaml.safe_load(open("/root/reference/config/policies.yaml"))
+        raw = yaml.safe_load(open(reference_file("config/policies.yaml")))
         cfg = parse_policies(raw)
         assert set(cfg.roles) == {"analyst", "admin"}
         analyst = cfg.roles["analyst"]

@@ -16,6 +16,7 @@ from strake_spark.config import parse_config
 from strake_spark.sources import rest as rest_src
 from strake_spark.sources.registry import ensure_format
 from strake_spark.sources.registry import register_source
+from tests.conftest import reference_file
 
 ROWS = [{"id": i, "name": f"item_{i}", "score": i * 1.5} for i in range(25)]
 
@@ -302,7 +303,7 @@ class TestReferenceExampleConfig:
     def test_github_example_parses_verbatim(self):
         import yaml
 
-        raw = yaml.safe_load(open("/root/reference/docs/examples/github_source.yaml"))
+        raw = yaml.safe_load(open(reference_file("docs/examples/github_source.yaml")))
         cfg = parse_config(raw)
         s = cfg.sources[0]
         assert s.type == "rest"
@@ -387,20 +388,20 @@ class TestAllReferenceConfigsParse:
         from strake_spark.governance.contracts import parse_contracts
         from strake_spark.governance.policies import parse_policies
 
-        main = parse_config(yaml.safe_load(open("/root/reference/config/strake.yaml")))
+        main = parse_config(yaml.safe_load(open(reference_file("config/strake.yaml"))))
         assert main.global_connection_budget == 100
         assert main.agent_guard_mode == "dry_run"
         assert main.cache.enabled and main.cache.max_mb == 2048
         assert main.telemetry.otlp_endpoint is None  # enabled: false
         contracts = parse_contracts(
-            yaml.safe_load(open("/root/reference/config/contracts.yaml")))
+            yaml.safe_load(open(reference_file("config/contracts.yaml"))))
         assert [(c.table, c.strict) for c in contracts.contracts] == [
             ("pg.orders", True), ("pg.lineitem", False)]
         policies = parse_policies(
-            yaml.safe_load(open("/root/reference/config/policies.yaml")))
+            yaml.safe_load(open(reference_file("config/policies.yaml"))))
         assert set(policies.roles) == {"analyst", "admin"}
         gh = parse_config(
-            yaml.safe_load(open("/root/reference/docs/examples/github_source.yaml")))
+            yaml.safe_load(open(reference_file("docs/examples/github_source.yaml"))))
         assert gh.sources[0].url == "https://api.github.com"
 
 
