@@ -8,12 +8,12 @@ TSV rows with backslash escapes and ``\\N`` nulls. That is the whole
 protocol, so a stdlib http.client covers it end-to-end; the JDBC path
 (sources/jdbc.py) remains for deployments that prefer the jar.
 
-Scan architecture mirrors sources/pgwire.py: a Spark 4 Python
-DataSource whose partitions each issue their OWN http request
-executor-side with numeric range predicates — N partitions = N
-concurrent server queries, and ClickHouse's own parallelism handles
-each slice. ``push_query`` wires whole-statement + partial federation
-pushdown with the clickhouse dialect.
+Scans run through the shared reader (``pushsql.SqlSource``), whose
+partitions each issue their OWN http request executor-side with numeric
+range predicates — N partitions = N concurrent server queries, and
+ClickHouse's own parallelism handles each slice. ``push_query`` wires
+whole-statement + partial federation pushdown with the clickhouse
+dialect.
 
 Auth: X-ClickHouse-User / X-ClickHouse-Key headers (the interface's
 convention; also what clickhouse-connect sends).
@@ -21,14 +21,13 @@ convention; also what clickhouse-connect sends).
 
 from __future__ import annotations
 
+import decimal
 import http.client
 import socket
 import urllib.parse
-from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
 from strake_spark.config import SourceConfig
@@ -91,8 +90,6 @@ def _decode(value: str | None, dtype: T.DataType):
     if isinstance(dtype, T.IntegerType) or isinstance(dtype, T.LongType):
         return int(value)
     if isinstance(dtype, T.DecimalType):
-        import decimal
-
         return decimal.Decimal(value)
     if isinstance(dtype, T.DoubleType):
         return float(value)
@@ -261,6 +258,9 @@ class ClickHouseHttp:
             ln = ln.rstrip(b"\n")
             yield [_unescape_field(f) for f in ln.split(b"\t")]
 
+    def close(self) -> None:
+        """Each query opens and closes its own connection."""
+
     def query(self, sql: str) -> tuple[list[str], list[str], list[list[str | None]]]:
         """-> (names, ch_types, rows-as-text). Raises SourceError with
         the server's message on any non-200."""
@@ -274,108 +274,50 @@ class ClickHouseHttp:
 # ------------------------------------------------------------- DataSource
 
 
-def _client_from_options(options) -> ClickHouseHttp:
-    return ClickHouseHttp(
-        url=options.get("url", "http://127.0.0.1:8123"),
-        user=options.get("user", "default"),
-        password=options.get("password", ""),
-        timeout=float(options.get("timeout", "60")),
-        ssl_ca=options.get("ssl_ca"),
-        insecure=str(options.get("insecure", "")).lower() == "true",
-    )
+class ClickHouseDataSource(pushsql.SqlSource):
+    @classmethod
+    def name(cls) -> str:
+        return FORMAT_NAME
 
-
-@dataclass
-class _Slice(InputPartition):
-    predicate: str | None
-
-
-class ClickHouseReader(DataSourceReader):
-    def __init__(self, options, schema: StructType) -> None:
-        self.options = options
-        self.schema = schema
-
-    def partitions(self):
-        n = int(self.options.get("num_partitions", "1"))
-        table = self.options.get("table")
-        col = self.options.get("partition_column")
-        if n <= 1 or not table or not col:
-            return [_Slice(None)]
-        client = _client_from_options(self.options)
-        qc = pushsql.quote_ident(col)
-        _n, ch_types, rows = client.query(
-            f"SELECT min({qc}), max({qc}) FROM {pushsql.quote_ident(table)}"
+    def _connect(self) -> ClickHouseHttp:
+        o = self.options
+        return ClickHouseHttp(
+            url=o.get("url", "http://127.0.0.1:8123"),
+            user=o.get("user", "default"),
+            password=o.get("password", ""),
+            timeout=float(o.get("timeout", "60")),
+            ssl_ca=o.get("ssl_ca"),
+            insecure=str(o.get("insecure", "")).lower() == "true",
         )
+
+    def _probe(self, client, sql):
+        names, types, _rows = client.query(sql)
+        return StructType([T.StructField(n, _ch_to_spark(t), True) for n, t in zip(names, types)])
+
+    def _bounds(self, client, sql):
         # decode min/max by the column's DECLARED type (r19 review: a
-        # bare int() crashed Date/Float/Decimal partition columns with
-        # a raw ValueError — a parity gap with pgwire/mysqlwire, whose
-        # native decoders feed plan_ranges date/float range math)
+        # bare int() crashed Date/Float/Decimal partition columns with a
+        # raw ValueError)
+        _n, ch_types, rows = client.query(sql)
         dtype = _ch_to_spark(ch_types[0]) if ch_types else T.StringType()
         try:
-            lo = _decode(rows[0][0], dtype) if rows else None
-            hi = _decode(rows[0][1], dtype) if rows else None
+            lo, hi = (_decode(v, dtype) for v in rows[0]) if rows else (None, None)
         except (ValueError, ArithmeticError) as e:
             raise SourceError(
-                f"partition_column {col!r}: cannot decode min/max as "
-                f"{dtype.simpleString()}: {e}"
-            ) from None
-        if isinstance(lo, str) or isinstance(hi, str):
-            raise SourceError(
-                f"partition_column {col!r} has non-rangeable ClickHouse "
-                f"type {ch_types[0] if ch_types else '?'}; use a "
-                "numeric, Date or DateTime column"
-            )
-        import decimal
-
+                f"cannot decode min/max as {dtype.simpleString()}: {e} ({sql})") from None
         # split points need not be exact — float bounds render as
         # portable literals, and the unbounded outer ranges keep
         # coverage regardless
-        if isinstance(lo, decimal.Decimal):
-            lo = float(lo)
-        if isinstance(hi, decimal.Decimal):
-            hi = float(hi)
-        return [_Slice(r.predicate()) for r in pushsql.plan_ranges(col, lo, hi, n)]
+        return tuple(float(v) if isinstance(v, decimal.Decimal) else v for v in (lo, hi))
 
-    def read(self, partition: _Slice):
-        table = self.options.get("table")
-        query = self.options.get("query")
-        table_sql = f"({query}) AS q" if query else pushsql.quote_ident(table)
-        where = self.options.get("where")
-        sql = pushsql.build_select(
-            table_sql,
-            list(self.schema.fieldNames()),
-            [where] if where else [],
-            extra_predicate=partition.predicate,
-        )
-        client = _client_from_options(self.options)
+    def _rows(self, client, sql, schema):
         # streamed + columnar: text cells parse inside Arrow's cast
         # kernels per chunk (see sources/textbatch.py); Spark ingests
         # the RecordBatches without per-row pickling. ClickHouse bool
         # text is 'true'/'false'.
         from strake_spark.sources.textbatch import text_batches
 
-        yield from text_batches(self.schema, client.query_iter(sql))
-
-
-class ClickHouseDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return FORMAT_NAME
-
-    def schema(self):
-        table = self.options.get("table")
-        query = self.options.get("query")
-        if not table and not query:
-            raise SourceError("clickhouse source needs 'table' or 'query'")
-        inner = f"({query}) AS q" if query else pushsql.quote_ident(table)
-        client = _client_from_options(self.options)
-        names, types, _rows = client.query(f"SELECT * FROM {inner} LIMIT 0")
-        return StructType(
-            [T.StructField(n, _ch_to_spark(t), True) for n, t in zip(names, types)]
-        )
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return ClickHouseReader(self.options, schema)
+        return text_batches(schema, client.query_iter(sql))
 
 
 @source_type("clickhouse_http", "clickhouse")

@@ -9,12 +9,12 @@ resultset. CLIENT_DEPRECATE_EOF is deliberately NOT negotiated so the
 resultset framing is the classic columns/EOF/rows/EOF shape — one
 well-understood code path.
 
-Scan architecture mirrors pgwire: a Spark 4 Python DataSource whose
-partitions each open their OWN socket executor-side with numeric range
-predicates; ``push_query`` wires federation pushdown with the mysql
-dialect (whose identifier quoting and collation hazards the dialect
-layer + partial-pushdown whitelist already handle: backtick respelling
-outside literals, negated-string-predicate veto).
+Scans run through the shared reader (``pushsql.SqlSource``) with
+backtick identifiers: each partition opens its OWN socket executor-side
+with numeric range predicates; ``push_query`` wires federation pushdown
+with the mysql dialect (whose identifier quoting and collation hazards
+the dialect layer + partial-pushdown whitelist already handle: backtick
+respelling outside literals, negated-string-predicate veto).
 
 caching_sha2_password (MySQL 8 default) needs an RSA exchange over the
 wire or TLS — deployments using it should take the JDBC path; servers
@@ -31,7 +31,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
 from strake_spark.config import SourceConfig
@@ -382,107 +381,47 @@ def _decode(field: _Field, raw: bytes):
 # ------------------------------------------------------------- DataSource
 
 
-def _conn_from_options(options) -> MySqlWireConnection:
-    return MySqlWireConnection(
-        host=options.get("host", "127.0.0.1"),
-        port=int(options.get("port", "3306")),
-        user=options.get("user", "root"),
-        password=options.get("password", ""),
-        database=options.get("database", ""),
-        timeout=float(options.get("timeout", "30")),
-        sslmode=options.get("sslmode", "disable"),
-        ssl_ca=options.get("ssl_ca"),
-    )
-
-
-@dataclass
-class _Slice(InputPartition):
-    predicate: str | None
-
-
 def _quote_mysql(name: str) -> str:
     # reuse the safety screen, then respell to backticks (mysql rejects
     # double-quoted identifiers outside ANSI_QUOTES mode)
     return "`" + pushsql.quote_ident(name)[1:-1] + "`"
 
 
-class MySqlReader(DataSourceReader):
-    def __init__(self, options, schema: StructType) -> None:
-        self.options = options
-        self.schema = schema
+class MySqlDataSource(pushsql.SqlSource):
+    quote = staticmethod(_quote_mysql)
 
-    def partitions(self):
-        n = int(self.options.get("num_partitions", "1"))
-        table = self.options.get("table")
-        col = self.options.get("partition_column")
-        if n <= 1 or not table or not col:
-            return [_Slice(None)]
-        con = _conn_from_options(self.options)
-        try:
-            _f, rows = con.query(
-                f"SELECT min({_quote_mysql(col)}), max({_quote_mysql(col)}) "
-                f"FROM {_quote_mysql(table)}"
-            )
-        finally:
-            con.close()
-        lo, hi = rows[0] if rows else (None, None)
-        parts = pushsql.plan_ranges(col, lo, hi, n)
-        # respell the range predicates' double quotes to backticks
-        return [
-            _Slice(p.predicate().replace(f'"{col}"', _quote_mysql(col))
-                   if p.predicate() else None)
-            for p in parts
-        ]
-
-    def read(self, partition: _Slice):
-        table = self.options.get("table")
-        query = self.options.get("query")
-        table_sql = f"({query}) AS q" if query else _quote_mysql(table)
-        cols = ", ".join(_quote_mysql(c) for c in self.schema.fieldNames())
-        sql = f"SELECT {cols} FROM {table_sql}"
-        preds = []
-        if self.options.get("where"):
-            preds.append(self.options["where"])
-        if partition.predicate:
-            preds.append(partition.predicate)
-        if preds:
-            sql += " WHERE " + " AND ".join(f"({p})" for p in preds)
-        con = _conn_from_options(self.options)
-        try:
-            # streamed + columnar: raw text cells parse inside Arrow's
-            # cast kernels per chunk (see sources/textbatch.py); Spark
-            # ingests the RecordBatches without per-row pickling
-            from strake_spark.sources.textbatch import text_batches
-
-            yield from text_batches(self.schema, con.query_iter(sql, raw=True))
-        finally:
-            con.close()
-
-
-class MySqlDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
         return FORMAT_NAME
 
-    def schema(self):
-        table = self.options.get("table")
-        query = self.options.get("query")
-        if not table and not query:
-            raise SourceError("mysql source needs 'table' or 'query'")
-        inner = f"({query}) AS q" if query else _quote_mysql(table)
-        con = _conn_from_options(self.options)
-        try:
-            fields, _rows = con.query(f"SELECT * FROM {inner} LIMIT 0")
-        finally:
-            con.close()
-        if not fields:
-            raise SourceError(f"mysql relation has no columns: {table or query!r}")
-        return StructType(
-            [T.StructField(f.name, f.spark_type(), True) for f in fields]
+    def _connect(self) -> MySqlWireConnection:
+        o = self.options
+        return MySqlWireConnection(
+            host=o.get("host", "127.0.0.1"),
+            port=int(o.get("port", "3306")),
+            user=o.get("user", "root"),
+            password=o.get("password", ""),
+            database=o.get("database", ""),
+            timeout=float(o.get("timeout", "30")),
+            sslmode=o.get("sslmode", "disable"),
+            ssl_ca=o.get("ssl_ca"),
         )
 
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return MySqlReader(self.options, schema)
+    def _probe(self, con, sql):
+        fields, _rows = con.query(sql)
+        return StructType([T.StructField(f.name, f.spark_type(), True) for f in fields])
+
+    def _bounds(self, con, sql):
+        _fields, rows = con.query(sql)
+        return rows[0] if rows else (None, None)
+
+    def _rows(self, con, sql, schema):
+        # streamed + columnar: raw text cells parse inside Arrow's cast
+        # kernels per chunk (see sources/textbatch.py); Spark ingests
+        # the RecordBatches without per-row pickling
+        from strake_spark.sources.textbatch import text_batches
+
+        return text_batches(schema, con.query_iter(sql, raw=True))
 
 
 @source_type("mysql_wire")

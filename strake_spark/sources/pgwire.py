@@ -10,12 +10,12 @@ implements the v3 wire protocol directly (startup/auth/simple-query,
 https://www.postgresql.org/docs/current/protocol-message-formats.html):
 ~the same layer the reference's rust-postgres crate speaks.
 
-Scan architecture mirrors sources/sqlite.py: a Spark 4 Python
-DataSource whose partitions each open their OWN socket executor-side
-(numeric range splits on a partition column), so a 32-partition scan is
-32 concurrent server cursors — connections-per-scan is the same knob
-the reference's pool exposes. Whole-statement federation pushdown works
-through ``push_query`` with the postgres dialect.
+Scans run through the shared reader (``pushsql.SqlSource``), whose
+partitions each open their OWN socket executor-side (numeric range
+splits on a partition column), so a 32-partition scan is 32 concurrent
+server cursors — connections-per-scan is the same knob the reference's
+pool exposes. Whole-statement federation pushdown works through
+``push_query`` with the postgres dialect.
 
 Auth: cleartext, md5, and SCRAM-SHA-256 (the PG 10+ default) — SCRAM
 is PBKDF2/HMAC math over the SASL exchange (RFC 7677/5802), all stdlib.
@@ -34,7 +34,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
 from strake_spark.config import SourceConfig
@@ -462,101 +461,41 @@ class PgWireConnection:
 # ------------------------------------------------------------- DataSource
 
 
-def _conn_from_options(options) -> PgWireConnection:
-    return PgWireConnection(
-        host=options.get("host", "127.0.0.1"),
-        port=int(options.get("port", "5432")),
-        user=options.get("user", "postgres"),
-        password=options.get("password", ""),
-        database=options.get("database", "postgres"),
-        timeout=float(options.get("timeout", "30")),
-        sslmode=options.get("sslmode", "disable"),
-        ssl_ca=options.get("ssl_ca"),
-    )
-
-
-def _fields_to_schema(fields: list[_Field]) -> StructType:
-    return StructType(
-        [
-            T.StructField(f.name, _spark_type(f.type_oid, f.typmod), True)
-            for f in fields
-        ]
-    )
-
-
-@dataclass
-class _Slice(InputPartition):
-    predicate: str | None
-
-
-class PgWireReader(DataSourceReader):
-    def __init__(self, options, schema: StructType) -> None:
-        self.options = options
-        self.schema = schema
-
-    def partitions(self):
-        n = int(self.options.get("num_partitions", "1"))
-        table = self.options.get("table")
-        col = self.options.get("partition_column")
-        if n <= 1 or not table or not col:
-            return [_Slice(None)]
-        con = _conn_from_options(self.options)
-        try:
-            qc = pushsql.quote_ident(col)
-            _f, rows = con.query(
-                f"SELECT min({qc}), max({qc}) FROM {pushsql.quote_ident(table)}"
-            )
-        finally:
-            con.close()
-        lo, hi = rows[0] if rows else (None, None)
-        return [_Slice(r.predicate()) for r in pushsql.plan_ranges(col, lo, hi, n)]
-
-    def read(self, partition: _Slice):
-        table = self.options.get("table")
-        query = self.options.get("query")
-        table_sql = f"({query}) AS q" if query else pushsql.quote_ident(table)
-        where = self.options.get("where")
-        sql = pushsql.build_select(
-            table_sql,
-            list(self.schema.fieldNames()),
-            [where] if where else [],
-            extra_predicate=partition.predicate,
-        )
-        con = _conn_from_options(self.options)
-        try:
-            # streamed + columnar: raw text cells accumulate per chunk
-            # and parse inside Arrow's C++ cast kernels; Spark ingests
-            # the RecordBatches directly (no per-row pickling). PG bool
-            # text is 't'/'f'.
-            from strake_spark.sources.textbatch import text_batches
-
-            yield from text_batches(self.schema, con.query_iter(sql, raw=True), bool_style="tf")
-        finally:
-            con.close()
-
-
-class PgWireDataSource(DataSource):
+class PgWireDataSource(pushsql.SqlSource):
     @classmethod
     def name(cls) -> str:
         return FORMAT_NAME
 
-    def schema(self):
-        table = self.options.get("table")
-        query = self.options.get("query")
-        if not table and not query:
-            raise SourceError("postgres_wire source needs 'table' or 'query'")
-        inner = f"({query}) AS q" if query else pushsql.quote_ident(table)
-        con = _conn_from_options(self.options)
-        try:
-            fields, _rows = con.query(f"SELECT * FROM {inner} LIMIT 0")
-        finally:
-            con.close()
-        if not fields:
-            raise SourceError(f"postgres relation has no columns: {table or query!r}")
-        return _fields_to_schema(fields)
+    def _connect(self) -> PgWireConnection:
+        o = self.options
+        return PgWireConnection(
+            host=o.get("host", "127.0.0.1"),
+            port=int(o.get("port", "5432")),
+            user=o.get("user", "postgres"),
+            password=o.get("password", ""),
+            database=o.get("database", "postgres"),
+            timeout=float(o.get("timeout", "30")),
+            sslmode=o.get("sslmode", "disable"),
+            ssl_ca=o.get("ssl_ca"),
+        )
 
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return PgWireReader(self.options, schema)
+    def _probe(self, con, sql):
+        fields, _rows = con.query(sql)
+        return StructType(
+            [T.StructField(f.name, _spark_type(f.type_oid, f.typmod), True) for f in fields])
+
+    def _bounds(self, con, sql):
+        _fields, rows = con.query(sql)
+        return rows[0] if rows else (None, None)
+
+    def _rows(self, con, sql, schema):
+        # streamed + columnar: raw text cells accumulate per chunk
+        # and parse inside Arrow's C++ cast kernels; Spark ingests
+        # the RecordBatches directly (no per-row pickling). PG bool
+        # text is 't'/'f'.
+        from strake_spark.sources.textbatch import text_batches
+
+        return text_batches(schema, con.query_iter(sql, raw=True), bool_style="tf")
 
 
 @source_type("postgres_wire")

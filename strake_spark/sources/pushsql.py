@@ -1,35 +1,39 @@
-"""Shared remote-SQL machinery for SQL-speaking Python DataSources.
-
-Re-expresses the reference's scan-level pushdown surface
-(crates/connectors/src/sources/file.rs filter pushdown flags;
-crates/sql/src/sql_generator/expr.rs literal/operator rendering;
-identifier safety per crates/sql/src/sql_generator/sanitize.rs:4-36):
-identifier/literal quoting, SELECT composition, and numeric range
-partition planning that mirrors Spark's own JDBC partitioning — split a
-``partition_column`` into N half-open ranges so N executors read
-concurrently (the property that matters at 100 TB, where a driver-side
-fetch would serialize the scan).
-
-``filter_to_sql``/``split_filters`` translate Catalyst ``Filter``
-objects to remote WHERE text. They are NOT wired into
-``DataSourceReader.pushFilters``: Spark's PythonDataSourceV2 caches one
-mutable read plan per shared provider, so per-scan filter state corrupts
-self-joins and filtered-then-unfiltered sequences (see DuckDBReader).
-They serve explicit ``where`` options and will plug straight back into
-pushFilters when upstream keys the read plan by scan.
-
-``register_tables`` is the one registration path of these sources
-(duckdb, sqlite, postgres_wire, mysql_wire, clickhouse_http), like the
+"""The one shared layer of the SQL-speaking Python DataSources (duckdb,
+sqlite, postgres_wire, mysql_wire, clickhouse_http), like the
 reference's shared SQL-source module (crates/connectors/src/sources/
-sql/mod.rs): one view per table, one ``push_query`` for the federation
-ladder, and one ``DriverFetch`` that answers a pushed statement on the
-driver. ``execute()`` collects every result to the driver anyway, and a
-pushed statement reads as one partition, so for a statement the remote
-runs whole Spark adds only a Python-worker schema call, a worker scan
-and two Arrow conversions; the reference streams such a plan's remote
-batches straight back as Arrow.
+sql/mod.rs) over datafusion-table-providers.
 
-The driver read runs under a deadline (``deadline``): each reader
+``SqlSource`` and ``SqlReader`` are the one schema/partitions/read of
+these sources; each source module adds only how it connects (and
+registers ``on_cancel``), its schema probe and type mapping, how it
+reads a min/max row and streams rows or Arrow batches, its identifier
+quote and its default partition column. Scan text follows the
+reference's identifier and literal rules (crates/sql/src/sql_generator/
+sanitize.rs:4-36, expr.rs). A ``partition_column`` splits the relation
+into N half-open ranges as Spark's JDBC reader does, so N executors read
+concurrently, each with its own connection.
+
+``SqlReader`` implements no ``pushFilters``: Spark's PythonDataSourceV2
+caches one read plan per shared TableProvider and the pushdown rule
+mutates it (setReadInfo), so two scans of the same relation with
+different filters (a self-join, or a filtered query followed by an
+unfiltered one on a temp view) would silently read each other's filtered
+data. Every scan derives only from the (immutable) options, so a cached
+read plan is always semantically identical. Remote filtering happens in
+the federation ladder (plans/federation.py ships whole statements, with
+their filters, as a ``query``) and in the ``where`` option, raw SQL text
+the caller supplies.
+
+``register_tables`` is the one registration path of these sources: one
+view per table, one ``push_query`` for the federation ladder, and one
+``DriverFetch`` that answers a pushed statement on the driver.
+``execute()`` collects every result to the driver anyway, and a pushed
+statement reads as one partition, so for a statement the remote runs
+whole Spark adds only a Python-worker schema call, a worker scan and two
+Arrow conversions; the reference streams such a plan's remote batches
+straight back as Arrow.
+
+The driver read runs under a deadline (``deadline``): each source
 registers how to stop its connection (``on_cancel``: DuckDB/sqlite
 ``interrupt()``, a socket shutdown for the wire sources), and the
 deadline's timer runs those stops, so the read ends on the thread that
@@ -40,28 +44,14 @@ from __future__ import annotations
 
 import contextlib
 import datetime as _dt
+import decimal
 import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    EqualNullSafe,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
-    IsNotNull,
-    IsNull,
-    LessThan,
-    LessThanOrEqual,
-    Not,
-    StringContains,
-    StringEndsWith,
-    StringStartsWith,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.types import StructType
 
 from strake_spark.config import SourceConfig
 from strake_spark.errors import QueryTimeout, SourceError
@@ -115,88 +105,17 @@ def sql_literal(value) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
-def _col(f: Filter) -> str:
-    # ColumnPath is a tuple of name parts; nested attrs join with '.'
-    return ".".join(quote_ident(p) for p in f.attribute)
-
-
-def _like_escape(s: str) -> str:
-    return s.replace("\\", "\\\\").replace("%", "\\%").replace("_", "\\_").replace("'", "''")
-
-
-def filter_to_sql(f: Filter) -> str | None:
-    """One Catalyst Filter -> SQL predicate text, or None if
-    untranslatable (unknown filter class, or a value with no safe
-    portable literal)."""
-    try:
-        return _filter_to_sql(f)
-    except SourceError:
-        return None
-
-
-def _filter_to_sql(f: Filter) -> str | None:
-    if isinstance(f, EqualTo):
-        return f"{_col(f)} = {sql_literal(f.value)}"
-    if isinstance(f, EqualNullSafe):
-        return f"{_col(f)} IS NOT DISTINCT FROM {sql_literal(f.value)}"
-    if isinstance(f, GreaterThan):
-        return f"{_col(f)} > {sql_literal(f.value)}"
-    if isinstance(f, GreaterThanOrEqual):
-        return f"{_col(f)} >= {sql_literal(f.value)}"
-    if isinstance(f, LessThan):
-        return f"{_col(f)} < {sql_literal(f.value)}"
-    if isinstance(f, LessThanOrEqual):
-        return f"{_col(f)} <= {sql_literal(f.value)}"
-    if isinstance(f, In):
-        vals = ", ".join(sql_literal(v) for v in f.value)
-        return f"{_col(f)} IN ({vals})"
-    if isinstance(f, IsNull):
-        return f"{_col(f)} IS NULL"
-    if isinstance(f, IsNotNull):
-        return f"{_col(f)} IS NOT NULL"
-    if isinstance(f, StringContains):
-        return f"{_col(f)} LIKE '%{_like_escape(f.value)}%' ESCAPE '\\'"
-    if isinstance(f, StringStartsWith):
-        return f"{_col(f)} LIKE '{_like_escape(f.value)}%' ESCAPE '\\'"
-    if isinstance(f, StringEndsWith):
-        return f"{_col(f)} LIKE '%{_like_escape(f.value)}' ESCAPE '\\'"
-    if isinstance(f, Not):
-        inner = filter_to_sql(f.child)
-        return None if inner is None else f"NOT ({inner})"
-    return None
-
-
-def split_filters(filters: list[Filter]) -> tuple[list[str], list[Filter]]:
-    """-> (pushable predicate texts, filters Spark must still apply)."""
-    pushed: list[str] = []
-    remaining: list[Filter] = []
-    for f in filters:
-        sql = filter_to_sql(f)
-        if sql is None:
-            remaining.append(f)
-        else:
-            pushed.append(sql)
-    return pushed, remaining
-
-
 def build_select(
     table_sql: str,
-    columns: list[str] | None,
+    columns: list[str],
     predicates: list[str],
-    extra_predicate: str | None = None,
-    limit: int | None = None,
+    quote: Callable[[str], str],
 ) -> str:
     """Compose the remote scan query. ``table_sql`` is either a quoted
-    table name or a parenthesized subquery."""
-    cols = ", ".join(quote_ident(c) for c in columns) if columns else "*"
-    sql = f"SELECT {cols} FROM {table_sql}"
-    preds = list(predicates)
-    if extra_predicate:
-        preds.append(extra_predicate)
-    if preds:
-        sql += " WHERE " + " AND ".join(f"({p})" for p in preds)
-    if limit is not None:
-        sql += f" LIMIT {int(limit)}"
+    table name or a parenthesized subquery; ``quote`` quotes a column."""
+    sql = f"SELECT {', '.join(quote(c) for c in columns) or '*'} FROM {table_sql}"
+    if predicates:
+        sql += " WHERE " + " AND ".join(f"({p})" for p in predicates)
     return sql
 
 
@@ -209,8 +128,8 @@ class RangePartition:
     lower: float | int | None  # None => unbounded below (also catches NULL)
     upper: float | int | None  # None => unbounded above
 
-    def predicate(self) -> str | None:
-        c = quote_ident(self.column)
+    def predicate(self, quote: Callable[[str], str] = quote_ident) -> str | None:
+        c = quote(self.column)
         if self.lower is None and self.upper is None:
             return None
         if self.lower is None:
@@ -238,10 +157,100 @@ def plan_ranges(column: str, lo, hi, n: int) -> list[RangePartition]:
     return parts
 
 
+# ------------------------------------------------------- the shared reader
+
+_RANGEABLE = (int, float, decimal.Decimal, _dt.date)  # datetime is a date
+
+
+@dataclass
+class _Slice(InputPartition):
+    predicate: str | None
+
+
+class SqlSource(DataSource):
+    """A table (``table``, with an optional ``schema``) or a statement
+    (``query``) of one SQL-speaking remote. Options: ``where`` (raw SQL
+    text ANDed into every scan), ``partition_column`` and
+    ``num_partitions``. A subclass supplies ``name()`` and what differs
+    per remote:
+
+    - ``_connect()``: a connection with ``close()``; it registers its
+      stop with ``on_cancel``;
+    - ``_probe(con, sql)``: the ``StructType`` of a statement that
+      returns no rows;
+    - ``_bounds(con, sql)``: the ``(min, max)`` row of a statement;
+    - ``_rows(con, sql, schema)``: the statement's rows, as Arrow
+      record batches or row tuples;
+    - ``quote``: its identifier quote; ``default_partition_column``: the
+      column a table splits on when ``num_partitions`` is given alone.
+    """
+
+    quote = staticmethod(quote_ident)
+    default_partition_column: str | None = None
+
+    def relation(self) -> str:
+        """The scanned relation as SQL: ``(<query>) AS q`` or the quoted
+        ``"schema"."table"``."""
+        query = self.options.get("query")
+        if query:
+            return f"({query}) AS q"
+        table = self.options.get("table")
+        if not table:
+            raise SourceError(f"{self.name()} source needs 'table' or 'query' option")
+        schema = self.options.get("schema")
+        return f"{self.quote(schema)}.{self.quote(table)}" if schema else self.quote(table)
+
+    def schema(self) -> StructType:
+        sql = f"SELECT * FROM {self.relation()} LIMIT 0"
+        with contextlib.closing(self._connect()) as con:
+            struct = self._probe(con, sql)
+        if not struct.fields:
+            raise SourceError(f"{self.name()} relation has no columns: {self.relation()}")
+        return struct
+
+    def reader(self, schema: StructType) -> DataSourceReader:
+        return SqlReader(self, schema)
+
+
+class SqlReader(DataSourceReader):
+    """The one reader of every ``SqlSource``; see the module docstring
+    for why it implements no ``pushFilters``."""
+
+    def __init__(self, source: SqlSource, schema: StructType) -> None:
+        self.source = source
+        self.schema = schema
+
+    def partitions(self) -> list[_Slice]:
+        source, options = self.source, self.source.options
+        column = options.get("partition_column") or (
+            source.default_partition_column if options.get("table") else None)
+        n = int(options.get("num_partitions", "1"))
+        if not column or n <= 1:
+            return [_Slice(None)]
+        qc = source.quote(column)
+        with contextlib.closing(source._connect()) as con:
+            lo, hi = source._bounds(con, f"SELECT min({qc}), max({qc}) FROM {source.relation()}")
+        for v in (lo, hi):
+            if v is not None and not isinstance(v, _RANGEABLE):
+                raise SourceError(
+                    f"partition_column {column!r} is non-rangeable (its bounds are "
+                    f"{type(v).__name__}); use a numeric, date or timestamp column"
+                )
+        return [_Slice(r.predicate(source.quote)) for r in plan_ranges(column, lo, hi, n)]
+
+    def read(self, partition: _Slice):
+        source = self.source
+        where = source.options.get("where")
+        predicates = [p for p in (where, partition.predicate) if p]
+        sql = build_select(source.relation(), self.schema.fieldNames(), predicates, source.quote)
+        with contextlib.closing(source._connect()) as con:
+            yield from source._rows(con, sql, self.schema)
+
+
 def register_tables(
     spark: SparkSession,
     cfg: SourceConfig,
-    source_cls: type[DataSource],
+    source_cls: type[SqlSource],
     dialect: str,
     base: dict[str, str],
     names: list[str],
@@ -254,19 +263,13 @@ def register_tables(
     in the source's explicit ``num_partitions``, else in
     ``default_partitions``; an explicit value applies without a column
     too, for readers that split by an implicit key (sqlite's rowid).
-    Each table loads once; declared columns reconcile drift."""
+    Each table loads once; declared columns reconcile drift. A table's
+    ``schema`` names its remote namespace: its scans read
+    ``"schema"."table"`` and pushed statements name it qualified."""
     from strake_spark.sources.drift import reconcile
     from strake_spark.sources.file import view_name
     from strake_spark.sources.registry import RemoteTable, ensure_format, remember_remote
 
-    for t in cfg.tables:
-        if t.schema:
-            # reading the bare name could hit another namespace's table
-            raise SourceError(
-                f"{cfg.type} source {cfg.name!r}: table {t.name!r} declares "
-                f"schema {t.schema!r}, but schema: is not supported for "
-                f"{cfg.type} sources"
-            )
     ensure_format(spark, source_cls)
     fmt = source_cls.name()
 
@@ -283,7 +286,10 @@ def register_tables(
     for name in names:
         tbl = declared.get(name)
         column = tbl.partition_column if tbl is not None else None
+        schema = tbl.schema if tbl is not None else None
         options = dict(base, table=name)
+        if schema:
+            options["schema"] = schema
         if column:
             options["partition_column"] = column
         n_parts = cfg.options.get("num_partitions") or (default_partitions if column else None)
@@ -296,7 +302,7 @@ def register_tables(
             df = reconcile(df, columns, context=view)
         df.createOrReplaceTempView(view)
         remember_remote(view, RemoteTable(
-            cfg.name, dialect, cfg.url, name, push_query=push_query, fetch=fetch))
+            cfg.name, dialect, cfg.url, name, schema=schema, push_query=push_query, fetch=fetch))
         registered.append(view)
     return registered
 

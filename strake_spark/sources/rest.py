@@ -12,7 +12,7 @@ Reference: crates/connectors/src/sources/rest.rs (931 LoC):
   rest.rs:34-39) — here expressed as static ``params`` config plus a
   ``where``-free design note: Spark-side filter pushdown into query
   params is deliberately NOT wired through DataSourceReader.pushFilters
-  (see DuckDBReader for the shared-read-plan hazard).
+  (see pushsql.SqlReader for the shared-read-plan hazard).
 
 Spark-first shape: a Python DataSource whose ``read`` runs ON AN
 EXECUTOR and streams pages as Arrow record batches — the driver never

@@ -3,20 +3,21 @@
 Reference: crates/connectors/src/sources/sql/sqlite.rs +
 sqlite_federation.rs (local-file DB registered as table providers).
 
-Executor-side scans (each partition opens its own read-only sqlite3
-connection), remote filtering through federation pushdown (see
-SQLiteReader), and ``rowid``-range partitioning for parallel reads — rowid is SQLite's
-implicit integer PK, so a table splits into N contiguous slices without
-any schema cooperation.
+Scans run through the shared reader (``pushsql.SqlSource``): each
+partition opens its own read-only sqlite3 connection executor-side.
+``num_partitions`` alone splits a table on ``rowid``, SQLite's implicit
+integer PK, so a table splits into N contiguous slices without any
+schema cooperation. This module adds the connection, the schema probes
+(``PRAGMA table_info`` for a table; SQLite has no result-type metadata
+for a statement) and the row stream.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import contextlib
 
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
 from strake_spark.config import SourceConfig
@@ -54,103 +55,43 @@ def _decltype_to_spark(decl: str) -> T.DataType:
     return T.DoubleType()  # NUMERIC affinity
 
 
-def table_schema(path: str, table: str) -> StructType:
-    con = _connect(path)
-    try:
-        cols = con.execute(f"PRAGMA table_info({pushsql.quote_ident(table)})").fetchall()
-    finally:
-        con.close()
-    if not cols:
-        raise SourceError(f"sqlite table not found: {table!r}")
-    return StructType(
-        [T.StructField(c[1], _decltype_to_spark(c[2]), True) for c in cols]
-    )
+class SQLiteDataSource(pushsql.SqlSource):
+    default_partition_column = "rowid"
 
-
-@dataclass
-class _Slice(InputPartition):
-    predicate: str | None
-
-
-class SQLiteReader(DataSourceReader):
-    """No ``pushFilters`` — see DuckDBReader for the shared-read-plan
-    correctness hazard. Scans derive only from immutable options; remote
-    filtering comes from whole-statement federation pushdown or an
-    explicit ``where`` option."""
-
-    def __init__(self, options, schema: StructType) -> None:
-        self.options = options
-        self.schema = schema
-
-    def partitions(self):
-        n = int(self.options.get("num_partitions", "1"))
-        table = self.options.get("table")
-        if n <= 1 or not table:
-            return [_Slice(None)]
-        col = self.options.get("partition_column", "rowid")
-        con = _connect(self.options["path"])
-        try:
-            qc = pushsql.quote_ident(col)
-            lo, hi = con.execute(
-                f"SELECT min({qc}), max({qc}) FROM {pushsql.quote_ident(table)}"
-            ).fetchone()
-        finally:
-            con.close()
-        return [_Slice(r.predicate()) for r in pushsql.plan_ranges(col, lo, hi, n)]
-
-    def read(self, partition: _Slice):
-        table = self.options.get("table")
-        query = self.options.get("query")
-        table_sql = f"({query})" if query else pushsql.quote_ident(table)
-        where = self.options.get("where")
-        sql = pushsql.build_select(
-            table_sql,
-            list(self.schema.fieldNames()),
-            [where] if where else [],
-            extra_predicate=partition.predicate,
-        )
-        con = _connect(self.options["path"])
-        try:
-            cur = con.execute(sql)
-            while True:
-                rows = cur.fetchmany(10_000)
-                if not rows:
-                    break
-                yield from rows
-        finally:
-            con.close()
-
-
-class SQLiteDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
         return FORMAT_NAME
 
-    def schema(self):
-        table = self.options.get("table")
-        if table:
-            return table_schema(self.options["path"], table)
-        query = self.options.get("query")
-        if not query:
-            raise SourceError("sqlite source needs 'table' or 'query' option")
-        # SQLite has no result-type metadata for arbitrary queries; probe
-        # one row and type from Python values (string when all-NULL/empty).
-        con = _connect(self.options["path"])
-        try:
-            cur = con.execute(f"SELECT * FROM ({query}) LIMIT 1")
-            names = [d[0] for d in cur.description]
-            row = cur.fetchone()
-        finally:
-            con.close()
-        py_to_spark = {int: T.LongType(), float: T.DoubleType(), bytes: T.BinaryType()}
-        fields = []
-        for i, name in enumerate(names):
-            v = row[i] if row is not None else None
-            fields.append(T.StructField(name, py_to_spark.get(type(v), T.StringType()), True))
-        return StructType(fields)
+    def _connect(self):
+        return _connect(self.options["path"])
 
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return SQLiteReader(self.options, schema)
+    def schema(self):
+        table, schema = self.options.get("table"), self.options.get("schema")
+        relation = self.relation()
+        with contextlib.closing(self._connect()) as con:
+            if table:
+                pragma = f"{self.quote(schema)}.table_info" if schema else "table_info"
+                cols = con.execute(f"PRAGMA {pragma}({self.quote(table)})").fetchall()
+                if not cols:
+                    raise SourceError(f"sqlite table not found: {table!r}")
+                return StructType(
+                    [T.StructField(c[1], _decltype_to_spark(c[2]), True) for c in cols])
+            # a statement has no result-type metadata: type it from one
+            # row's Python values (string when all-NULL/empty)
+            cur = con.execute(f"SELECT * FROM {relation} LIMIT 1")
+            names = [d[0] for d in cur.description]
+            row = cur.fetchone() or (None,) * len(names)
+        py_to_spark = {int: T.LongType(), float: T.DoubleType(), bytes: T.BinaryType()}
+        return StructType([
+            T.StructField(name, py_to_spark.get(type(v), T.StringType()), True)
+            for name, v in zip(names, row)
+        ])
+
+    def _bounds(self, con, sql):
+        return con.execute(sql).fetchone()
+
+    def _rows(self, con, sql, schema):
+        return con.execute(sql)
 
 
 def discover_tables(path: str) -> list[str]:

@@ -89,10 +89,6 @@ class TestLiteralRoundtrip:
 
         with pytest.raises(SourceError):
             pushsql.sql_literal(b"\x01\x02")
-        # and via the filter layer: untranslatable, not unsafe
-        from pyspark.sql.datasource import EqualTo
-
-        assert pushsql.filter_to_sql(EqualTo(("c",), b"\x01")) is None
 
 
 class TestRangePartitions:

@@ -84,17 +84,16 @@ class TestHttpClient:
         with pgwire/mysqlwire requires typed decode into plan_ranges."""
         from pyspark.sql.types import StructType
 
-        from strake_spark.sources.clickhouse_http import ClickHouseReader
+        from strake_spark.sources.clickhouse_http import ClickHouseDataSource
 
-        r = ClickHouseReader(
+        r = ClickHouseDataSource(
             {
                 "url": f"http://127.0.0.1:{ch.server_port}",
                 "user": "analyst", "password": "k3y",
                 "table": "orders", "partition_column": "o_orderdate",
                 "num_partitions": "3",
             },
-            StructType(),
-        )
+        ).reader(StructType())
         parts = r.partitions()
         assert len(parts) == 3
         preds = [p.predicate for p in parts]
@@ -108,17 +107,16 @@ class TestHttpClient:
     def test_string_partition_column_is_loud(self, ch):
         from pyspark.sql.types import StructType
 
-        from strake_spark.sources.clickhouse_http import ClickHouseReader
+        from strake_spark.sources.clickhouse_http import ClickHouseDataSource
 
-        r = ClickHouseReader(
+        r = ClickHouseDataSource(
             {
                 "url": f"http://127.0.0.1:{ch.server_port}",
                 "user": "analyst", "password": "k3y",
                 "table": "orders", "partition_column": "o_orderpriority",
                 "num_partitions": "3",
             },
-            StructType(),
-        )
+        ).reader(StructType())
         with pytest.raises(SourceError, match="non-rangeable"):
             r.partitions()
 

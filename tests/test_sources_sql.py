@@ -208,17 +208,6 @@ class TestSQLiteSource:
 
 
 class TestPushSQL:
-    def test_filter_translation(self):
-        from pyspark.sql.datasource import EqualTo, In, IsNull, Not, StringContains
-
-        from strake_spark.sources import pushsql
-
-        assert pushsql.filter_to_sql(EqualTo(("a",), 1)) == '"a" = 1'
-        assert pushsql.filter_to_sql(In(("b",), ("x", "y'z"))) == "\"b\" IN ('x', 'y''z')"
-        assert pushsql.filter_to_sql(IsNull(("c",))) == '"c" IS NULL'
-        assert pushsql.filter_to_sql(Not(EqualTo(("a",), 1))) == 'NOT ("a" = 1)'
-        assert "LIKE '%50\\%%'" in pushsql.filter_to_sql(StringContains(("d",), "50%"))
-
     def test_unsafe_identifier_rejected(self):
         from strake_spark.errors import SourceError
         from strake_spark.sources import pushsql

@@ -1,16 +1,21 @@
 """The one registration path of the SQL-speaking sources
 (``pushsql.register_tables``): partition-count rules per source type,
-fail-closed ``tables[].schema``, schema-qualified pushdown, and the
-single ``spark.dataSource.register`` call site."""
+``tables[].schema`` in scans and pushed statements, schema-qualified
+pushdown, the single ``spark.dataSource.register`` call site, and the
+one shared reader (``pushsql.SqlSource``)."""
 
 from __future__ import annotations
 
 import os
+import re
+import threading
 
+import duckdb
 import pytest
 
+import strake_spark as ss
 from strake_spark.config import parse_config
-from strake_spark.errors import SourceError
+from strake_spark.inventory._wire_fakes import FakePg
 from strake_spark.sources.registry import REMOTE_TABLES, RemoteTable, register_source
 from tests.conftest import REPO_ROOT, SF_DIR
 
@@ -78,24 +83,71 @@ def test_partition_rule(spark, type_, column, options, expected):
         spark.catalog.dropTempView(view)
 
 
-@pytest.mark.parametrize("type_", _SQL_TYPES)
-def test_table_schema_fails_closed(spark, type_):
-    """A ``schema:`` the reader would drop must not read the bare name
-    from the default namespace; registration refuses before connecting."""
-    url = {
-        "duckdb": "/nonexistent/db.duckdb",
-        "sqlite": "/nonexistent/db.sqlite",
-        "postgres_wire": "postgresql://127.0.0.1:1/db",
-        "mysql_wire": "mysql://127.0.0.1:1/db",
-        "clickhouse_http": "http://127.0.0.1:1",
-    }[type_]
-    cfg = parse_config({"sources": [{
-        "name": "sx", "type": type_, "url": url,
-        "tables": [{"name": "orders", "schema": "sales"}],
-    }]}).sources[0]
-    with pytest.raises(SourceError, match=rf"{type_} source .*schema: is not supported"):
-        register_source(spark, cfg)
-    assert "sx_orders" not in REMOTE_TABLES
+@pytest.fixture(scope="module")
+def sales_db(tmp_path_factory) -> str:
+    """``sales.orders`` beside a ``main.orders`` that must never be read."""
+    path = str(tmp_path_factory.mktemp("sales") / "shop.duckdb")
+    con = duckdb.connect(path)
+    con.execute("CREATE SCHEMA sales")
+    con.execute("CREATE TABLE sales.orders AS SELECT * FROM "
+                "(VALUES (1, 'sales'), (2, 'sales')) t(k, origin)")
+    con.execute("CREATE TABLE main.orders AS SELECT * FROM (VALUES (1, 'main')) t(k, origin)")
+    con.close()
+    return path
+
+
+@pytest.fixture()
+def sales_views(spark):
+    yield
+    for view in ("sdk_orders", "spg_orders"):
+        REMOTE_TABLES.pop(view, None)
+        spark.catalog.dropTempView(view)
+
+
+_SALES = [{"k": 1, "origin": "sales"}, {"k": 2, "origin": "sales"}]
+_SALES_SQL = "SELECT k, origin FROM {view} WHERE k > 0 ORDER BY k"
+
+
+def test_table_schema_duckdb(spark, sales_db, sales_views):
+    """A declared ``schema:`` reads ``sales.orders`` in the registered
+    scan and in a whole-pushed statement, never ``main.orders``."""
+    from strake_spark.plans.federation import PushdownPlan, plan_sql
+
+    eng = ss.connect({"sources": [{"name": "sdk", "type": "duckdb", "url": sales_db,
+                                   "tables": [{"name": "orders", "schema": "sales"}]}]},
+                     spark=spark)
+    assert REMOTE_TABLES["sdk_orders"].schema == "sales"
+    scan = spark.table("sdk_orders").orderBy("k").collect()
+    assert [r.asDict() for r in scan] == _SALES
+    sql = _SALES_SQL.format(view="sdk_orders")
+    _df, plan = plan_sql(spark, sql)
+    assert isinstance(plan, PushdownPlan)
+    assert "sales.orders" in plan.rewritten_sql
+    assert eng.execute(sql).to_pylist() == _SALES
+
+
+def test_table_schema_wire(spark, sales_db, sales_views):
+    """Every statement a wire source sends for a ``schema:`` table names
+    it ``"sales"."orders"`` (pushed text: ``sales.orders``)."""
+    pg = FakePg(sales_db, users={"alice": "s3cret"})
+    threading.Thread(target=pg.serve_forever, daemon=True).start()
+    try:
+        eng = ss.connect({"sources": [{
+            "name": "spg", "type": "postgres_wire",
+            "url": f"postgresql://127.0.0.1:{pg.server_address[1]}/db",
+            "username": "alice", "password": "s3cret",
+            "tables": [{"name": "orders", "schema": "sales"}],
+        }]}, spark=spark)
+        scan = spark.table("spg_orders").orderBy("k").collect()
+        assert [r.asDict() for r in scan] == _SALES
+        assert eng.execute(_SALES_SQL.format(view="spg_orders")).to_pylist() == _SALES
+    finally:
+        pg.shutdown()
+        pg.server_close()
+    assert 'SELECT * FROM "sales"."orders" LIMIT 0' in pg.queries
+    assert 'SELECT "k", "origin" FROM "sales"."orders"' in pg.queries
+    assert any("FROM sales.orders" in q for q in pg.queries)  # the pushed statement
+    assert all("sales" in q for q in pg.queries if "orders" in q)
 
 
 class TestSchemaQualifiedPush:
@@ -165,4 +217,18 @@ def test_only_registry_registers_datasources():
             with open(path, encoding="utf-8") as fh:
                 if "dataSource.register" in fh.read():
                     offenders.append(os.path.relpath(path, REPO_ROOT))
+    assert offenders == []
+
+
+def test_sql_sources_share_one_reader():
+    """The five SQL-speaking sources read through ``pushsql.SqlSource``:
+    none defines its own reader or partition type, or composes scan or
+    range SQL itself."""
+    forbidden = re.compile(r"class\s+\w+\([^)]*\b(?:DataSourceReader|InputPartition)\b"
+                           r"|\b(?:plan_ranges|build_select)\(")
+    offenders = []
+    for name in ("duck", "sqlite", "pgwire", "mysqlwire", "clickhouse_http"):
+        path = os.path.join(REPO_ROOT, "strake_spark", "sources", f"{name}.py")
+        with open(path, encoding="utf-8") as fh:
+            offenders += [f"{name}.py: {m.group(0)}" for m in forbidden.finditer(fh.read())]
     assert offenders == []
