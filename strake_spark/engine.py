@@ -46,6 +46,7 @@ from strake_spark.governance.limits import (
     run_with_timeout,
 )
 from strake_spark.plans import sqlast
+from strake_spark.plans.binding import bound
 from strake_spark.session import build_session
 from strake_spark.sources import pushsql
 from strake_spark.sources.registry import bump_catalog_epoch, catalog_epoch, register_source
@@ -562,54 +563,43 @@ class StrakeEngine:
             with pushsql.deadline(timeout):
                 return pushed.remote.fetch(pushed.rewritten_sql, prep.limit,
                                            schema=prep.df.schema, large_types=self._large_types())
-        df, views = prep.df, {}
+        df = prep.df
         if isinstance(pushed, PartialPlan):
             with pushsql.deadline(timeout):
-                views = self._fetch_fragments(pushed)
-        try:
-            if views:
-                df = self.spark.sql(_rename_views(pushed.local_sql, views))
+                relations = self._fetch_fragments(pushed)
+            if relations is not None:
+                # the plan's names are fixed in its SQL: one rebind at a time
+                with pushed.lock, bound(self.spark, relations):
+                    df = self.spark.sql(pushed.local_sql)
                 if prep.limit is not None:
                     df = df.limit(prep.limit)
-            return run_with_timeout(
-                df, lambda d: d.toArrow(), timeout - (time.monotonic() - started)
-            )
-        finally:
-            for name in views.values():
-                self.spark.catalog.dropTempView(name)
+        return run_with_timeout(
+            df, lambda d: d.toArrow(), timeout - (time.monotonic() - started)
+        )
 
     def _large_types(self) -> bool:
         """Whether ``toArrow()`` gives large string/binary types."""
         return self.spark._jconf.arrowUseLargeVarTypes()
 
-    def _fetch_fragments(self, plan) -> dict[str, str]:
+    def _fetch_fragments(self, plan) -> dict[str, DataFrame] | None:
         """Fetch each shipped fragment on the driver, reading at most
-        FETCH_ROWS_MAX + 1 rows; register each that fits as an in-memory
-        relation under a name private to this statement. Returns
-        {temp view: private view}; a fragment that does not fit keeps
-        its Spark scan."""
-        import uuid
-
-        views: dict[str, str] = {}
+        FETCH_ROWS_MAX + 1 rows; each that fits replaces its relation by
+        an in-memory one. Returns the plan's relations so changed, or
+        None when no fragment fits and the planned scans stand."""
+        relations = dict(plan.relations)
         large = self._large_types()
-        try:
-            for scan in plan.scans:
-                remote = scan.remote()
-                if remote is None or remote.fetch is None:
-                    continue
-                schema = self.spark.table(scan.temp_view).schema
-                table = remote.fetch(scan.remote_sql, pushsql.FETCH_ROWS_MAX + 1,
-                                     schema=schema, large_types=large)
-                if table.num_rows > pushsql.FETCH_ROWS_MAX:
-                    continue
-                name = f"{scan.temp_view}_{uuid.uuid4().hex[:12]}"
-                self.spark.createDataFrame(table, schema=schema).createOrReplaceTempView(name)
-                views[scan.temp_view] = name
-        except BaseException:
-            for name in views.values():
-                self.spark.catalog.dropTempView(name)
-            raise
-        return views
+        fetched = False
+        for scan in plan.scans:
+            remote = scan.remote()
+            if remote is None or remote.fetch is None:
+                continue
+            schema = relations[scan.temp_view].schema
+            table = remote.fetch(scan.remote_sql, pushsql.FETCH_ROWS_MAX + 1,
+                                 schema=schema, large_types=large)
+            if table.num_rows <= pushsql.FETCH_ROWS_MAX:
+                relations[scan.temp_view] = self.spark.createDataFrame(table, schema=schema)
+                fetched = True
+        return relations if fetched else None
 
     # ---------------------------------------------------------- inspection
     def explain_tree(self, query: str) -> str:
@@ -621,50 +611,38 @@ class StrakeEngine:
         planning-ladder rung was rejected (the reference logs these as
         unsupported-node warnings, translator/mod.rs:76-145; here they
         are part of the explain output so users need no log access)."""
-        from strake_spark.plans.federation import plan_sql
+        from strake_spark.plans.federation import PushdownPlan, plan_sql
         from strake_spark.plans.iceberg_prune import IcebergPrunePlan
-        from strake_spark.plans.partial import PartialPlan
         from strake_spark.plans.tree import format_plan_tree
 
         ensure_select(query)
         decisions: list[tuple[str, str, str]] = []
         df, pushed = plan_sql(self.spark, query, trace=decisions)
         tree = format_plan_tree(df)
-        footer = ""
-        if decisions and not (
-            pushed is not None and not isinstance(pushed, (IcebergPrunePlan, PartialPlan))
-        ):
+        if isinstance(pushed, PushdownPlan):
+            return (
+                f"RemoteQuery [PUSHED] source={pushed.remote.source} "
+                f"dialect={pushed.remote.dialect}\n"
+                f"  {pushed.rewritten_sql}\n"
+            ) + tree
+        header = footer = ""
+        if isinstance(pushed, IcebergPrunePlan):
+            header = f"IcebergPartitionPruning [{len(pushed.scans)} scans]\n" + "".join(
+                f"  {s.view} -> [PRUNED] {s.files_after}/{s.files_before} files\n"
+                for s in pushed.scans
+            )
+        elif pushed is not None:  # a PartialPlan
+            header = f"PartialPushdown [{len(pushed.scans)} remote scans]\n" + "".join(
+                f"  {s.view} -> [PUSHED to {s.context}] {s.remote_sql}\n"
+                for s in pushed.scans
+            )
+        if decisions:
             width = max(len(r) for r, _, _ in decisions)
             footer = "\nFederationDecision\n" + "\n".join(
                 f"  {rung.ljust(width)}  {status.upper():<8} {reason}"
                 for rung, status, reason in decisions
             )
-        if isinstance(pushed, IcebergPrunePlan):
-            lines = "\n".join(
-                f"  {s.view} -> [PRUNED] {s.files_after}/{s.files_before} files"
-                for s in pushed.scans
-            )
-            return (
-                f"IcebergPartitionPruning [{len(pushed.scans)} scans]\n{lines}\n"
-                + tree + footer
-            )
-        if isinstance(pushed, PartialPlan):
-            lines = "\n".join(
-                f"  {s.view} -> [PUSHED to {s.context}] {s.remote_sql}"
-                for s in pushed.scans
-            )
-            return (
-                f"PartialPushdown [{len(pushed.scans)} remote scans]\n{lines}\n"
-                + tree + footer
-            )
-        if pushed is not None:
-            header = (
-                f"RemoteQuery [PUSHED] source={pushed.remote.source} "
-                f"dialect={pushed.remote.dialect}\n"
-                f"  {pushed.rewritten_sql}\n"
-            )
-            return header + tree
-        return tree + footer
+        return header + tree + footer
 
     def drift_report(self) -> list[dict]:
         """Structured schema-drift records accumulated this process
@@ -937,15 +915,6 @@ class StrakeEngine:
                     "ts": started,
                 }
             )
-
-
-def _rename_views(sql: str, names: dict[str, str]) -> str:
-    """``sql`` with each temp view of ``names`` replaced by its value."""
-    import re
-
-    for old, new in names.items():
-        sql = re.sub(rf"\b{re.escape(old)}\b", new, sql)
-    return sql
 
 
 def connect(

@@ -30,6 +30,9 @@ Spark-first design:
   (crates/sql/src/dialect_router.rs:28-100). A remote execution error
   also falls back to local execution (their circuit-breaker fallback
   analog) unless fallback is disabled.
+- **Pushed relations live for one statement** (plans/binding.py), as a
+  federated subtree is a node of one statement's plan in the reference:
+  ``plan_sql`` binds each rung's relations for the ladder only.
 
 At 100 TB the win is exactly the reference's: a same-source
 join-then-aggregate that reduces 10^9 rows to 10^3 should ship 10^3.
@@ -43,6 +46,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from strake_spark.plans import sqlast
+from strake_spark.plans.binding import bound
 from strake_spark.plans.dialects import rename_functions, rules_for
 from strake_spark.sources.registry import REMOTE_TABLES, RemoteTable
 
@@ -207,6 +211,10 @@ def plan_sql(
     ``trace`` (optional list) collects (rung, status, reason) decisions
     — the reference's unsupported-node warnings surfaced as data, so
     explain_tree can show WHY a statement didn't federate, per rung.
+
+    Every relation a rung binds is dropped before this returns, also on
+    failure; the returned DataFrame, analyzed while they were bound,
+    still runs.
     """
     plan = analyze(sql, trace=trace)
     if plan is not None:
@@ -225,92 +233,83 @@ def plan_sql(
                 plan.remote.context(),
                 e,
             )
-    sub_scans: tuple = ()
-    local_sql = sql  # what the final local rung executes (Spark dialect)
-    try:
-        from strake_spark.plans.partial import register_scans
-        from strake_spark.plans.subtree import analyze_subtrees
+    from strake_spark.plans.iceberg_prune import analyze_iceberg_prune
+    from strake_spark.plans.partial import PartialPlan, analyze_partial
+    from strake_spark.plans.subtree import analyze_subtrees
 
-        st = analyze_subtrees(spark, sql)
-        if st is None:
-            _note(trace, "subtree", "rejected",
-                  "no same-source subtree ships a reduction")
-        if st is not None:
-            # register first (lazy), then the rewritten outer statement
-            # must PARSE AND RESOLVE before it may replace the original;
-            # any failure degrades to the unrewritten ladder
-            try:
-                register_scans(spark, st.scans)
-                spark.sql(st.spark_sql).schema
-            except Exception:
-                # drop the half-registered remote-backed views: a failed
-                # planning attempt must not leak catalog entries
+    # one binding across the ladder: later rungs resolve the relations
+    # earlier rungs bound, and every name is gone when planning returns
+    with bound(spark) as binding:
+        sub_scans: tuple = ()
+        local_sql = sql  # what the final local rung executes (Spark dialect)
+        try:
+            st = analyze_subtrees(spark, sql)
+            if st is None:
+                _note(trace, "subtree", "rejected",
+                      "no same-source subtree ships a reduction")
+            if st is not None:
+                # bind first (lazy), then the rewritten outer statement
+                # must PARSE AND RESOLVE before it may replace the
+                # original; any failure degrades to the unrewritten ladder
                 for s in st.scans:
-                    try:
-                        spark.catalog.dropTempView(s.temp_view)
-                    except Exception:  # pragma: no cover - best effort
-                        pass
+                    binding.bind(s.temp_view, s.frame(spark))
+                spark.sql(st.spark_sql).schema
+                sql, local_sql, sub_scans = st.duck_sql, st.spark_sql, st.scans
+                _note(trace, "subtree", "applied",
+                      f"{len(st.scans)} shipped subtree(s)")
+                log.info(
+                    "subtree pushdown: %s",
+                    "; ".join(f"{s.view} -> ({s.remote_sql})" for s in st.scans),
+                )
+        except Exception as e:  # noqa: BLE001 - subtree shipping is optional
+            _note(trace, "subtree", "failed", str(e))
+            log.warning("subtree pushdown analysis failed (%s); original plan", e)
+        ice_plan = None
+        try:
+            ice = analyze_iceberg_prune(spark, sql)
+            if ice is None:
+                _note(trace, "iceberg_prune", "rejected",
+                      "no iceberg-backed scan with prunable partition predicates")
+            if ice is not None:
+                # the pruned statement comes back DuckDB-parseable so the
+                # partial-pushdown rung can re-serialize it; its Spark form
+                # must PARSE AND RESOLVE before it may replace the original
+                # — a deserializer artifact degrades to the unpruned plan,
+                # never fails the query
+                pruned_raw, plan_candidate = ice
+                pruned_spark = sqlast.fix_for_spark(pruned_raw)
+                for name, df in plan_candidate.relations.items():
+                    binding.bind(name, df)
+                spark.sql(pruned_spark).schema
+                sql, local_sql, ice_plan = pruned_raw, pruned_spark, plan_candidate
+                _note(trace, "iceberg_prune", "applied",
+                      f"{len(plan_candidate.scans)} scan(s) pruned")
+        except Exception as e:  # noqa: BLE001 - pruning is optional
+            _note(trace, "iceberg_prune", "failed", str(e))
+            log.warning("iceberg partition-prune analysis failed (%s); original plan", e)
+        try:
+            partial = analyze_partial(spark, sql)
+            if partial is None:
+                _note(trace, "partial", "rejected",
+                      "no remote scan gains from per-table filter/projection shipping")
+            if partial is not None:
+                rewritten, pplan = partial
+                for s in pplan.scans:
+                    binding.bind(s.temp_view, s.frame(spark))
+                df = spark.sql(rewritten)
+                if sub_scans:  # report shipped subtrees alongside the scans
+                    pplan.scans = tuple(sub_scans) + tuple(pplan.scans)
+                pplan.relations = dict(binding)
+                _note(trace, "partial", "applied", f"{len(pplan.scans)} remote scan(s)")
+                return df, pplan
+        except Exception as e:  # noqa: BLE001 - any partial failure -> local
+            if not allow_fallback:
                 raise
-            sql, local_sql, sub_scans = st.duck_sql, st.spark_sql, st.scans
-            _note(trace, "subtree", "applied",
-                  f"{len(st.scans)} shipped subtree(s)")
-            log.info(
-                "subtree pushdown: %s",
-                "; ".join(f"{s.view} -> ({s.remote_sql})" for s in st.scans),
-            )
-    except Exception as e:  # noqa: BLE001 - subtree shipping is optional
-        _note(trace, "subtree", "failed", str(e))
-        log.warning("subtree pushdown analysis failed (%s); original plan", e)
-    ice_plan = None
-    try:
-        from strake_spark.plans.iceberg_prune import analyze_iceberg_prune
-
-        ice = analyze_iceberg_prune(spark, sql)
-        if ice is None:
-            _note(trace, "iceberg_prune", "rejected",
-                  "no iceberg-backed scan with prunable partition predicates")
-        if ice is not None:
-            # the pruned statement comes back DuckDB-parseable so the
-            # partial-pushdown rung can re-serialize it; its Spark form
-            # must PARSE AND RESOLVE before it may replace the original
-            # — a deserializer artifact degrades to the unpruned plan,
-            # never fails the query
-            pruned_raw, plan_candidate = ice
-            pruned_spark = sqlast.fix_for_spark(pruned_raw)
-            spark.sql(pruned_spark).schema
-            sql, local_sql, ice_plan = pruned_raw, pruned_spark, plan_candidate
-            _note(trace, "iceberg_prune", "applied",
-                  f"{len(plan_candidate.scans)} scan(s) pruned")
-    except Exception as e:  # noqa: BLE001 - pruning is optional
-        _note(trace, "iceberg_prune", "failed", str(e))
-        log.warning("iceberg partition-prune analysis failed (%s); original plan", e)
-    try:
-        from strake_spark.plans.partial import analyze_partial, register_scans
-
-        partial = analyze_partial(spark, sql)
-        if partial is None:
-            _note(trace, "partial", "rejected",
-                  "no remote scan gains from per-table filter/projection shipping")
-        if partial is not None:
-            rewritten, pplan = partial
-            register_scans(spark, pplan.scans)
-            df = spark.sql(rewritten)
-            df.schema
-            if sub_scans:  # report shipped subtrees alongside the scans
-                pplan.scans = tuple(sub_scans) + tuple(pplan.scans)
-                pplan.rewritten_sql = pplan.summary()
-            _note(trace, "partial", "applied", f"{len(pplan.scans)} remote scan(s)")
-            return df, pplan
-    except Exception as e:  # noqa: BLE001 - any partial failure -> local
-        if not allow_fallback:
-            raise
-        _note(trace, "partial", "failed", str(e))
-        log.warning("partial pushdown failed (%s); executing locally", e)
-    _note(trace, "local", "applied", "executing on Spark")
-    if sub_scans:
-        from strake_spark.plans.partial import PartialPlan
-
-        pplan = PartialPlan(scans=tuple(sub_scans), local_sql=local_sql)
-        pplan.rewritten_sql = pplan.summary()
-        return spark.sql(local_sql), pplan
-    return spark.sql(local_sql), ice_plan
+            _note(trace, "partial", "failed", str(e))
+            log.warning("partial pushdown failed (%s); executing locally", e)
+        _note(trace, "local", "applied", "executing on Spark")
+        df = spark.sql(local_sql)
+        if sub_scans:
+            return df, PartialPlan(scans=tuple(sub_scans), local_sql=local_sql,
+                                   relations=dict(binding))
+        return df, ice_plan

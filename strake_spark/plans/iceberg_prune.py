@@ -20,8 +20,10 @@ partition metadata can match, by
 3. rebuilding the scan DataFrame via
    sources.iceberg_native.pruned_files_and_df (manifest-summary +
    per-entry pruning) when the extra predicates strictly shrink the
-   file list, registering it as a temp view, and
-4. rewriting the statement's table ref to that view.
+   file list, and
+4. rewriting the statement's table ref to a private name, which
+   ``plan_sql`` binds to the pruned scan for one statement only
+   (plans/binding.py).
 
 Safety model (same as partial.py rule 1): the extracted predicates are
 NEVER removed from the statement — Spark still evaluates the full WHERE
@@ -38,13 +40,13 @@ instead of just registration-time filters.
 
 from __future__ import annotations
 
-import hashlib
 import logging
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from strake_spark.plans import sqlast
+from strake_spark.plans.binding import private_name
 
 log = logging.getLogger("strake_spark.federation.iceberg_prune")
 
@@ -105,36 +107,6 @@ def _extract_pred(node: dict, view_cols, alias: str, others: set[str]):
     raise _Skip
 
 
-# Bounded registry of pruned temp views (a dashboard varying a literal
-# per query would otherwise accumulate one catalog entry + embedded
-# file-list plan per distinct predicate for the session's lifetime).
-# Keyed by temp-view name; evicted views are dropped from the catalog.
-# Lock: plan_sql runs on every REST worker thread — evicting a view no
-# longer breaks in-flight queries (their plans resolved at analysis),
-# but the OrderedDict itself must not be mutated concurrently.
-import threading as _threading
-from collections import OrderedDict as _OrderedDict
-
-_PRUNE_VIEWS: _OrderedDict = _OrderedDict()
-_PRUNE_VIEWS_MAX = 64
-_PRUNE_VIEWS_LOCK = _threading.Lock()
-
-
-def _remember_prune_view(spark: SparkSession, temp: str) -> None:
-    evicted: list[str] = []
-    with _PRUNE_VIEWS_LOCK:
-        _PRUNE_VIEWS[temp] = None
-        _PRUNE_VIEWS.move_to_end(temp)
-        while len(_PRUNE_VIEWS) > _PRUNE_VIEWS_MAX:
-            old, _ = _PRUNE_VIEWS.popitem(last=False)
-            evicted.append(old)
-    for old in evicted:
-        try:
-            spark.catalog.dropTempView(old)
-        except Exception:  # noqa: BLE001 - already gone
-            pass
-
-
 @dataclass
 class PrunedScan:
     view: str
@@ -150,9 +122,13 @@ class IcebergPrunePlan:
     IS scan pushdown — partition predicates reached the file listing."""
 
     scans: tuple[PrunedScan, ...]
-    rewritten_sql: str = ""
+    # each pruned scan's DataFrame under its temp_view, bound only while
+    # a statement is analyzed (plans/binding.py)
+    relations: dict[str, DataFrame] = field(default_factory=dict, repr=False)
 
-    def summary(self) -> str:
+    @property
+    def rewritten_sql(self) -> str:
+        """Human-readable summary: each view's kept files and predicates."""
         return "; ".join(
             f"{s.view}: {s.files_after}/{s.files_before} files "
             f"({', '.join(f'{c} {o} {v!r}' for c, o, v in s.preds)})"
@@ -200,7 +176,7 @@ def analyze_iceberg_prune(spark: SparkSession, sql: str):
         info = ICEBERG_VIEWS.get(name) or ICEBERG_VIEWS.get(name.lower())
         resolved.append((node, name, info, cols_of(name)))
 
-    scans: list[tuple[PrunedScan, object]] = []  # (scan, its DataFrame)
+    plan = IcebergPrunePlan(scans=())
     for node, name, info, _ in resolved:
         if info is None or not info.partition_cols:
             continue
@@ -225,25 +201,18 @@ def analyze_iceberg_prune(spark: SparkSession, sql: str):
         if result is None:
             continue
         before, after, df = result
-        digest = hashlib.sha256(
-            repr((name, info.snapshot_id, info.as_of_timestamp_ms, preds)).encode()
-        ).hexdigest()[:10]
-        temp = f"strake_iceprune_{digest}"
+        temp = private_name("strake_iceprune")
         sqlast.retarget(node, temp, name)
-        scans.append((PrunedScan(name, temp, before, after, tuple(preds)), df))
+        plan.scans += (PrunedScan(name, temp, before, after, tuple(preds)),)
+        plan.relations[temp] = df
 
-    if not scans:
+    if not plan.scans:
         return None
     rewritten = sqlast.unparse(ast)
     if rewritten is None:
-        return None  # no views created yet: nothing leaks on abandon
+        return None
     # NB: returned in DuckDB-parseable form (double-quoted identifiers
     # et al), NOT Spark form — the planning ladder may feed it back
     # through the AST machinery (partial pushdown); the caller applies
     # sqlast.fix_for_spark before handing it to spark.sql.
-    for s, df in scans:
-        df.createOrReplaceTempView(s.temp_view)
-        _remember_prune_view(spark, s.temp_view)
-    plan = IcebergPrunePlan(scans=tuple(s for s, _ in scans))
-    plan.rewritten_sql = plan.summary()
     return rewritten, plan

@@ -41,16 +41,22 @@ Safety model — three rules that make this correct-by-construction:
 At 100 TB this is the difference between shipping a 10^9-row remote
 table to the cluster and shipping the 10^5 rows that survive the scan
 predicate — while staying provably equivalent to local execution.
+
+A pushed scan's relation is bound for one statement only
+(plans/binding.py); ``PartialPlan.relations`` keeps each one that
+``local_sql`` names, for the engine to rebind at run time.
 """
 
 from __future__ import annotations
 
 import logging
+import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
 from strake_spark.plans import sqlast
+from strake_spark.plans.binding import private_name
 from strake_spark.plans.dialects import rules_for
 from strake_spark.plans.federation import resolve_remotes
 from strake_spark.sources.pushsql import quote_ident
@@ -233,19 +239,10 @@ class _ConjunctSql:
 # -------------------------------------------------------------- planning
 
 
-def pushed_temp_name(prefix: str, i: int, context: str, remote_sql: str) -> str:
-    """Deterministic temp-view name for a pushed scan/subtree: one
-    naming scheme shared by the partial and subtree rungs."""
-    import hashlib
-
-    digest = hashlib.sha256(f"{context}\x1f{remote_sql}".encode()).hexdigest()[:10]
-    return f"{prefix}_{i}_{digest}"
-
-
 @dataclass(frozen=True)
 class PushedScan:
     view: str  # original Spark view (a subtree's: its CTE name or alias)
-    temp_view: str  # substituted temp view name
+    temp_view: str  # the statement-private name that replaces it (plans/binding.py)
     remote_sql: str
     context: str
 
@@ -257,17 +254,29 @@ class PushedScan:
             return remote
         return next((r for r in REMOTE_TABLES.values() if r.context() == self.context), None)
 
+    def frame(self, spark: SparkSession) -> DataFrame:
+        """The lazy remote scan behind ``temp_view``: the remote
+        statement runs when the outer statement executes."""
+        remote = self.remote()
+        if remote is None:  # pragma: no cover - registry drift
+            raise RuntimeError(f"no source registered for context {self.context}")
+        return remote.scan(spark, self.remote_sql)
+
 
 @dataclass
 class PartialPlan:
     """Mixed-source statement with >=1 remote scan pushed down."""
 
     scans: tuple[PushedScan, ...]
-    local_sql: str  # the statement Spark runs over the temp views
-    rewritten_sql: str = field(default="")  # human-readable summary
-    remote: RemoteTable | None = None  # representative, for trace/metrics
+    local_sql: str  # the statement Spark runs over ``relations``
+    # every relation local_sql names, bound only while a statement is
+    # analyzed; ``lock`` serializes rebinding these fixed names
+    relations: dict[str, DataFrame] = field(default_factory=dict, repr=False)
+    lock: threading.Lock = field(default_factory=threading.Lock, repr=False, compare=False)
 
-    def summary(self) -> str:
+    @property
+    def rewritten_sql(self) -> str:
+        """Human-readable summary: each pushed view and its remote SQL."""
         return "; ".join(f"{s.view} -> ({s.remote_sql})" for s in self.scans)
 
 
@@ -329,7 +338,7 @@ def analyze_partial(spark: SparkSession, sql: str):
     conjuncts = sqlast.conjuncts(select.get("where_clause"))
 
     scans: list[PushedScan] = []
-    for i, t in enumerate(tables):
+    for t in tables:
         others = {c.lower() for o in tables if o is not t for c in o.columns}
         # projection: everything referenced that this table can own
         needed = {
@@ -359,7 +368,7 @@ def analyze_partial(spark: SparkSession, sql: str):
             remote_sql += " WHERE " + " AND ".join(where_parts)
         remote_sql = rules_for(t.remote.dialect).fix_text(remote_sql)
 
-        temp = pushed_temp_name("strake_pushed", i, t.remote.context(), remote_sql)
+        temp = private_name("strake_pushed")
         sqlast.retarget(t.node, temp, t.view)
         scans.append(
             PushedScan(view=t.view, temp_view=temp, remote_sql=remote_sql,
@@ -372,21 +381,4 @@ def analyze_partial(spark: SparkSession, sql: str):
     if local_sql is None:
         return None
     local_sql = sqlast.fix_for_spark(local_sql)
-    plan = PartialPlan(
-        scans=tuple(scans),
-        local_sql=local_sql,
-        remote=tables[0].remote,
-    )
-    plan.rewritten_sql = plan.summary()
-    return local_sql, plan
-
-
-def register_scans(spark: SparkSession, scans) -> None:
-    """Register each pushed scan (a partial scan or a shipped subtree)
-    as a lazy temp view over its remote: the remote statement runs when
-    the outer statement executes."""
-    for scan in scans:
-        remote = scan.remote()
-        if remote is None:  # pragma: no cover - registry drift
-            raise RuntimeError(f"no source registered for context {scan.context}")
-        remote.scan(spark, scan.remote_sql).createOrReplaceTempView(scan.temp_view)
+    return local_sql, PartialPlan(scans=tuple(scans), local_sql=local_sql)

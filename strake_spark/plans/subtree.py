@@ -14,9 +14,10 @@ subtree shapes that are provably safe to ship from SQL text alone:
 
 A shipped subtree executes remotely — the join/aggregate reduction
 happens inside the source engine, and Spark scans only the (small)
-result as a temp view. The rewritten outer statement then continues
-down the existing ladder, so iceberg partition pruning and per-table
-partial pushdown still apply to the remaining local portion.
+result, bound for one statement only (plans/binding.py). The rewritten
+outer statement then continues down the existing ladder, so iceberg
+partition pruning and per-table partial pushdown still apply to the
+remaining local portion.
 
 Safety rules (violations degrade to the next ladder rung, never error):
 
@@ -43,9 +44,10 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 
 from strake_spark.plans import sqlast
+from strake_spark.plans.binding import private_name
 from strake_spark.plans.dialects import rename_functions, rules_for
 from strake_spark.plans.federation import _rewrite_remote_ref, resolve_remotes
-from strake_spark.plans.partial import PushedScan, pushed_temp_name
+from strake_spark.plans.partial import PushedScan
 from strake_spark.sources.registry import REMOTE_TABLES, RemoteTable
 
 log = logging.getLogger("strake_spark.federation.subtree")
@@ -134,6 +136,17 @@ def analyze_subtrees(spark: SparkSession, sql: str) -> SubtreeResult | None:
     all_ctes = sqlast.cte_names(ast)
     scans: list = []
 
+    def ship(q_node: dict, outer_ctes: set[str], view: str | None) -> str | None:
+        """The private name of ``q_node``'s shipped relation, or None."""
+        hit = _try_push_subtree(spark, q_node, outer_ctes)
+        if hit is None:
+            return None
+        remote_sql, rep = hit
+        temp = private_name("strake_sub")
+        scans.append(PushedScan(view=view or temp, temp_view=temp,
+                                remote_sql=remote_sql, context=rep.context()))
+        return temp
+
     def visit(node) -> None:
         if isinstance(node, dict):
             cte = node.get("cte_map")
@@ -141,15 +154,9 @@ def analyze_subtrees(spark: SparkSession, sql: str) -> SubtreeResult | None:
                 for entry in cte.get("map", []):
                     q = (entry.get("value") or {}).get("query")
                     if isinstance(q, dict) and isinstance(q.get("node"), dict):
-                        hit = _try_push_subtree(spark, q["node"], all_ctes - {entry["key"].lower()})
-                        if hit is not None:
-                            remote_sql, rep = hit
-                            temp = _temp_name(len(scans), rep, remote_sql)
+                        temp = ship(q["node"], all_ctes - {entry["key"].lower()}, entry["key"])
+                        if temp is not None:
                             q["node"] = sqlast.select_star(temp)
-                            scans.append(
-                                PushedScan(view=entry["key"], temp_view=temp,
-                                           remote_sql=remote_sql, context=rep.context())
-                            )
                             continue
                         visit(q)
             if (
@@ -162,16 +169,9 @@ def analyze_subtrees(spark: SparkSession, sql: str) -> SubtreeResult | None:
             ):
                 inner = node["subquery"].get("node")
                 if isinstance(inner, dict):
-                    hit = _try_push_subtree(spark, inner, all_ctes)
-                    if hit is not None:
-                        remote_sql, rep = hit
-                        temp = _temp_name(len(scans), rep, remote_sql)
-                        alias = node.get("alias") or temp
-                        sqlast.retarget(node, temp, alias)
-                        scans.append(
-                            PushedScan(view=alias, temp_view=temp,
-                                       remote_sql=remote_sql, context=rep.context())
-                        )
+                    temp = ship(inner, all_ctes, node.get("alias"))
+                    if temp is not None:
+                        sqlast.retarget(node, temp, temp)
                         return
                     visit(node["subquery"])
                 for k, v in node.items():
@@ -194,7 +194,3 @@ def analyze_subtrees(spark: SparkSession, sql: str) -> SubtreeResult | None:
     return SubtreeResult(
         duck_sql=duck_sql, spark_sql=sqlast.fix_for_spark(duck_sql), scans=tuple(scans)
     )
-
-
-def _temp_name(i: int, rep: RemoteTable, remote_sql: str) -> str:
-    return pushed_temp_name("strake_sub", i, rep.context(), remote_sql)

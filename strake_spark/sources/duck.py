@@ -69,10 +69,32 @@ def discover_tables(path: str) -> list[str]:
     return [r[0] for r in rows]
 
 
+def _check_schemas(cfg: SourceConfig) -> None:
+    """Refuse a table whose ``schema`` also names an attached catalog:
+    DuckDB attaches the database file under its stem (``sales.duckdb``
+    is catalog ``sales``), and ``"sales"."orders"`` is then ambiguous."""
+    if not any(t.schema for t in cfg.tables):
+        return
+    con = _connect(cfg.url)
+    try:
+        rows = con.execute("SELECT database_name FROM duckdb_databases()").fetchall()
+    finally:
+        con.close()
+    catalogs = {r[0].lower() for r in rows}
+    for t in cfg.tables:
+        if t.schema and t.schema.lower() in catalogs:
+            raise SourceError(
+                f"duckdb source {cfg.name!r} table {t.name!r}: schema {t.schema!r} is "
+                "ambiguous, as a database catalog has the same name; rename the "
+                "schema or the database file"
+            )
+
+
 @source_type("duckdb")
 def register_duckdb_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
     if not cfg.url:
         raise SourceError(f"duckdb source {cfg.name!r} needs url (database file path)")
+    _check_schemas(cfg)
     names = [t.name for t in cfg.tables] or discover_tables(cfg.url)
     return pushsql.register_tables(
         spark, cfg, DuckDBDataSource, "duckdb", {"path": cfg.url}, names, default_partitions=8

@@ -1286,11 +1286,10 @@ class TestLadderComposition:
         assert isinstance(plan, PartialPlan)
         assert "region_dim" in plan.rewritten_sql
         # ...AND the iceberg scan inside the rewritten statement is the
-        # pruned temp view (2 of 4 files), not the full view
-        assert any(
-            v.startswith("strake_iceprune_")
-            for v in [r.name for r in spark.catalog.listTables()]
-        )
+        # pruned relation (2 of 4 files), not the full view
+        pruned = [n for n in plan.relations if n.startswith("strake_iceprune_")]
+        assert len(pruned) == 1 and pruned[0] in plan.local_sql
+        assert len(plan.relations[pruned[0]].inputFiles()) == 2
 
     def test_reserved_word_identifier_roundtrip(self, spark, part_table, tmp_path):
         """Single-table iceberg statement selecting into a reserved-word

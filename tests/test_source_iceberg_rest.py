@@ -219,25 +219,3 @@ class TestEngineOverRestCatalog:
         assert isinstance(plan, IcebergPrunePlan)
         (s,) = plan.scans
         assert (s.files_before, s.files_after) == (4, 2)
-
-
-class TestPruneViewHousekeeping:
-    def test_prune_view_registry_bounded(self):
-        """Distinct predicates must not leak temp views without bound."""
-        from strake_spark.plans import iceberg_prune as ip
-
-        dropped = []
-
-        class FakeCatalog:
-            def dropTempView(self, name):
-                dropped.append(name)
-
-        class FakeSpark:
-            catalog = FakeCatalog()
-
-        ip._PRUNE_VIEWS.clear()
-        for i in range(ip._PRUNE_VIEWS_MAX + 10):
-            ip._remember_prune_view(FakeSpark(), f"strake_iceprune_{i:04d}")
-        assert len(ip._PRUNE_VIEWS) == ip._PRUNE_VIEWS_MAX
-        assert dropped == [f"strake_iceprune_{i:04d}" for i in range(10)]
-        ip._PRUNE_VIEWS.clear()

@@ -126,6 +126,24 @@ def test_table_schema_duckdb(spark, sales_db, sales_views):
     assert eng.execute(sql).to_pylist() == _SALES
 
 
+def test_table_schema_named_like_the_duckdb_file(spark, tmp_path, sales_views):
+    """DuckDB attaches ``sales.duckdb`` as catalog ``sales``, so schema
+    ``sales`` is ambiguous: registration names the table and the
+    ambiguity in a ``SourceError``, not a raw ``BinderException``."""
+    from strake_spark.errors import SourceError
+
+    path = str(tmp_path / "sales.duckdb")
+    con = duckdb.connect(path)
+    con.execute("CREATE SCHEMA sales.sales")
+    con.execute("CREATE TABLE sales.sales.orders AS SELECT 1 AS k")
+    con.close()
+    with pytest.raises(SourceError, match=r"'orders'.*schema 'sales' is ambiguous"):
+        ss.connect({"sources": [{"name": "sdk", "type": "duckdb", "url": path,
+                                 "tables": [{"name": "orders", "schema": "sales"}]}]},
+                   spark=spark)
+    assert "sdk_orders" not in REMOTE_TABLES
+
+
 def test_table_schema_wire(spark, sales_db, sales_views):
     """Every statement a wire source sends for a ``schema:`` table names
     it ``"sales"."orders"`` (pushed text: ``sales.orders``)."""
