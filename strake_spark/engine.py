@@ -36,8 +36,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from strake_spark.config import EngineConfig, load_config
-from strake_spark.errors import QueryRejected
+from strake_spark.config import EngineConfig, SourceConfig, load_config
+from strake_spark.errors import QueryRejected, SourceError
 from strake_spark.governance.gate import ensure_select, sanitize_identifier
 from strake_spark.governance.limits import (
     apply_defensive_limit,
@@ -49,7 +49,12 @@ from strake_spark.plans import sqlast
 from strake_spark.plans.binding import bound
 from strake_spark.session import build_session
 from strake_spark.sources import pushsql
-from strake_spark.sources.registry import bump_catalog_epoch, catalog_epoch, register_source
+from strake_spark.sources.registry import (
+    bump_catalog_epoch,
+    catalog_epoch,
+    ordered_map,
+    register_source,
+)
 
 log = logging.getLogger("strake_spark.engine")
 
@@ -135,8 +140,7 @@ class StrakeEngine:
             priority_reserved=getattr(self.config, "priority_reserved_slots", 0),
         )
         self._breakers: dict[str, CircuitBreaker] = {}
-        for src in self.config.sources:
-            self.register(src)
+        self._register_all(self.config.sources)
         self._policies = None
         if getattr(self.config, "policies", None) is not None and self.config.policies.enabled:
             from strake_spark.governance.policies import PolicyEnforcer
@@ -175,9 +179,31 @@ class StrakeEngine:
 
     # ------------------------------------------------------------- sources
     def register(self, source_cfg) -> list[str]:
+        views = register_source(self.spark, source_cfg)
+        self._remember(source_cfg, views)
+        return views
+
+    def _register_all(self, sources: list[SourceConfig]) -> None:
+        """Register ``sources`` concurrently, then do each one's
+        bookkeeping in config order. Two sources that make one view name
+        are refused: with no registration order, neither would reliably
+        win."""
+        registered = ordered_map(lambda cfg: register_source(self.spark, cfg), sources)
+        owners: dict[str, SourceConfig] = {}
+        for cfg, views in zip(sources, registered):
+            for v in views:
+                first = owners.setdefault(v.lower(), cfg)
+                if first is not cfg:
+                    raise SourceError(
+                        f"sources {first.name!r} and {cfg.name!r} both register view {v!r}; "
+                        "rename one source or table"
+                    )
+        for cfg, views in zip(sources, registered):
+            self._remember(cfg, views)
+
+    def _remember(self, source_cfg: SourceConfig, views: list[str]) -> None:
         from strake_spark.reliability import CircuitBreaker
 
-        views = register_source(self.spark, source_cfg)
         self._views[source_cfg.name] = views
         from strake_spark.governance.contracts import STRICT_VIEWS
 
@@ -193,7 +219,6 @@ class StrakeEngine:
         )
         self._breakers.setdefault(source_cfg.name, CircuitBreaker(source_cfg.name))
         log.info("registered source %s -> %s", source_cfg.name, views)
-        return views
 
     def _touched_sources(self, query: str) -> tuple[str, ...]:
         """Sources whose views a statement references (AST-derived;

@@ -31,7 +31,7 @@ from pyspark.sql import SparkSession
 
 from strake_spark.sources.registry import catalog_epoch
 
-from strake_spark.errors import QueryRejected
+from strake_spark.errors import ErrorCode, QueryRejected
 
 
 @dataclass
@@ -162,6 +162,13 @@ def register_secured_views(
 _IDENT = r"(?<![A-Za-z0-9_])({names})(?![A-Za-z0-9_])"
 
 
+def _segments(sql: str) -> list[str]:
+    """``sql`` split into alternating code and single-quoted string
+    literal segments (odd indexes are literals); '' escapes stay inside
+    one literal segment because the regex is non-greedy pairwise."""
+    return re.split(r"('(?:[^']|'')*')", sql)
+
+
 def rename_tables(sql: str, mapping: dict[str, str]) -> str:
     """Consistently rename identifiers outside single-quoted string
     literals (so a literal 'orders' is never corrupted)."""
@@ -171,16 +178,26 @@ def rename_tables(sql: str, mapping: dict[str, str]) -> str:
         _IDENT.format(names="|".join(re.escape(t) for t in sorted(mapping, key=len, reverse=True))),
         re.IGNORECASE,
     )
-    # split into string-literal and non-literal segments; '' escapes stay
-    # inside one literal segment because the regex is non-greedy pairwise
-    parts = re.split(r"('(?:[^']|'')*')", sql)
     out = []
-    for i, part in enumerate(parts):
+    for i, part in enumerate(_segments(sql)):
         if i % 2 == 1:  # a string literal
             out.append(part)
         else:
             out.append(pattern.sub(lambda m: mapping[m.group(1).lower()], part))
     return "".join(out)
+
+
+def names_secured_view(sql: str, tables: set[str]) -> bool:
+    """Whether ``sql`` names a secured view of one of ``tables`` (any
+    ``<table>__rls_...`` outside string literals). Judged on the text,
+    so a statement no parser reads is judged too."""
+    if not tables:
+        return False
+    pattern = re.compile(
+        r"(?<![A-Za-z0-9_])(?:" + "|".join(re.escape(t) for t in sorted(tables)) + r")__rls_",
+        re.IGNORECASE,
+    )
+    return any(pattern.search(part) for part in _segments(sql)[::2])
 
 
 class PolicyEnforcer:
@@ -192,10 +209,20 @@ class PolicyEnforcer:
         self.policy = policy
         # roles -> (catalog epoch, table -> secured view)
         self._registered: dict[tuple[str, ...], tuple[int, dict[str, str]]] = {}
+        self._tables = {t for rules in policy.roles.values() for t in rules}
 
     def rewrite(self, sql: str, user: str | None) -> str:
         if not self.policy.enabled or user is None:
+            # no principal: every table reads unfiltered (the engine
+            # also plans its own rewritten text this way)
             return sql
+        # a secured view holds some role set's rows: only the rename
+        # below may name one
+        if names_secured_view(sql, self._tables):
+            raise QueryRejected(
+                "statement names a row-level-security view; name the table instead",
+                code=ErrorCode.AUTHORIZATION_DENIED,
+            )
         roles = tuple(sorted(self.policy.users.get(user, ())))
         if not roles:
             # unknown users get nothing when policies are on (deny-by-

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from strake_spark.config import SourceConfig, TableConfig, opt_bool
 from strake_spark.errors import SourceError
 from strake_spark.governance.gate import sanitize_identifier
-from strake_spark.sources.registry import source_type
+from strake_spark.sources.registry import ordered_map, source_type
 
 _FORMATS = {"parquet", "csv", "json", "ndjson"}
 
@@ -311,13 +311,13 @@ def register_file_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
     fmt = cfg.type if cfg.type in _FORMATS else str(cfg.options.get("format", "parquet"))
     _configure_object_store(spark, cfg)
     base = cfg.url or ""
-    registered: list[str] = []
     if not cfg.tables:
         raise SourceError(f"file source {cfg.name!r} declares no tables")
     # string-aware (r18 advice): env/JSON-substituted "false" must not
     # silently enable the distributed readers
     distributed = opt_bool(cfg.options.get("distributed"))
-    for tbl in cfg.tables:
+
+    def register(tbl: TableConfig) -> str:
         path = tbl.path or os.path.join(base, f"{tbl.name}.{ 'parquet' if fmt == 'parquet' else fmt }")
         if distributed and fmt == "parquet" and path.startswith(("s3://", "az://", "gs://")):
             # executor-parallel jar-free readers (r17): keys distribute
@@ -343,8 +343,7 @@ def register_file_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
                 df = df.limit(cfg.default_limit)
             name = view_name(cfg.name, tbl.name)
             df.createOrReplaceTempView(name)
-            registered.append(name)
-            continue
+            return name
         if path.startswith(("ftp://", "ftps://", "sftp://")):
             path = _spool_ftp(path, cfg.options)
         elif path.startswith(("http://", "https://")):
@@ -382,5 +381,6 @@ def register_file_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
             df = df.limit(cfg.default_limit)
         name = view_name(cfg.name, tbl.name)
         df.createOrReplaceTempView(name)
-        registered.append(name)
-    return registered
+        return name
+
+    return ordered_map(register, cfg.tables)

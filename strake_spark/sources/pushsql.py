@@ -263,12 +263,21 @@ def register_tables(
     in the source's explicit ``num_partitions``, else in
     ``default_partitions``; an explicit value applies without a column
     too, for readers that split by an implicit key (sqlite's rowid).
-    Each table loads once; declared columns reconcile drift. A table's
+    Each table loads once, concurrently with the others, with its schema
+    from the source's own probe on the driver, so ``load()`` calls no
+    Python worker; declared columns reconcile drift. A table's
     ``schema`` names its remote namespace: its scans read
     ``"schema"."table"`` and pushed statements name it qualified."""
+    from pyspark.sql.datasource import CaseInsensitiveDict
+
     from strake_spark.sources.drift import reconcile
     from strake_spark.sources.file import view_name
-    from strake_spark.sources.registry import RemoteTable, ensure_format, remember_remote
+    from strake_spark.sources.registry import (
+        RemoteTable,
+        ensure_format,
+        ordered_map,
+        remember_remote,
+    )
 
     ensure_format(spark, source_cls)
     fmt = source_cls.name()
@@ -282,8 +291,8 @@ def register_tables(
     fetch = DriverFetch(source_cls, base)
 
     declared = {t.name: t for t in cfg.tables}
-    registered: list[str] = []
-    for name in names:
+
+    def register(name: str) -> str:
         tbl = declared.get(name)
         column = tbl.partition_column if tbl is not None else None
         schema = tbl.schema if tbl is not None else None
@@ -296,15 +305,17 @@ def register_tables(
         if n_parts:
             options["num_partitions"] = str(n_parts)
         view = view_name(cfg.name, name)
-        df = spark.read.format(fmt).options(**options).load()
+        struct = source_cls(CaseInsensitiveDict(options)).schema()
+        df = spark.read.format(fmt).options(**options).schema(struct).load()
         columns = tbl.struct_type() if tbl is not None else None
         if columns is not None:
             df = reconcile(df, columns, context=view)
         df.createOrReplaceTempView(view)
         remember_remote(view, RemoteTable(
             cfg.name, dialect, cfg.url, name, schema=schema, push_query=push_query, fetch=fetch))
-        registered.append(view)
-    return registered
+        return view
+
+    return ordered_map(register, names)
 
 
 # ------------------------------------------------------- driver-side reads

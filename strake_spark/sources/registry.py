@@ -13,15 +13,20 @@ federation.rs:176 + sources/sql/mod.rs:73-80).
 from __future__ import annotations
 
 import threading
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
 
 from strake_spark.config import SourceConfig
 from strake_spark.errors import SourceError
+from strake_spark.session import default_parallelism
 
 RegisterFn = Callable[[SparkSession, SourceConfig], list[str]]
+
+T = TypeVar("T")
+R = TypeVar("R")
 
 SOURCE_TYPES: dict[str, RegisterFn] = {}
 
@@ -77,16 +82,19 @@ def remember_remote(view: str, remote: RemoteTable) -> None:
 
 # (id(SparkContext), DataSource class) pairs already registered
 _FORMATS: set[tuple[int, type]] = set()
+_formats_lock = threading.Lock()
 
 
 def ensure_format(spark: SparkSession, cls: type) -> None:
     """Register a Python DataSource class with the session's context,
-    once per context. The only caller of ``spark.dataSource.register``
-    in the package (a tier-1 test greps for it)."""
+    once per context, also when sources register concurrently. The only
+    caller of ``spark.dataSource.register`` in the package (a tier-1
+    test greps for it)."""
     key = (id(spark.sparkContext), cls)
-    if key not in _FORMATS:
-        spark.dataSource.register(cls)
-        _FORMATS.add(key)
+    with _formats_lock:
+        if key not in _FORMATS:
+            spark.dataSource.register(cls)
+            _FORMATS.add(key)
 
 
 def source_type(*names: str):
@@ -129,6 +137,59 @@ def register_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
         # after the views are replaced: a key computed from now on can
         # never meet a plan made over the old views
         bump_catalog_epoch()
+
+
+# the threads the current thread may run registration work on, itself
+# included; unset means default_parallelism()
+_share = threading.local()
+
+
+def ordered_map(fn: Callable[[T], R], items: Iterable[T]) -> list[R]:
+    """``[fn(x) for x in items]``, run concurrently: the one thread pool
+    of registration (a tier-1 test greps for it). The calling thread is
+    one of at most its share of ``default_parallelism()`` threads, and
+    it hands each worker an equal part of that share, so a nested call
+    (a source's tables inside the engine's sources) never multiplies
+    past the bound. Every thread is joined before this returns; when
+    items fail, the error of the first failing item in order is raised."""
+    items = list(items)
+    budget = getattr(_share, "threads", None) or default_parallelism()
+    n = min(len(items), budget)
+    if n <= 1:
+        return [fn(x) for x in items]
+    shares = [budget // n + (k < budget % n) for k in range(n)]
+    results: list = [None] * len(items)
+    errors: list[Exception | None] = [None] * len(items)
+    todo = iter(enumerate(items))
+    lock = threading.Lock()
+
+    def work(share: int) -> None:
+        _share.threads = share
+        while True:
+            with lock:
+                i, x = next(todo, (None, None))
+            if i is None:
+                return
+            try:
+                results[i] = fn(x)
+            except Exception as e:  # noqa: BLE001 - raised in order below
+                errors[i] = e
+
+    threads = [threading.Thread(target=work, args=(s,), name=f"strake-register-{k}", daemon=True)
+               for k, s in enumerate(shares[1:], 1)]
+    for t in threads:
+        t.start()
+    outer = getattr(_share, "threads", None)
+    try:
+        work(shares[0])
+    finally:
+        _share.threads = outer
+        for t in threads:
+            t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results
 
 
 # Populate the registry.

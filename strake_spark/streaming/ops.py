@@ -263,7 +263,9 @@ def run_to_completion(
     stream_df: DataFrame, tmp_dir: str, output_mode: str | None = None
 ) -> DataFrame:
     """Drain a stream with the availableNow trigger into an in-memory
-    table and return the final batch result (test/utility path)."""
+    table and return the final batch result (test/utility path). The
+    sink's view is dropped before this returns: the returned DataFrame
+    was resolved against it, and keeps reading the sink's rows."""
     import hashlib
 
     # md5 of the tmp dir, not hash(): PYTHONHASHSEED salting would make
@@ -280,7 +282,10 @@ def run_to_completion(
         .start()
     )
     q.awaitTermination()
-    return stream_df.sparkSession.table(name)
+    spark = stream_df.sparkSession
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result
 
 
 def _has_aggregation(df: DataFrame) -> bool:

@@ -152,6 +152,44 @@ class TestEnforcement:
         assert n == 10
         assert eng._last_pushdown is None
 
+    def test_secured_view_of_another_role_is_refused(self, spark):
+        """A principal of role r1 must not read role r2's rows by naming
+        r2's secured view: a principal's statement naming any
+        ``<table>__rls_`` view is refused with a coded rejection, quoted
+        or not, and also when DuckDB cannot parse it (``DISTRIBUTE BY``
+        is Spark-only); the name inside a string literal is data."""
+        from strake_spark.errors import ErrorCode, QueryRejected
+
+        eng = ss.connect(
+            {
+                "sources": [{"name": "lc", "type": "parquet", "url": SF_DIR,
+                             "tables": [{"name": "customer"}]}],
+                "policies": {
+                    "roles": {
+                        "r1": {"tables": {"lc_customer": {"rls_filter": "c_nationkey = 1"}}},
+                        "r2": {"tables": {"lc_customer": {"rls_filter": "c_nationkey = 2"}}},
+                    },
+                    "users": {"alice": ["r1"], "bob": ["r2"]},
+                },
+            },
+            spark=spark,
+        )
+        q = "SELECT DISTINCT c_nationkey FROM lc_customer"
+        assert eng.execute(q, user="bob").to_pylist() == [{"c_nationkey": 2}]
+        assert eng.execute(q, user="alice").to_pylist() == [{"c_nationkey": 1}]
+        for stmt in (
+            "SELECT DISTINCT c_nationkey FROM lc_customer__rls_r2",
+            "SELECT DISTINCT c_nationkey FROM `LC_CUSTOMER__RLS_R2`",
+            "SELECT c_nationkey FROM default.lc_customer__rls_r2 DISTRIBUTE BY c_nationkey",
+        ):
+            for user in ("alice", "bob", "mallory"):  # mallory has no roles
+                with pytest.raises(QueryRejected) as e:
+                    eng.execute(stmt, user=user)
+                assert e.value.code == ErrorCode.AUTHORIZATION_DENIED
+        lit = "SELECT count(*) AS n FROM lc_customer WHERE c_name <> 'lc_customer__rls_r2'"
+        assert eng.execute(lit, user="alice").to_pylist() == eng.execute(
+            "SELECT count(*) AS n FROM lc_customer WHERE c_nationkey = 1").to_pylist()
+
     def test_secured_views_follow_a_reregistered_source(self, spark, tmp_path):
         """A secured view captures its base view's plan when created: after
         the source is registered again over other data, the governed

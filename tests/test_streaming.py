@@ -66,6 +66,18 @@ class TestTumbling:
         assert abs(got_s["total_value"].to_numpy() - exp_s["total_value"].to_numpy()).max() == 0.0
 
 
+def test_drain_leaves_no_sink_view(spark, events_dir, tmp_path):
+    """``run_to_completion`` drops its memory-sink view; the returned
+    rows still read from the sink."""
+    before = sorted(t.name for t in spark.catalog.listTables())
+    stream = tumbling_counts(read_event_stream(spark, events_dir), "1 hour")
+    got = run_to_completion(stream, str(tmp_path))
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    exp = _batch(spark, events_dir).groupBy(F.window("ts", "1 hour"), "event_type").count()
+    assert got.count() == exp.count() > 0
+    assert got.agg(F.sum("n")).first()[0] == _batch(spark, events_dir).count()
+
+
 class TestHopping:
     def test_matches_batch_hopping_windows(self, spark, events_dir, tmp_path):
         stream = hopping_counts(
