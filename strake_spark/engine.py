@@ -52,6 +52,7 @@ from strake_spark.sources import pushsql
 from strake_spark.sources.registry import (
     bump_catalog_epoch,
     catalog_epoch,
+    forget_views,
     ordered_map,
     register_source,
 )
@@ -187,18 +188,30 @@ class StrakeEngine:
         """Register ``sources`` concurrently, then do each one's
         bookkeeping in config order. Two sources that make one view name
         are refused: with no registration order, neither would reliably
-        win."""
-        registered = ordered_map(lambda cfg: register_source(self.spark, cfg), sources)
+        win. When a source fails or views collide, the views the other
+        sources made are dropped before the error is raised."""
+
+        def attempt(cfg: SourceConfig) -> tuple[list[str], Exception | None]:
+            try:
+                return register_source(self.spark, cfg), None
+            except Exception as e:  # noqa: BLE001 - raised below, in config order
+                return [], e
+
+        registered = ordered_map(attempt, sources)
+        error = next((e for _, e in registered if e is not None), None)
         owners: dict[str, SourceConfig] = {}
-        for cfg, views in zip(sources, registered):
+        for cfg, (views, _) in zip(sources, registered):
             for v in views:
                 first = owners.setdefault(v.lower(), cfg)
-                if first is not cfg:
-                    raise SourceError(
+                if error is None and first is not cfg:
+                    error = SourceError(
                         f"sources {first.name!r} and {cfg.name!r} both register view {v!r}; "
                         "rename one source or table"
                     )
-        for cfg, views in zip(sources, registered):
+        if error is not None:
+            forget_views(self.spark, (v for views, _ in registered for v in views))
+            raise error
+        for cfg, (views, _) in zip(sources, registered):
             self._remember(cfg, views)
 
     def _remember(self, source_cfg: SourceConfig, views: list[str]) -> None:

@@ -32,6 +32,7 @@ from pyspark.sql import SparkSession
 from strake_spark.sources.registry import catalog_epoch
 
 from strake_spark.errors import ErrorCode, QueryRejected
+from strake_spark.governance.gate import lex
 
 
 @dataclass
@@ -160,44 +161,42 @@ def register_secured_views(
 
 
 _IDENT = r"(?<![A-Za-z0-9_])({names})(?![A-Za-z0-9_])"
-
-
-def _segments(sql: str) -> list[str]:
-    """``sql`` split into alternating code and single-quoted string
-    literal segments (odd indexes are literals); '' escapes stay inside
-    one literal segment because the regex is non-greedy pairwise."""
-    return re.split(r"('(?:[^']|'')*')", sql)
+_IDENTIFIER_CLAUSE = re.compile(r"(?<![A-Za-z0-9_])IDENTIFIER\s*\(", re.IGNORECASE)
 
 
 def rename_tables(sql: str, mapping: dict[str, str]) -> str:
-    """Consistently rename identifiers outside single-quoted string
-    literals (so a literal 'orders' is never corrupted)."""
+    """Consistently rename identifiers outside string literals (so a
+    literal 'orders' is never corrupted), cut where Spark's lexer cuts
+    them; comments are renamed too, as hints name tables there."""
     if not mapping:
         return sql
     pattern = re.compile(
         _IDENT.format(names="|".join(re.escape(t) for t in sorted(mapping, key=len, reverse=True))),
         re.IGNORECASE,
     )
-    out = []
-    for i, part in enumerate(_segments(sql)):
-        if i % 2 == 1:  # a string literal
-            out.append(part)
-        else:
-            out.append(pattern.sub(lambda m: mapping[m.group(1).lower()], part))
-    return "".join(out)
+    return "".join(
+        text if kind == "string" else pattern.sub(lambda m: mapping[m.group(1).lower()], text)
+        for kind, text in lex(sql)
+    )
 
 
 def names_secured_view(sql: str, tables: set[str]) -> bool:
     """Whether ``sql`` names a secured view of one of ``tables`` (any
-    ``<table>__rls_...`` outside string literals). Judged on the text,
-    so a statement no parser reads is judged too."""
+    ``<table>__rls_...`` outside string literals, comments included),
+    or names a table by a string: ``IDENTIFIER(<string>)`` names one no
+    rename can follow. Judged on the text, so a statement no parser
+    reads is judged too."""
     if not tables:
         return False
     pattern = re.compile(
         r"(?<![A-Za-z0-9_])(?:" + "|".join(re.escape(t) for t in sorted(tables)) + r")__rls_",
         re.IGNORECASE,
     )
-    return any(pattern.search(part) for part in _segments(sql)[::2])
+    runs = lex(sql)
+    code = "".join(text if kind == "code" else " " for kind, text in runs)
+    return bool(_IDENTIFIER_CLAUSE.search(code)) or any(
+        kind != "string" and pattern.search(text) for kind, text in runs
+    )
 
 
 class PolicyEnforcer:
@@ -217,10 +216,11 @@ class PolicyEnforcer:
             # also plans its own rewritten text this way)
             return sql
         # a secured view holds some role set's rows: only the rename
-        # below may name one
+        # below may name one, and it cannot follow a name in IDENTIFIER()
         if names_secured_view(sql, self._tables):
             raise QueryRejected(
-                "statement names a row-level-security view; name the table instead",
+                "statement names a row-level-security view, or a table by IDENTIFIER(); "
+                "name the table instead",
                 code=ErrorCode.AUTHORIZATION_DENIED,
             )
         roles = tuple(sorted(self.policy.users.get(user, ())))

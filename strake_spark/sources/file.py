@@ -24,7 +24,9 @@ sources/drift.py).
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -79,6 +81,13 @@ _HADOOP_CONF = {
     "gcs_keyfile": "google.cloud.auth.service.account.json.keyfile",
     "azure_account_key": "fs.azure.account.key",
 }
+
+
+# Hadoop builds one FileSystem per scheme and bucket, from the
+# configuration as it is at that first read, and caches it: a source
+# that sets object-store keys holds this lock from setting them until
+# its reads are done, so no other source's keys are in place meanwhile.
+_object_store_keys = threading.Lock()
 
 
 def _configure_object_store(spark: SparkSession, cfg: SourceConfig) -> None:
@@ -309,7 +318,6 @@ def _spool_http(url: str, options: dict) -> str:
 @source_type("parquet", "csv", "json", "ndjson", "file")
 def register_file_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
     fmt = cfg.type if cfg.type in _FORMATS else str(cfg.options.get("format", "parquet"))
-    _configure_object_store(spark, cfg)
     base = cfg.url or ""
     if not cfg.tables:
         raise SourceError(f"file source {cfg.name!r} declares no tables")
@@ -383,4 +391,7 @@ def register_file_source(spark: SparkSession, cfg: SourceConfig) -> list[str]:
         df.createOrReplaceTempView(name)
         return name
 
-    return ordered_map(register, cfg.tables)
+    sets_keys = any(opt in cfg.options for opt in _HADOOP_CONF)
+    with _object_store_keys if sets_keys else contextlib.nullcontext():
+        _configure_object_store(spark, cfg)
+        return ordered_map(register, cfg.tables)

@@ -17,6 +17,7 @@ from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 from typing import TypeVar
 
+from pyspark import InheritableThread
 from pyspark.sql import SparkSession
 
 from strake_spark.config import SourceConfig
@@ -78,6 +79,15 @@ REMOTE_TABLES: dict[str, RemoteTable] = {}
 
 def remember_remote(view: str, remote: RemoteTable) -> None:
     REMOTE_TABLES[view] = remote
+
+
+def forget_views(spark: SparkSession, views: Iterable[str]) -> None:
+    """Drop registered ``views`` and their remote entries (a construction
+    that failed takes back what its other sources registered)."""
+    for v in views:
+        spark.catalog.dropTempView(v)
+        REMOTE_TABLES.pop(v, None)
+    bump_catalog_epoch()
 
 
 # (id(SparkContext), DataSource class) pairs already registered
@@ -151,7 +161,12 @@ def ordered_map(fn: Callable[[T], R], items: Iterable[T]) -> list[R]:
     it hands each worker an equal part of that share, so a nested call
     (a source's tables inside the engine's sources) never multiplies
     past the bound. Every thread is joined before this returns; when
-    items fail, the error of the first failing item in order is raised."""
+    items fail, the error of the first failing item in order is raised.
+
+    Not a ThreadPoolExecutor: its workers are plain threads, and the
+    workers here are PySpark InheritableThreads, which carry the
+    caller's Spark local properties (scheduler pool, job group) into
+    the Spark jobs that registering starts."""
     items = list(items)
     budget = getattr(_share, "threads", None) or default_parallelism()
     n = min(len(items), budget)
@@ -175,7 +190,7 @@ def ordered_map(fn: Callable[[T], R], items: Iterable[T]) -> list[R]:
             except Exception as e:  # noqa: BLE001 - raised in order below
                 errors[i] = e
 
-    threads = [threading.Thread(target=work, args=(s,), name=f"strake-register-{k}", daemon=True)
+    threads = [InheritableThread(work, args=(s,), name=f"strake-register-{k}", daemon=True)
                for k, s in enumerate(shares[1:], 1)]
     for t in threads:
         t.start()

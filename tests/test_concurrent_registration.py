@@ -136,6 +136,24 @@ def test_ordered_map_under_contention(monkeypatch):
     assert _threads() == []
 
 
+def test_workers_inherit_the_callers_local_properties(spark, monkeypatch):
+    """Spark jobs that registration starts on a worker run in the
+    caller's scheduler pool and job group."""
+    monkeypatch.setattr(registry, "default_parallelism", lambda: 4)
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.scheduler.pool", "creg-pool")
+    try:
+        def pool(_):
+            time.sleep(0.02)
+            return threading.current_thread().name, sc.getLocalProperty("spark.scheduler.pool")
+
+        got = registry.ordered_map(pool, range(8))
+    finally:
+        sc.setLocalProperty("spark.scheduler.pool", None)
+    assert len({name for name, _ in got}) > 1
+    assert {p for _, p in got} == {"creg-pool"}
+
+
 def test_concurrent_matches_serial(spark, dbs, monkeypatch):
     """Same view lists in the same order, schemas, remote entries and
     drift warnings as registering one table after another; no
@@ -194,6 +212,8 @@ def test_first_failing_source_in_config_order_raises(spark, dbs):
     with pytest.raises(Exception, match="no_such_table"):
         ss.connect(cfg, spark=spark)
     assert _threads() == []
+    # the first source registered; its views went with the failure
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("cp_")]
 
 
 def test_two_sources_making_one_view_are_refused(spark):
@@ -206,6 +226,42 @@ def test_two_sources_making_one_view_are_refused(spark):
             {"name": "dup_a_b", "type": "parquet", "tables": [{"name": "c", "path": nation}]},
             {"name": "dup_a", "type": "parquet", "tables": [{"name": "b_c", "path": nation}]},
         ]}, spark=spark)
+    assert not spark.catalog.tableExists("dup_a_b_c")
+
+
+def test_sources_read_with_their_own_object_store_keys(spark, monkeypatch):
+    """Hadoop builds a bucket's FileSystem from the keys set at its first
+    read and keeps it: two sources with different keys, registering at
+    once, each read while their own keys are set."""
+    from strake_spark.sources import file
+
+    monkeypatch.setattr(registry, "default_parallelism", lambda: 4)
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    before = hconf.get("fs.s3a.access.key")
+    seen: list[tuple[str, str]] = []
+    read_one = file._read_one
+
+    def reading(*args, context="", **kwargs):
+        for _ in range(3):
+            seen.append((context.split("_")[0], hconf.get("fs.s3a.access.key")))
+            time.sleep(0.02)
+        return read_one(*args, context=context, **kwargs)
+
+    monkeypatch.setattr(file, "_read_one", reading)
+    try:
+        ss.connect({"sources": [
+            {"name": f"key{k}", "type": "parquet", "url": SF_DIR,
+             "options": {"s3_access_key": f"key{k}"},
+             "tables": [{"name": "nation"}, {"name": "region"}]}
+            for k in (1, 2)
+        ]}, spark=spark)
+    finally:
+        if before is None:
+            hconf.unset("fs.s3a.access.key")
+        else:
+            hconf.set("fs.s3a.access.key", before)
+    assert len(seen) == 12
+    assert all(source == key for source, key in seen), seen
 
 
 def test_ensure_format_registers_once(spark, dbs, monkeypatch):

@@ -177,11 +177,25 @@ class TestEnforcement:
         q = "SELECT DISTINCT c_nationkey FROM lc_customer"
         assert eng.execute(q, user="bob").to_pylist() == [{"c_nationkey": 2}]
         assert eng.execute(q, user="alice").to_pylist() == [{"c_nationkey": 1}]
+        # each of these reads another role's rows, or all rows, in Spark
+        leaks = (
+            # a quote inside a comment, a double-quoted string or after a
+            # backslash escape opens no literal for Spark
+            "SELECT DISTINCT c_nationkey FROM /*'*/ lc_customer__rls_r2 /*'*/",
+            "SELECT DISTINCT \"'\" AS a, c_nationkey FROM lc_customer__rls_r2 WHERE \"'\" = \"'\"",
+            "SELECT DISTINCT 'a\\'' AS x, c_nationkey FROM lc_customer__rls_r2 WHERE '\\'' <> 'b'",
+            "SELECT DISTINCT c_nationkey FROM /* /* */ ' */ lc_customer__rls_r2 -- '",
+            # IDENTIFIER() names a table by a string no rename follows
+            "SELECT DISTINCT c_nationkey FROM IDENTIFIER('lc_customer__rls_r2')",
+            "SELECT DISTINCT c_nationkey FROM IDENTIFIER /**/ ('lc_customer')",
+        )
+        for stmt in leaks:
+            assert eng.execute(stmt).num_rows > 0, stmt
         for stmt in (
             "SELECT DISTINCT c_nationkey FROM lc_customer__rls_r2",
             "SELECT DISTINCT c_nationkey FROM `LC_CUSTOMER__RLS_R2`",
             "SELECT c_nationkey FROM default.lc_customer__rls_r2 DISTRIBUTE BY c_nationkey",
-        ):
+        ) + leaks:
             for user in ("alice", "bob", "mallory"):  # mallory has no roles
                 with pytest.raises(QueryRejected) as e:
                     eng.execute(stmt, user=user)
@@ -189,6 +203,9 @@ class TestEnforcement:
         lit = "SELECT count(*) AS n FROM lc_customer WHERE c_name <> 'lc_customer__rls_r2'"
         assert eng.execute(lit, user="alice").to_pylist() == eng.execute(
             "SELECT count(*) AS n FROM lc_customer WHERE c_nationkey = 1").to_pylist()
+        # the rename reads comments as Spark does, too
+        hidden = "SELECT DISTINCT c_nationkey FROM /*'*/ lc_customer /*'*/"
+        assert eng.execute(hidden, user="alice").to_pylist() == [{"c_nationkey": 1}]
 
     def test_secured_views_follow_a_reregistered_source(self, spark, tmp_path):
         """A secured view captures its base view's plan when created: after

@@ -140,7 +140,8 @@ class TestPolicyRename:
     def test_literals_never_rewritten(self, idents, literal_content):
         target = idents[0]
         mapping = {target: target + "__secured"}
-        lit = "'" + literal_content.replace("'", "''") + "'"
+        # a Spark literal whose value is literal_content: \ escapes too
+        lit = "'" + literal_content.replace("\\", "\\\\").replace("'", "''") + "'"
         sql = f"SELECT * FROM {target} WHERE note = {lit} AND x = {lit}"
         out = rename_tables(sql, mapping)
         # the literal segments survive byte-for-byte
